@@ -4,15 +4,20 @@ Beyond exact hash dedup (registry ``dedup_exact``), the near-dup family
 a 100 TB training-data pipeline needs:
 
 * :func:`minhash_signatures` / :func:`minhash_lsh_pairs` — shingle →
-  MinHash → banded LSH bucket join → candidate pairs with estimated
-  Jaccard. All hashing is vectorized NumPy inside Arrow-batched UDFs;
-  the bucket join is a plain shuffle join on (band, bucket-hash), so
-  Spark scales it horizontally and AQE splits hot buckets.
+  MinHash → banded LSH buckets → candidate pairs with estimated
+  Jaccard. All hashing is vectorized NumPy inside Arrow-batched UDFs.
 * :func:`simhash_col` / :func:`simhash_near_pairs` — 64-bit SimHash,
   near-dup = Hamming ≤ k via 4×16-bit chunk banding (pigeonhole: any
   pair within Hamming 3 shares at least one identical chunk).
+* :func:`incremental_minhash_pairs` — crawl-N dedup of a new batch
+  against an archived corpus.
 * :func:`ngram_jaccard_pairs` — exact shingle-set Jaccard verification
   of candidate pairs (the refine step after LSH's filter).
+
+The three pair operators share one physical plan,
+:func:`_bucket_pairs`: band rows shuffle on (band, bucket), sort by
+payload inside each bucket, and one Arrow kernel scores each bucket's
+pairs (or, over the hot-bucket cap, emits min-id stars).
 
 Determinism: all hash functions are explicit polynomial/multiplicative
 hashes (no Python ``hash``), so results are stable across runs,
@@ -167,32 +172,9 @@ def minhash_signatures(
     return spread_for_kernel(df.select(id_col, text_col)).mapInPandas(kernel, sig_t)
 
 
-#: driver-side cap on the collected hot-key set; above this the guard
-#: falls back to fully-distributed anti/semi joins (never materializing
-#: the keys on the driver)
-_MAX_HOT_KEYS_DRIVER = 100_000
-
-#: gate for minhash_lsh_pairs' vectorized scoring path: up to this many
-#: signatures are collected once and broadcast as a NumPy matrix
-#: (500k × 64 longs ≈ 256 MB — the same driver-feasibility class as
-#: brute_force_topk's 2M-row corpus broadcast). Beyond it the operator
-#: keeps the fully-distributed candidate-join plan, which degrades
-#: gracefully (Spark demotes the signature attach to a shuffle join
-#: when the build side outgrows autoBroadcastJoinThreshold).
-_MAX_BROADCAST_SIGS = 500_000
-
-#: per-batch bound on materialized candidate-pair index arrays inside
-#: the vectorized kernel (4M pairs ≈ a few hundred MB of temporaries)
-_PAIR_CHUNK = 4_000_000
-
-
-def _pairs_empty() -> pd.DataFrame:
-    return pd.DataFrame({
-        "id_a": pd.Series(dtype="int64"),
-        "id_b": pd.Series(dtype="int64"),
-        "est_jaccard": pd.Series(dtype="float64"),
-    })
-
+#: per-slice bound on gathered payload cells (pairs × payload width) in
+#: the bucket kernel: 4M int64 cells ≈ 32 MB per pair side
+_PAIR_CELLS = 1 << 22
 
 _PAIRS_SCHEMA = T.StructType([
     T.StructField("id_a", T.LongType()),
@@ -200,22 +182,13 @@ _PAIRS_SCHEMA = T.StructType([
     T.StructField("est_jaccard", T.DoubleType()),
 ])
 
-#: output schema of simhash_near_pairs' vectorized path — ``hamming`` is
-#: IntegerType to byte-match the joined path's ``bit_count`` column
+#: simhash_near_pairs' output — ``hamming`` is IntegerType, the type of
+#: Spark's ``bit_count`` and of the DuckDB twin's cast
 _HAM_SCHEMA = T.StructType([
     T.StructField("id_a", T.LongType()),
     T.StructField("id_b", T.LongType()),
     T.StructField("hamming", T.IntegerType()),
 ])
-
-
-def _ham_empty() -> pd.DataFrame:
-    return pd.DataFrame({
-        "id_a": pd.Series(dtype="int64"),
-        "id_b": pd.Series(dtype="int64"),
-        "hamming": pd.Series(dtype="int32"),
-    })
-
 
 #: byte-wise popcount lookup (numpy < 2.0 has no bitwise_count)
 _POPCNT8 = np.array([bin(i).count("1") for i in range(256)], np.int64)
@@ -250,12 +223,9 @@ def _band_hash_matrix(smat: np.ndarray, n_bands: int) -> np.ndarray:
 
 
 def _enrich_with_bands(sigs: DataFrame, n_bands: int) -> DataFrame:
-    """(id, signature) → (id, signature, bands) via one Arrow pass.
-
-    Precomputing the band keys in NumPy replaces the former per-scan
-    interpreted ``transform(sequence, hash(slice(...)))`` higher-order
-    expression, which re-evaluated on every branch that read the bands
-    (probe, both self-join sides, hot branch)."""
+    """(id, signature) → (id, signature, bands) via one Arrow pass, for
+    signature tables built without ``minhash_signatures(n_bands=...)``
+    (e.g. a saved archive)."""
 
     def kernel(batches):
         for pdf in batches:
@@ -277,642 +247,208 @@ def _enrich_with_bands(sigs: DataFrame, n_bands: int) -> DataFrame:
     return sigs.select("id", "signature").mapInPandas(kernel, _ENRICHED_SCHEMA)
 
 
-def _vectorized_cold_pairs(
-    cold: DataFrame, bc, threshold: float, n_hashes: int,
-    *, score=None, schema: T.StructType | None = None, empty=None,
-    out_col: str = "est_jaccard", left_flag: bool = False,
+def _bucket_pairs(
+    rows: DataFrame, cap: int | None, score, schema: T.StructType,
 ) -> DataFrame:
-    """In-bucket candidate pairs + exact est_jaccard, all in NumPy.
+    """The dedup family's one pair kernel: in-bucket pairs, scored.
 
-    ``cold`` rows are hash-partitioned and sorted by (band, bucket), so
-    each bucket group is contiguous inside a partition; the kernel
-    carries the trailing (possibly batch-straddling) group into the
-    next Arrow batch. Per complete group of m members it forms all
-    m(m-1)/2 ordered pairs with vectorized index arithmetic, looks both
-    sides' signatures up in the broadcast matrix, and scores
-    est_jaccard as the per-position equality count — the identical
-    arithmetic the join path's zip_with computes, minus the per-pair
-    array materialization and the 5M-row join stream (measured ~25%
-    off the whole query at sf1.0). Work per batch is bounded by
-    ``_PAIR_CHUNK`` pair-index slices; group size itself is bounded by
-    the hot-bucket guard (this path requires the guard to be on).
+    ``rows`` carry ``(id, band, bucket, payload[, flag])``. They are
+    hash-partitioned on (band, bucket) and sorted by (band, bucket,
+    payload, id), so inside a partition each bucket is contiguous, and
+    so is each run of identical payloads inside it, min id first. One
+    ``mapInPandas`` kernel then handles each bucket:
 
-    ``score`` (round 8, simhash reuse): optional
-    ``(rows_a, rows_b) -> (values, keep_mask)`` scoring callback over
-    the broadcast payload's looked-up rows; the default is the minhash
-    per-position equality count against ``threshold``. ``schema`` /
-    ``empty`` / ``out_col`` parametrize the output column — defaults are
-    the minhash ``est_jaccard`` shape.
+    * **cold** (at most ``cap`` members, or ``cap`` None): every member
+      pair, scored from the payloads already in the batch;
+    * **hot** (more than ``cap``): a min-id star over each run of
+      identical payloads — the k-1 edges give the connected component
+      all k² edges would, at O(k) work. A member whose payload is unique
+      in the bucket drops from this band only.
 
-    ``left_flag`` (round 8, crawl-N reuse): when True, ``cold`` must
-    carry an int ``flag`` column (1 = "new"); rows sort new-first inside
-    each bucket and pairs form only where the LEFT element is in the new
-    prefix — i.e. exactly the pairs with at least one new side, each
-    once (new×new both in the prefix with i<j; new×old with the new row
-    first; old×old never, its reps are zeroed). This is the bipartite
-    analogue of the joined path's new-side-drives-the-probe join: the
-    kernel never materializes or scores an old×old candidate.
+    ``score(pa, pb) -> (values, keep)`` takes the two sides' payload
+    rows (2-D, one row per pair). With a ``flag`` column (1 = new) only
+    pairs with a flagged side survive — the crawl-N rule, which for a
+    star means the member or its keeper is new.
+
+    Memory: one Arrow batch plus the carried tail bucket, which is at
+    most ``cap`` rows while it may still be cold. Once a carried bucket
+    passes the cap its finished runs are emitted and only the current
+    run's leader is carried. Pairs are scored in ``_PAIR_CELLS`` slices.
+    Returns distinct ``schema`` rows with id_a < id_b.
     """
-    npart = cold.sparkSession.sparkContext.defaultParallelism
-    if schema is None:
-        schema = _PAIRS_SCHEMA
-    if empty is None:
-        empty = _pairs_empty
-    if score is None:
-        def score(sa, sb):
-            est = (sa == sb).sum(axis=1) / float(n_hashes)
-            return est, est >= threshold
+    has_flag = "flag" in rows.columns
+    col_a, col_b, col_v = schema.names
+
+    def process(frame, head_hot, final):
+        """Yield the pairs of ``frame``'s buckets; return the carry
+        ``(rows, hot)`` of a tail bucket the next batch may extend."""
+        n = len(frame)
+        ids = frame["id"].to_numpy(np.int64)
+        band = frame["band"].to_numpy(np.int64)
+        bucket = frame["bucket"].to_numpy(np.int64)
+        col = frame["payload"].to_numpy()
+        pay = np.stack(col) if col.dtype == object else col.astype(np.int64)[:, None]
+        flag = frame["flag"].to_numpy(np.int64) if has_flag else None
+        step = max(1, _PAIR_CELLS // pay.shape[1])  # pairs per scoring slice
+
+        def emit(ia, ib):
+            """Score row-index pairs (ia, ib) in ``step``-pair slices."""
+            if flag is not None:
+                m = (flag[ia] | flag[ib]) > 0
+                ia, ib = ia[m], ib[m]
+            for s in range(0, len(ia), step):
+                a, b = ia[s : s + step], ib[s : s + step]
+                val, keep = score(pay[a], pay[b])
+                if keep.any():
+                    ida, idb = ids[a[keep]], ids[b[keep]]
+                    yield pd.DataFrame({
+                        col_a: np.minimum(ida, idb),
+                        col_b: np.maximum(ida, idb),
+                        col_v: val[keep],
+                    })
+
+        pos = np.arange(n)
+        new_seg = np.ones(n, bool)
+        new_seg[1:] = (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1])
+        seg_start = np.flatnonzero(new_seg)
+        seg_size = np.diff(np.append(seg_start, n))
+        seg_hot = seg_size > (n if cap is None else cap)
+        seg_hot[0] |= head_hot
+        hot = np.repeat(seg_hot, seg_size)
+
+        # hot buckets: star from each identical-payload run's first row
+        new_run = new_seg.copy()
+        new_run[1:] |= (pay[1:] != pay[:-1]).any(axis=1)
+        lead = np.maximum.accumulate(np.where(new_run, pos, 0))
+        star = hot & ~new_run
+        yield from emit(lead[star], pos[star])
+
+        # cold buckets: all pairs, sliced by row ranges; an open cold
+        # tail waits whole for the next batch
+        cold = ~hot
+        if not final and not seg_hot[-1]:
+            cold[seg_start[-1]:] = False
+        seg_end = np.repeat(seg_start + seg_size, seg_size)
+        reps = np.where(cold, seg_end - pos - 1, 0)
+        cum = np.concatenate([[0], np.cumsum(reps)])
+        r0 = 0
+        while r0 < n and cum[-1] > cum[r0]:
+            r1 = max(int(np.searchsorted(cum, cum[r0] + step, side="right")) - 1, r0 + 1)
+            rp = reps[r0:r1]
+            ia = np.repeat(pos[r0:r1], rp)
+            ib = ia + 1 + np.arange(len(ia)) - np.repeat(np.cumsum(rp) - rp, rp)
+            yield from emit(ia, ib)
+            r0 = r1
+
+        if final:
+            return None, False
+        if seg_hot[-1]:
+            return frame.iloc[lead[-1] : lead[-1] + 1], True
+        return frame.iloc[seg_start[-1]:], False
 
     def kernel(batches):
-        ids_sorted, smat = bc.value
-
-        def emit(ids, band, bucket, flag=None):
-            seg_start = np.flatnonzero(np.concatenate([
-                [True],
-                (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1]),
-            ]))
-            seg_sizes = np.diff(np.concatenate([seg_start, [len(ids)]]))
-            if flag is not None:
-                # new rows sort first inside each segment; pairs whose
-                # left element is one of the seg_new prefix rows are
-                # exactly the >=1-new pairs, each formed once
-                seg_new = np.add.reduceat(flag, seg_start)
-                seg_pairs = seg_new * (seg_sizes - 1) - seg_new * (seg_new - 1) // 2
-            else:
-                seg_pairs = seg_sizes * (seg_sizes - 1) // 2
-            cum = np.concatenate([[0], np.cumsum(seg_pairs)])
-            if cum[-1] == 0:
-                return empty()
-            frames = []
-            s = 0
-            n_seg = len(seg_sizes)
-            while s < n_seg:
-                # extend to the last segment keeping the pair budget
-                e = int(np.searchsorted(cum, cum[s] + _PAIR_CHUNK, side="left"))
-                e = max(e - 1, s + 1)  # cum index e covers segments [s, e)
-                r0 = seg_start[s]
-                r1 = seg_start[e] if e < n_seg else len(ids)
-                sl_ids = ids[r0:r1]
-                sl_start = seg_start[s:e] - r0
-                sl_sizes = seg_sizes[s:e]
-                seg_end = np.repeat(sl_start + sl_sizes, sl_sizes)
-                pos = np.arange(len(sl_ids))
-                reps = seg_end - pos - 1
-                if flag is not None:
-                    pos_in_seg = pos - np.repeat(sl_start, sl_sizes)
-                    rep_new = np.repeat(seg_new[s:e], sl_sizes)
-                    reps = np.where(pos_in_seg < rep_new, reps, 0)
-                total = int(reps.sum())
-                s = e
-                if total == 0:
-                    continue
-                ia = np.repeat(pos, reps)
-                pair_start = np.concatenate([[0], np.cumsum(reps)[:-1]])
-                ib = np.arange(total) - np.repeat(pair_start, reps) + ia + 1
-                ra = np.searchsorted(ids_sorted, sl_ids[ia])
-                rb = np.searchsorted(ids_sorted, sl_ids[ib])
-                est, keep = score(smat[ra], smat[rb])
-                if not keep.any():
-                    continue
-                aa, bb = sl_ids[ia[keep]], sl_ids[ib[keep]]
-                frames.append(pd.DataFrame({
-                    "id_a": np.minimum(aa, bb),
-                    "id_b": np.maximum(aa, bb),
-                    out_col: est[keep],
-                }))
-            if not frames:
-                return empty()
-            return pd.concat(frames, ignore_index=True)
-
-        carry = None
+        carry, carry_hot = None, False
         for pdf in batches:
-            if carry is not None and len(carry):
+            if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                yield empty()
-                continue
-            band = pdf["band"].to_numpy(np.int64)
-            bucket = pdf["bucket"].to_numpy(np.int64)
-            in_last = (band == band[-1]) & (bucket == bucket[-1])
-            n_tail = int(in_last[::-1].argmin()) if not in_last.all() else len(pdf)
-            cut = len(pdf) - n_tail
-            carry = pdf.iloc[cut:]
-            if cut == 0:
-                yield empty()
-                continue
-            yield emit(
-                pdf["id"].to_numpy(np.int64)[:cut], band[:cut], bucket[:cut],
-                pdf["flag"].to_numpy(np.int64)[:cut] if left_flag else None,
-            )
-        if carry is not None and len(carry):
-            yield emit(
-                carry["id"].to_numpy(np.int64),
-                carry["band"].to_numpy(np.int64),
-                carry["bucket"].to_numpy(np.int64),
-                carry["flag"].to_numpy(np.int64) if left_flag else None,
-            )
+            if len(pdf):
+                carry, carry_hot = yield from process(pdf, carry_hot, final=False)
+        if carry is not None:
+            yield from process(carry, carry_hot, final=True)
 
-    cols = ["id", "band", "bucket"] + (["flag"] if left_flag else [])
-    sort_cols = (
-        [F.col("band"), F.col("bucket"), F.col("flag").desc()]
-        if left_flag else ["band", "bucket"]
-    )
+    npart = rows.sparkSession.sparkContext.defaultParallelism
     return (
-        cold.select(*cols)
-        .repartition(npart, "band", "bucket")
-        .sortWithinPartitions(*sort_cols)
+        rows.repartition(npart, "band", "bucket")
+        .sortWithinPartitions("band", "bucket", "payload", "id")
         .mapInPandas(kernel, schema)
+        .distinct()
     )
 
 
-def _hot_bucket_split(
-    rows: DataFrame, keys: list, group_col: str, cap: int | None,
-    star_extra: list | None = None, keeper_flag: str | None = None,
-):
-    """Shared hot-bucket guard: split ``rows`` into (cold, hot_star, hot_keys).
-
-    ``cold`` feeds the normal bucket self-join; ``hot_star`` is the
-    bounded fallback — min-id star edges per identical-``group_col``
-    group inside each over-cap bucket (id_a < id_b by construction), or
-    ``None`` when no bucket is hot. ``hot_keys`` (the over-cap bucket-key
-    table, ``None`` when no bucket is hot) is returned so asymmetric
-    callers (crawl-N incremental dedup) can anti-join their probe side
-    against the SAME key set — one guard authority, no drift.
-
-    ``keeper_flag``: optional boolean column name (e.g. ``is_new``).
-    When given, each group's keeper is still the min id (the struct min
-    orders by id first), but star edges are emitted only when the member
-    or the keeper carries the flag — the crawl-N rule that old×old edges
-    must not leak out of hot groups that happen to contain one new
-    arrival, while a group min that is an OLD doc correctly becomes the
-    keeper.
-
-    Cost discipline: one eager groupBy-count probe (map-side partial agg
-    → a shuffle of DISTINCT bucket keys only). In the common case (no
-    hot buckets) the returned plan is EXACTLY the unguarded one — the
-    probe is the guard's whole overhead (~0.2 s at sf0.1, amortized to
-    nothing at scale). With ≤ 100k hot keys they ride back as a
-    broadcast literal table; an adversarial corpus beyond that falls
-    back to distributed anti/semi joins against the key aggregate.
-    """
-    if cap is None:
-        return rows, None, None
-    counts = (
-        rows.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bsize"))
-        .filter(F.col("bsize") > cap)
-        .select(*keys)
+def _band_rows(sigs: DataFrame, n_bands: int) -> DataFrame:
+    """(id, band, bucket, payload = signature) — one row per LSH band."""
+    if "bands" not in sigs.columns:
+        sigs = _enrich_with_bands(sigs, n_bands)
+    return sigs.select(
+        "id",
+        F.posexplode("bands").alias("band", "bucket"),
+        F.col("signature").alias("payload"),
     )
-    probe = counts.limit(_MAX_HOT_KEYS_DRIVER + 1).collect()
-    if not probe:
-        return rows, None, None
-    if len(probe) <= _MAX_HOT_KEYS_DRIVER:
-        spark = rows.sparkSession
-        hot_keys = F.broadcast(
-            spark.createDataFrame(probe, counts.schema)
-        )
-    else:  # pathological: keep the key set distributed
-        hot_keys = counts
-    cold, hot_star = _hot_bucket_apply(
-        rows, keys, group_col, hot_keys, star_extra, keeper_flag
-    )
-    return cold, hot_star, hot_keys
 
 
-def _hot_bucket_apply(
-    rows: DataFrame, keys: list, group_col: str, hot_keys,
-    star_extra: list | None = None, keeper_flag: str | None = None,
-):
-    """Split ``rows`` against an ALREADY-KNOWN hot-key table: the
-    anti/semi/star machinery of :func:`_hot_bucket_split` without its
-    probe job (used when the caller derived the hot keys from data it
-    already holds, e.g. minhash_lsh_pairs' gate-path signature collect).
-    """
-    from pyspark.sql import Window
+def _jaccard_score(threshold: float):
+    """est_jaccard = fraction of agreeing signature positions."""
 
-    cold = rows.join(hot_keys, keys, "left_anti")
-    wg = Window.partitionBy(*keys, group_col)
-    hot = rows.join(hot_keys, keys, "semi")
-    extras = [e.alias(n) for n, e in (star_extra or [])]
-    if keeper_flag is None:
-        hot_star = (
-            hot.withColumn("gmin", F.min("id").over(wg))
-            .filter(F.col("id") != F.col("gmin"))
-            .select(F.col("gmin").alias("id_a"), F.col("id").alias("id_b"), *extras)
-        )
-    else:
-        hot_star = (
-            hot.withColumn("gm", F.min(F.struct("id", keeper_flag)).over(wg))
-            .filter(
-                (F.col("id") != F.col("gm.id"))
-                & (F.col(keeper_flag) | F.col(f"gm.{keeper_flag}"))
-            )
-            .select(F.col("gm.id").alias("id_a"), F.col("id").alias("id_b"), *extras)
-        )
-    return cold, hot_star
+    def score(sa, sb):
+        est = (sa == sb).sum(axis=1) / float(sa.shape[1])
+        return est, est >= threshold
+
+    return score
 
 
 def minhash_lsh_pairs(
     sigs: DataFrame, n_bands: int = 16, threshold: float = 0.5,
-    n_hashes: int | None = None, max_bucket_size: int | None = 256,
+    max_bucket_size: int | None = 256,
 ) -> DataFrame:
-    """Banded LSH join → (id_a, id_b, est_jaccard ≥ threshold).
+    """Banded LSH → (id_a, id_b, est_jaccard ≥ threshold).
 
-    Bands become rows (explode); candidates meet inside (band,
-    band-hash) buckets. est_jaccard = fraction of agreeing signature
-    positions. Two physically different but result-identical execution
-    paths (round 8):
+    ``sigs`` is ``minhash_signatures`` output; with its ``bands`` column
+    (``n_bands`` must match) no second Arrow pass computes the band
+    keys. Bands become rows; candidates meet inside (band, band-key)
+    buckets and est_jaccard is the fraction of agreeing signature
+    positions, all in :func:`_bucket_pairs`.
 
-    * **vectorized** (corpus ≤ ``_MAX_BROADCAST_SIGS`` and the
-      hot-bucket guard on): the signature matrix is broadcast once as
-      NumPy; cold bands shuffle narrow (id, band, bucket) rows
-      hash-partitioned + sorted by bucket, and a ``mapInPandas`` kernel
-      forms each bucket's pairs with index arithmetic and scores them
-      with one vectorized equality-count — no 5M-row join stream, no
-      per-pair array materialization (measured 4.0 s → 3.2 s on the
-      sf1.0 headline query).
-    * **joined** (beyond the gate / guard off): the original
-      fully-distributed shape — bucket self-join on (band, bucket) for
-      candidates, signatures attached by equi-join (broadcast while the
-      side fits ``autoBroadcastJoinThreshold``, shuffle join beyond),
-      scored by ``size(filter(zip_with(=)))``.
-
-    Plan shape matters at scale: signatures are materialized once
-    (the Arrow UDF would otherwise recompute for every self-join
-    branch), and candidate pairs dedupe AFTER the est_jaccard filter,
-    never `distinct` on array columns. Round-8 measurement (sf1.0,
-    5.1M raw candidates): a pre-join ``distinct`` removed only 1% of
-    rows (pairs rarely collide in >1 band once the hot-bucket guard has
-    taken the template mass) while costing a full exchange + two hash
-    aggregates over every candidate — the single most expensive node in
-    the plan. Scoring the ~1% duplicates through the streaming
-    signature joins is far cheaper, and the post-filter distinct runs
-    over survivors only (~0.05% here). Upper bound on the duplication
-    the joins absorb: ``n_bands``× (a pair can collide once per band);
-    corpora where near-identical docs would actually hit that bound are
-    exactly the ones the hot-bucket guard diverts to star edges first.
-
-    Pass ``n_hashes`` (the signature length the caller built with) to
-    avoid a driver ``first()`` probe job in this hot path; ``None``
-    falls back to probing for ad-hoc use.
-
-    **Hot-bucket guard** (``max_bucket_size``, default 256): the
-    bucket self-join emits k² candidates for a k-member bucket, and
-    AQE's skew split rebalances *partitions*, not the cross-product
-    itself — a real web corpus has millions of near-identical
-    boilerplate/template pages that survive exact dedup and land in
-    ONE bucket (we measured exactly this blowup exhaust a disk at 2M
-    rows, see BENCH/BASELINE.md round-4 notes). Buckets whose member
-    count exceeds the cap are routed to a bounded fallback instead of
-    the self-join: members are sub-grouped by a hash of their FULL
-    signature (the finest possible sub-band), and each
-    identical-signature group emits a STAR (min-id → member) of k-1
-    pairs — est_jaccard for those pairs is 1.0 by construction, and a
-    downstream connected-components consumer sees the identical
-    component it would have seen from all k² edges. Hot-bucket members
-    whose full signature is unique within the bucket are dropped from
-    *that band only* (other bands still catch them; if every band is
-    hot the pair is lost — the standard drop-with-bounded-work trade,
-    cf. the per-source work bound that keeps the reference's
-    transfers.rs:178-204 tractable). Use
-    :func:`lsh_hot_bucket_stats` to log how much the guard touched;
-    ``max_bucket_size=None`` disables the guard (exact all-pairs
-    semantics, only safe on corpora known to be template-free).
+    **Hot-bucket guard** (``max_bucket_size``, default 256): a bucket of
+    k members has k² candidate pairs, and a real web corpus puts millions
+    of near-identical boilerplate/template pages that survive exact dedup
+    into ONE bucket (this blowup exhausted a disk at 2M rows, see
+    BENCH/BASELINE.md round-4 notes). Buckets over the cap emit instead a
+    min-id STAR per identical-signature group: est_jaccard 1.0 by
+    construction, and a downstream connected-components consumer sees
+    the component all k² edges would give. Members with a unique
+    signature in a hot bucket drop from *that band only* (other bands
+    still catch them; if every band is hot the pair is lost — the
+    standard drop-with-bounded-work trade). :func:`lsh_hot_bucket_stats`
+    reports how much the guard touched; ``max_bucket_size=None``
+    disables it (exact all-pairs, only safe on template-free corpora).
     """
-    if n_hashes is None:
-        n_hashes = len(sigs.select("signature").first()["signature"])
-    # One materialization job: signatures plus their precomputed 64-bit
-    # band keys (see _band_hash_matrix — replaces the interpreted
-    # transform+hash(slice) expression that re-evaluated per branch).
-    # Input built by minhash_signatures(n_bands=...) already carries the
-    # band column (same hash, same pass) — skip the extra Arrow trip.
-    if "bands" not in sigs.columns:
-        sigs = _enrich_with_bands(sigs, n_bands)
-    sigs = sigs.localCheckpoint()
-    bands = sigs.select(
-        "id",
-        # xxhash64, not 32-bit Murmur3: sig_hash keys the identical-signature
-        # star groups inside hot buckets, and at multi-million-member
-        # template buckets 32-bit birthday collisions (~50% at ~77k distinct
-        # sigs) could merge different-signature docs into one group, whose
-        # min-id star edges then score est_jaccard < threshold and silently
-        # drop genuinely identical pairs.
-        F.xxhash64("signature").alias("sig_hash"),
-        F.posexplode("bands").alias("band", "bucket"),
-    )
-    # Vectorized scoring path (round 8), gated on broadcast feasibility
-    # exactly like brute_force_topk's corpus gate — the collect below
-    # pulls at most cap+1 rows, and because the collected frame carries
-    # the band keys, the hot-bucket PROBE is computed driver-side from
-    # the same payload (no separate probe job on this path). Requires
-    # the hot-bucket guard (bounded groups); beyond the cap, or with
-    # the guard off, the fully-distributed candidate-join plan below
-    # (with its distributed probe) remains the at-scale shape.
-    sig_pd = None
-    if max_bucket_size is not None:
-        sig_pd = sigs.limit(_MAX_BROADCAST_SIGS + 1).toPandas()
-        if len(sig_pd) > _MAX_BROADCAST_SIGS:
-            sig_pd = None
-    if sig_pd is not None:
-        sid = sig_pd["id"].to_numpy(np.int64)
-        if len(sig_pd):
-            smat = np.stack(sig_pd["signature"].to_numpy()).astype(np.int64)
-            band_mat = np.stack(sig_pd["bands"].to_numpy()).astype(np.int64)
-        else:
-            smat = np.empty((0, n_hashes), np.int64)
-            band_mat = np.empty((0, n_bands), np.int64)
-        # hot-bucket keys from the collected band matrix (numpy bincount
-        # — the exact counts the distributed probe would aggregate), and
-        # the star edges of every hot bucket from the same payload: the
-        # members' identical-signature groups are formed by sorting the
-        # ACTUAL signature rows (the exact grouping the DuckDB twin
-        # states — strictly safer than the distributed branch's xxhash64
-        # proxy), so each star pair's est_jaccard is exactly 1.0 by
-        # construction and no scoring pass is needed. This folds what
-        # was a semi-join + window + Python scoring stage (~0.7 s at
-        # sf1.0 for 756 star edges) into driver NumPy on data the gate
-        # already collected.
-        hot_rows = []
-        star_a: list[np.ndarray] = []
-        star_b: list[np.ndarray] = []
-        for bnd in range(n_bands):
-            vals, cnt = np.unique(band_mat[:, bnd], return_counts=True)
-            for v in vals[cnt > max_bucket_size]:
-                hot_rows.append((bnd, int(v)))
-                members = np.flatnonzero(band_mat[:, bnd] == v)
-                # group members by exact signature: lexsort rows, then
-                # first-occurrence boundaries
-                sub = smat[members]
-                g_order = np.lexsort(sub.T[::-1])
-                sub_s = sub[g_order]
-                mem_s = members[g_order]
-                new_g = np.concatenate(
-                    [[True], (sub_s[1:] != sub_s[:-1]).any(axis=1)]
-                )
-                g_id = np.cumsum(new_g) - 1
-                # min doc id per group -> star edges (gmin, member)
-                g_min = np.full(g_id[-1] + 1, np.iinfo(np.int64).max, np.int64)
-                np.minimum.at(g_min, g_id, sid[mem_s])
-                gm = g_min[g_id]
-                others = sid[mem_s] != gm
-                star_a.append(gm[others])
-                star_b.append(sid[mem_s][others])
-        if hot_rows:
-            hot_keys = F.broadcast(
-                sigs.sparkSession.createDataFrame(
-                    hot_rows, "band INT, bucket BIGINT"
-                )
-            )
-            cold = bands.join(hot_keys, ["band", "bucket"], "left_anti")
-        else:
-            cold = bands
-        order = np.argsort(sid)
-        bc = sigs.sparkSession.sparkContext.broadcast((sid[order], smat[order]))
-        out = _vectorized_cold_pairs(cold, bc, threshold, n_hashes)
-        if star_a:
-            sa_np = np.concatenate(star_a)
-            sb_np = np.concatenate(star_b)
-            stars = pd.DataFrame({
-                "id_a": sa_np,
-                "id_b": sb_np,
-                "est_jaccard": np.ones(len(sa_np), np.float64),
-            })
-            out = out.unionByName(
-                sigs.sparkSession.createDataFrame(stars, schema=_PAIRS_SCHEMA)
-            )
-        return out.distinct()
-    cold, hot_star, _ = _hot_bucket_split(
-        bands, ["band", "bucket"], "sig_hash", max_bucket_size,
-    )
-    a = cold.select(F.col("id").alias("id_a"), "band", "bucket")
-    b = cold.select(F.col("id").alias("id_b"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    if hot_star is not None:
-        cand = cand.unionByName(hot_star)
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("signature").alias("sig_b"))
-    # agreement count as size(filter(zip_with(equal))) — measured 2x
-    # faster than aggregate(zip_with(+)) over the same 5M pairs (both
-    # are interpreted higher-order functions, but the filter/size pair
-    # avoids the per-element accumulator lambda dispatch)
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    )
-    # duplicate candidates (same pair from several bands, or hot-star +
-    # cold copies) score identically, so the dedup moves below the
-    # threshold filter where it touches survivors only (see docstring)
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", agree / F.lit(float(n_hashes)))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-        .distinct()
+    return _bucket_pairs(
+        _band_rows(sigs, n_bands), max_bucket_size,
+        _jaccard_score(threshold), _PAIRS_SCHEMA,
     )
 
 
 def incremental_minhash_pairs(
     new_sigs: DataFrame, old_sigs: DataFrame, n_bands: int = 16,
-    threshold: float = 0.5, n_hashes: int = N_HASHES,
-    max_bucket_size: int | None = 256,
+    threshold: float = 0.5, max_bucket_size: int | None = 256,
 ) -> DataFrame:
     """Near-dup pairs of a NEW batch against (old ∪ new) — crawl-N dedup.
 
-    The production shape at 100 TB: crawl N's docs must be deduped
-    against the already-curated corpus AND each other, but re-pairing
-    the old corpus against itself (what running :func:`minhash_lsh_pairs`
-    on the union would do) is O(corpus²) wasted work that grows with
-    every crawl. Here only the NEW side's bands drive the probe join —
-    band-exploded new rows equi-join the band table of old ∪ new, so
-    old×old pairs can never form and each crawl costs
-    O(new × collisions), independent of corpus age. ``old_sigs`` is
-    typically a saved signatures table (parquet/Iceberg) appended after
-    each crawl, so signatures are computed once per document ever.
+    Crawl N's docs must be deduped against the already-curated corpus
+    AND each other, but the old corpus must not be re-paired against
+    itself. ``old_sigs`` is typically a saved signatures table
+    (parquet/Iceberg) appended after each crawl, so signatures are
+    computed once per document ever.
 
     Returns (id_a, id_b, est_jaccard ≥ threshold) where id_a < id_b and
-    at least one side is new. Requires globally unique ids across old
-    and new (the curation pipeline's xxhash64 ids satisfy this). The
-    same hot-bucket guard as :func:`minhash_lsh_pairs` applies, with
-    bucket sizes measured on the union side (a template bucket is hot no
-    matter which crawl its members arrived in); star edges are emitted
-    only for groups containing a new doc — a group min that is an OLD
-    doc correctly becomes the keeper.
+    at least one side is new: exactly :func:`minhash_lsh_pairs` over
+    old ∪ new restricted to new-touching pairs. Requires globally unique
+    ids across old and new (the curation pipeline's xxhash64 ids satisfy
+    this). Bucket sizes for the hot-bucket guard count both sides (a
+    template bucket is hot no matter which crawl its members arrived
+    in); a star edge needs a new member or a new keeper, and a group
+    min that is an OLD doc correctly becomes the keeper.
     """
-    # same banding authority as minhash_lsh_pairs (round 8): 64-bit
-    # per-band keys precomputed in one Arrow pass per side (already
-    # present when the caller built signatures with n_bands), so the
-    # probe, the cold sides, and the hot branch all read cheap
-    # posexplodes instead of re-evaluating an interpreted
-    # transform+hash(slice) expression
-    def ensure_bands(s: DataFrame) -> DataFrame:
-        return s if "bands" in s.columns else _enrich_with_bands(s, n_bands)
-
-    new_sigs = ensure_bands(new_sigs).localCheckpoint()
-    old_sigs = ensure_bands(old_sigs).localCheckpoint()
-
-    def explode(sigs):
-        return sigs.select(
-            "id",
-            # xxhash64 for the same collision-safety reason as
-            # minhash_lsh_pairs (star groups must not merge across
-            # different signatures in multi-million-member buckets)
-            F.xxhash64("signature").alias("sig_hash"),
-            F.posexplode("bands").alias("band", "bucket"),
-        )
-
-    bands_new = explode(new_sigs)
-    bands_all = explode(old_sigs).withColumn("is_new", F.lit(False)).unionByName(
-        bands_new.withColumn("is_new", F.lit(True))
+    rows = _band_rows(old_sigs, n_bands).withColumn("flag", F.lit(0)).unionByName(
+        _band_rows(new_sigs, n_bands).withColumn("flag", F.lit(1))
     )
-    # Vectorized scoring path (round 8) — the minhash_lsh_pairs gate
-    # applied to the UNION side (old ∪ new): under the cap both sides'
-    # signatures + band keys + the is_new flag are collected once, hot
-    # buckets and their keeper-flag star edges are derived driver-side,
-    # and the shared kernel scores in-bucket pairs against the broadcast
-    # matrix with the flag appended as an extra column — ``keep`` adds
-    # the ≥1-new-side condition, so old×old pairs score-and-drop inside
-    # the kernel instead of ever materializing as join rows. At 100 TB
-    # the old corpus alone exceeds the gate, so the asymmetric
-    # new-bands-drive-the-probe join below remains the at-scale plan
-    # (pinned by the plan-shape test with the gate forced shut).
-    union_pd = None
-    if max_bucket_size is not None:
-        union_pd = (
-            old_sigs.select("id", "signature", "bands", F.lit(False).alias("is_new"))
-            .unionByName(
-                new_sigs.select("id", "signature", "bands", F.lit(True).alias("is_new"))
-            )
-            .limit(_MAX_BROADCAST_SIGS + 1)
-            .toPandas()
-        )
-        if len(union_pd) > _MAX_BROADCAST_SIGS:
-            union_pd = None
-    if union_pd is not None:
-        spark = new_sigs.sparkSession
-        ids = union_pd["id"].to_numpy(np.int64)
-        if len(union_pd):
-            smat = np.stack(union_pd["signature"].to_numpy()).astype(np.int64)
-            band_mat = np.stack(union_pd["bands"].to_numpy()).astype(np.int64)
-        else:
-            smat = np.empty((0, n_hashes), np.int64)
-            band_mat = np.empty((0, n_bands), np.int64)
-        flags = union_pd["is_new"].to_numpy(bool)
-        hot_rows: list = []
-        star_a: list = []
-        star_b: list = []
-        for bnd in range(n_bands):
-            vals, cnt = np.unique(band_mat[:, bnd], return_counts=True)
-            for v in vals[cnt > max_bucket_size]:
-                hot_rows.append((bnd, int(v)))
-                members = np.flatnonzero(band_mat[:, bnd] == v)
-                # identical-signature groups (exact rows, cf.
-                # minhash_lsh_pairs' gate path); keeper = min id; the
-                # crawl-N rule drops old×old star edges unless the
-                # member or the keeper is new
-                sub = smat[members]
-                g_order = np.lexsort(sub.T[::-1])
-                sub_s = sub[g_order]
-                mem_s = members[g_order]
-                new_g = np.concatenate(
-                    [[True], (sub_s[1:] != sub_s[:-1]).any(axis=1)]
-                )
-                g_id = np.cumsum(new_g) - 1
-                g_min = np.full(g_id[-1] + 1, np.iinfo(np.int64).max, np.int64)
-                np.minimum.at(g_min, g_id, ids[mem_s])
-                gm = g_min[g_id]
-                # keeper flag: is_new of the min-id member per group
-                keeper_new = np.zeros(g_id[-1] + 1, bool)
-                is_min = ids[mem_s] == gm
-                keeper_new[g_id[is_min]] = flags[mem_s][is_min]
-                others = (ids[mem_s] != gm) & (flags[mem_s] | keeper_new[g_id])
-                star_a.append(gm[others])
-                star_b.append(ids[mem_s][others])
-        if hot_rows:
-            hot_keys_v = F.broadcast(
-                spark.createDataFrame(hot_rows, "band INT, bucket BIGINT")
-            )
-            cold_v = bands_all.join(hot_keys_v, ["band", "bucket"], "left_anti")
-        else:
-            cold_v = bands_all
-        id_order = np.argsort(ids)
-        bc = spark.sparkContext.broadcast((ids[id_order], smat[id_order]))
-        # bipartite formation (left_flag): the kernel forms only pairs
-        # with >=1 new side — the exact candidate set the asymmetric
-        # join produces — so old×old buckets cost nothing to score
-        out = _vectorized_cold_pairs(
-            cold_v.select(
-                "id", "band", "bucket",
-                F.col("is_new").cast("int").alias("flag"),
-            ),
-            bc, threshold, n_hashes, left_flag=True,
-        )
-        star_a = [s for s in star_a if len(s)]
-        star_b = [s for s in star_b if len(s)]
-        if star_a:
-            stars = pd.DataFrame({
-                "id_a": np.concatenate(star_a),
-                "id_b": np.concatenate(star_b),
-                "est_jaccard": np.ones(sum(len(s) for s in star_a), np.float64),
-            })
-            out = out.unionByName(
-                spark.createDataFrame(stars, schema=_PAIRS_SCHEMA)
-            )
-        return out.distinct()
-    # one guard authority: bucket sizes measured on the union side, the
-    # crawl-N keeper rule expressed via keeper_flag (see _hot_bucket_split)
-    cold_all, hot_star, hot_keys = _hot_bucket_split(
-        bands_all, ["band", "bucket"], "sig_hash", max_bucket_size,
-        keeper_flag="is_new",
-    )
-    cold_new = (
-        bands_new if hot_keys is None
-        else bands_new.join(hot_keys, ["band", "bucket"], "left_anti")
-    )
-
-    a = cold_new.select(F.col("id").alias("id_n"), "band", "bucket")
-    b = cold_all.select(F.col("id").alias("id_o"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_n") != F.col("id_o"))
-        .select(
-            F.least("id_n", "id_o").alias("id_a"),
-            F.greatest("id_n", "id_o").alias("id_b"),
-        )
-    )
-    if hot_star is not None:
-        cand = cand.unionByName(hot_star)
-
-    sigs = old_sigs.unionByName(new_sigs)
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("signature").alias("sig_b"))
-    # agreement count as size(filter(zip_with(equal))) — measured 2x
-    # faster than aggregate(zip_with(+)) over the same 5M pairs (both
-    # are interpreted higher-order functions, but the filter/size pair
-    # avoids the per-element accumulator lambda dispatch)
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    )
-    # same dedup-after-filter restructure as minhash_lsh_pairs: the
-    # pre-join distinct cost a full exchange over every candidate to
-    # remove ~1% duplicates; post-filter it touches survivors only
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", agree / F.lit(float(n_hashes)))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-        .distinct()
+    return _bucket_pairs(
+        rows, max_bucket_size, _jaccard_score(threshold), _PAIRS_SCHEMA,
     )
 
 
 def lsh_hot_bucket_stats(
-    sigs: DataFrame, n_bands: int = 16, n_hashes: int = N_HASHES,
-    max_bucket_size: int = 256,
+    sigs: DataFrame, n_bands: int = 16, max_bucket_size: int = 256,
 ) -> DataFrame:
     """(band, bucket, members, exact_groups) for every bucket over the cap.
 
@@ -997,142 +533,30 @@ def simhash_near_pairs(
 ) -> DataFrame:
     """(id_a, id_b, hamming ≤ max_hamming) via 4×16-bit chunk banding.
 
-    Two result-identical execution paths, exactly like
-    :func:`minhash_lsh_pairs` (round 8): corpora ≤ ``_MAX_BROADCAST_SIGS``
-    with the guard on take a vectorized path (driver-derived hot
-    buckets + stars, broadcast value array, in-bucket popcount kernel);
-    beyond the gate or with the guard off, the chunk self-join below is
-    the fully-distributed at-scale shape.
+    Each 16-bit chunk of the simhash is a band whose value is the bucket
+    (pigeonhole: a pair within Hamming 3 shares at least one identical
+    chunk); :func:`_bucket_pairs` scores hamming = popcount(xor).
 
     Same hot-bucket hazard and guard as :func:`minhash_lsh_pairs`: a
     template corpus puts thousands of docs in one (chunk_idx, chunk)
-    bucket and the self-join emits k² candidates. Buckets over
-    ``max_bucket_size`` skip the join; members sub-group by their FULL
-    simhash and each identical-hash group emits a min-id star (hamming
-    0 by construction, always ≤ max_hamming ≥ 0) — connected components
-    are preserved, work stays O(k). Hot-bucket members with a unique
-    simhash drop from that chunk only (the other 3 chunks still catch
-    them)."""
-    # pin the (id, simhash) rows once — the guard probe, both self-join
-    # sides, and the hot branch otherwise re-execute the upstream
-    # simhash kernel (round 8: 4 kernel executions → 1 at sf1.0)
-    sim = sim.localCheckpoint()
-    chunks = sim.select(
+    bucket. Buckets over ``max_bucket_size`` emit a min-id star per
+    identical-simhash group (hamming 0 by construction) instead of all
+    pairs; members with a unique simhash drop from that chunk only (the
+    other 3 chunks still catch them)."""
+
+    def score(sa, sb):
+        x = np.bitwise_xor(sa[:, 0], sb[:, 0])
+        h = _POPCNT8[x.view(np.uint8)].reshape(len(x), 8).sum(axis=1)
+        return h.astype(np.int32), h <= max_hamming
+
+    rows = sim.select(
         "id",
-        "simhash",
-        F.posexplode(
-            F.array(*[
-                F.shiftright("simhash", 16 * i).bitwiseAND(F.lit(0xFFFF)) for i in range(4)
-            ])
-        ).alias("chunk_idx", "chunk"),
+        F.posexplode(F.array(*[
+            F.shiftright("simhash", 16 * i).bitwiseAND(F.lit(0xFFFF)) for i in range(4)
+        ])).alias("band", "bucket"),
+        F.col("simhash").alias("payload"),
     )
-    # Vectorized scoring path (round 8) — the same broadcast-payload gate
-    # as minhash_lsh_pairs: (id, simhash) rows are 16 bytes each, so a
-    # maximal under-gate collect is ~8 MB (far lighter than the minhash
-    # signature matrix the gate was sized for). Hot (chunk_idx, chunk)
-    # buckets and their identical-simhash min-id stars are derived
-    # driver-side from the collected payload (no probe job, no
-    # semi-join + window stage), cold chunk rows shuffle as narrow
-    # (id, band, bucket) triples, and the shared kernel scores
-    # hamming = popcount(xor) against the broadcast value array —
-    # bit-identical to the joined path's bit_count(h_a ^ h_b). Beyond
-    # the gate, or with the guard off, the distributed self-join below
-    # stays the at-scale plan (pinned by the plan-shape test).
-    sim_pd = None
-    if max_bucket_size is not None:
-        sim_pd = sim.limit(_MAX_BROADCAST_SIGS + 1).toPandas()
-        if len(sim_pd) > _MAX_BROADCAST_SIGS:
-            sim_pd = None
-    if sim_pd is not None:
-        spark = sim.sparkSession
-        ids = sim_pd["id"].to_numpy(np.int64)
-        hv = sim_pd["simhash"].to_numpy(np.int64)
-        hu = hv.view(np.uint64)
-        hot_rows: list = []
-        star_a: list = []
-        star_b: list = []
-        for ci in range(4):
-            # same 16-bit chunk the posexplode computes: arithmetic
-            # shiftright + mask on the signed value == logical shift on
-            # the unsigned view
-            cvals = ((hu >> np.uint64(16 * ci)) & np.uint64(0xFFFF)).astype(np.int64)
-            vals, cnt = np.unique(cvals, return_counts=True)
-            for v in vals[cnt > max_bucket_size]:
-                hot_rows.append((ci, int(v)))
-                members = np.flatnonzero(cvals == v)
-                # identical-simhash groups inside the hot bucket → min-id
-                # star edges (hamming 0 by construction); unique-simhash
-                # members drop from this chunk only, same as the
-                # distributed guard's window grouping on the value
-                sub = hv[members]
-                g_order = np.argsort(sub, kind="stable")
-                sub_s, mem_s = sub[g_order], members[g_order]
-                new_g = np.concatenate([[True], sub_s[1:] != sub_s[:-1]])
-                g_id = np.cumsum(new_g) - 1
-                g_min = np.full(g_id[-1] + 1, np.iinfo(np.int64).max, np.int64)
-                np.minimum.at(g_min, g_id, ids[mem_s])
-                gm = g_min[g_id]
-                others = ids[mem_s] != gm
-                star_a.append(gm[others])
-                star_b.append(ids[mem_s][others])
-        if hot_rows:
-            hot_keys = F.broadcast(
-                spark.createDataFrame(hot_rows, "chunk_idx INT, chunk BIGINT")
-            )
-            cold_v = chunks.join(hot_keys, ["chunk_idx", "chunk"], "left_anti")
-        else:
-            cold_v = chunks
-        id_order = np.argsort(ids)
-        bc = spark.sparkContext.broadcast((ids[id_order], hv[id_order]))
-
-        def score(sa, sb):
-            x = np.bitwise_xor(sa, sb)
-            h = _POPCNT8[x.view(np.uint8)].reshape(len(x), 8).sum(axis=1)
-            return h.astype(np.int32), h <= max_hamming
-
-        out = _vectorized_cold_pairs(
-            cold_v.select(
-                "id",
-                F.col("chunk_idx").alias("band"),
-                F.col("chunk").alias("bucket"),
-            ),
-            bc, 0.0, 64,
-            score=score, schema=_HAM_SCHEMA, empty=_ham_empty, out_col="hamming",
-        )
-        star_a = [s for s in star_a if len(s)]
-        star_b = [s for s in star_b if len(s)]
-        if star_a:
-            stars = pd.DataFrame({
-                "id_a": np.concatenate(star_a),
-                "id_b": np.concatenate(star_b),
-                "hamming": np.zeros(sum(len(s) for s in star_a), np.int32),
-            })
-            out = out.unionByName(spark.createDataFrame(stars, schema=_HAM_SCHEMA))
-        return out.distinct()
-    cold, hot_star, _ = _hot_bucket_split(
-        chunks, ["chunk_idx", "chunk"], "simhash", max_bucket_size,
-        star_extra=[("h_a", F.col("simhash")), ("h_b", F.col("simhash"))],
-    )
-    a = cold.select(F.col("id").alias("id_a"), F.col("simhash").alias("h_a"), "chunk_idx", "chunk")
-    b = cold.select(F.col("id").alias("id_b"), F.col("simhash").alias("h_b"), "chunk_idx", "chunk")
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    cand = (
-        a.join(b, ["chunk_idx", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "h_a", "h_b")
-    )
-    if hot_star is not None:
-        cand = cand.unionByName(hot_star)
-    # dedup after the hamming filter (same rationale as
-    # minhash_lsh_pairs): duplicates of a pair carry identical
-    # (h_a, h_b) so they filter identically, and the distinct then
-    # runs over the near-dup survivors instead of every candidate
-    return (
-        cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .distinct()
-    )
+    return _bucket_pairs(rows, max_bucket_size, score, _HAM_SCHEMA)
 
 
 def ngram_jaccard_pairs(

@@ -146,9 +146,9 @@ def _sub_split(
     ``applyInPandas`` materializes each whole (keys) group in one Python
     task before the kernel runs, so a mega-bucket/mega-list is an
     executor OOM even with chunked scoring — the same hazard class the
-    dedup family's ``_hot_bucket_split`` guards. Corpus rows in groups
-    over ``max_rows`` are salted by id-hash into ceil(size/max_rows)
-    sub-groups; queries replicate to every sub-group of their group.
+    dedup family's hot-bucket cap (``dedup._bucket_pairs``) guards.
+    Corpus rows in groups over ``max_rows`` are salted by id-hash into
+    ceil(size/max_rows) sub-groups; queries replicate to every sub-group of their group.
     Exact: a group's top-k is contained in the union of its sub-groups'
     top-ks (top-k(A ∪ B) ⊆ top-k(A) ∪ top-k(B)), and the caller's
     (query, neighbor) dedup + global rank window finish the merge.

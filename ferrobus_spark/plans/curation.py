@@ -31,7 +31,7 @@ from ferrobus_spark.functions.text import (
     quality_score_col,
 )
 from ferrobus_spark.functions.urls import canonical_url_col, url_host_col
-from ferrobus_spark.operators.dedup import N_HASHES, minhash_lsh_pairs, minhash_signatures
+from ferrobus_spark.operators.dedup import minhash_lsh_pairs, minhash_signatures
 from ferrobus_spark.operators.html_text import parse_html
 from ferrobus_spark.plans.checkpoint import run_pipeline
 from ferrobus_spark.plans.iterative import connected_components
@@ -147,7 +147,7 @@ def curation_stages(
         )
         if archive_fn is None:
             pairs = minhash_lsh_pairs(
-                sigs, threshold=near_dup_threshold, n_hashes=N_HASHES
+                sigs, threshold=near_dup_threshold
             ).select("id_a", "id_b")
             # duplicate clusters → keep the minimum doc of each component
             # (connected_components labels with the component min already)
@@ -160,7 +160,7 @@ def curation_stages(
 
         old_sigs = archive_fn(spark)["signatures"]
         pairs = incremental_minhash_pairs(
-            sigs, old_sigs, threshold=near_dup_threshold, n_hashes=N_HASHES
+            sigs, old_sigs, threshold=near_dup_threshold
         ).select("id_a", "id_b")
         cc = connected_components(pairs, src="id_a", dst="id_b")
         new_ids = t.select(F.col("doc_id").alias("node"))

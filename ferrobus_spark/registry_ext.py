@@ -454,12 +454,12 @@ def _minhash_oracle() -> str:
     seed) → per-doc minima → pairs sharing a FULLY-EQUAL 4-row band →
     signature agreement ≥ 32/64 (≡ est_jaccard ≥ 0.5).
 
-    One deliberate restatement: the engine buckets bands by Spark's
-    Murmur3 `F.hash` of the slice; the oracle uses band-slice EQUALITY.
-    They differ only on a 32-bit hash collision between unequal slices
-    that also passes the ≥0.5 agreement filter — not present in this
-    deterministic corpus (the gate would surface it). ASCII/len≥5
-    corpus assumptions as in the fingerprint oracle."""
+    One deliberate restatement: the engine buckets bands by a 64-bit
+    polynomial hash of the slice (dedup._band_hash_matrix); the oracle
+    uses band-slice EQUALITY. They differ only on a 64-bit hash
+    collision between unequal slices that also passes the ≥0.5
+    agreement filter. ASCII/len≥5 corpus assumptions as in the
+    fingerprint oracle."""
     ctes = _minhash_pairs_ctes("documents", min_agree=32)
     return f"""
     WITH {ctes}
@@ -476,17 +476,17 @@ def _minhash_pairs_ctes(source: str, min_agree: int, cap: int = 256) -> str:
     exact-dedup survivors).
 
     ``cap`` mirrors the engine's hot-bucket guard (``max_bucket_size``,
-    dedup.py:_hot_bucket_split): band buckets with more than ``cap``
+    dedup.py:_bucket_pairs): band buckets with more than ``cap``
     members skip the pair join and instead emit a min-id STAR per
     identical-FULL-signature group. The guard is part of the gated
     production semantics (its drop/star behavior is separately pinned by
     the closed-form ``minhash_guard_planted_template`` oracle); sf1.0 is
     the first gate corpus where hot buckets actually change the output
     (10 guarded drops surfaced as a round-6 sweep mismatch in the
-    simhash family first). Differences from the engine that cannot
-    produce output drift short of a 32/64-bit hash collision: the engine
-    buckets on Murmur3 of the band slice and stars on xxhash64 of the
-    signature; the twin uses the exact band values / full signature."""
+    simhash family first). The one difference from the engine, which
+    cannot drift the output short of a 64-bit hash collision: the engine
+    buckets on a 64-bit hash of the band slice, the twin on the exact
+    band values. Both form star groups on the exact full signature."""
     from ferrobus_spark.operators.dedup import MERSENNE, N_HASHES, _minhash_params
 
     a, b = _minhash_params(N_HASHES)
@@ -599,21 +599,21 @@ def _minhash_pairs_ctes(source: str, min_agree: int, cap: int = 256) -> str:
 
 @register("minhash_dup_pairs", _minhash_oracle)
 def q_minhash_dup_pairs(spark, sf_dir):
-    from ferrobus_spark.operators.dedup import N_HASHES, minhash_lsh_pairs, minhash_signatures
+    from ferrobus_spark.operators.dedup import minhash_lsh_pairs, minhash_signatures
 
     # n_bands=16 bakes the LSH band keys into the same Arrow pass
     # (minhash_lsh_pairs' default banding) — no second enrichment trip
     sigs = minhash_signatures(_docs(spark, sf_dir), n_bands=16)
-    return minhash_lsh_pairs(sigs, threshold=0.5, n_hashes=N_HASHES).select("id_a", "id_b")
+    return minhash_lsh_pairs(sigs, threshold=0.5).select("id_a", "id_b")
 
 
-def _simhash_oracle() -> str:
+def _simhash_oracle(cap: int = 256) -> str:
     """DuckDB twin of simhash_col + simhash_near_pairs: 4-byte rolling
     window hashes (mod 2^64), per-doc DISTINCT shingles, golden-ratio
     mix, 64 majority bit votes, then the engine's 4×16-bit chunk
-    banding WITH the hot-bucket guard modeled (chunk buckets over 256
-    members emit min-id stars per identical full simhash instead of the
-    pair join — identical semantics to dedup._hot_bucket_split), and
+    banding WITH the hot-bucket guard modeled (chunk buckets over
+    ``cap`` members emit min-id stars per identical full simhash instead
+    of the pair join — identical semantics to dedup._bucket_pairs), and
     Hamming ≤ 3 refine over the candidates. Until round 6 this twin was
     pure brute force (sound because hamming ≤ 3 ⇒ ≥ 1 band equal —
     banding recall is lossless); sf1.0 is the first gate corpus with
@@ -675,7 +675,7 @@ def _simhash_oracle() -> str:
       FROM sims CROSS JOIN unnest([0, 1, 2, 3]) AS t(b)
     ),
     hotk AS MATERIALIZED (
-      SELECT b, chunk FROM bands GROUP BY b, chunk HAVING COUNT(*) > 256
+      SELECT b, chunk FROM bands GROUP BY b, chunk HAVING COUNT(*) > {cap}
     ),
     coldk AS MATERIALIZED (
       SELECT x.* FROM bands x ANTI JOIN hotk USING (b, chunk)
@@ -752,7 +752,6 @@ def q_ngram_exact_dups(spark, sf_dir):
     at any threshold is guaranteed and the chain is exact, not
     approximate, for this query."""
     from ferrobus_spark.operators.dedup import (
-        N_HASHES,
         minhash_lsh_pairs,
         minhash_signatures,
         ngram_jaccard_pairs,
@@ -760,7 +759,7 @@ def q_ngram_exact_dups(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     sigs = minhash_signatures(docs, n_bands=16)
-    cand = minhash_lsh_pairs(sigs, threshold=0.9, n_hashes=N_HASHES).select("id_a", "id_b")
+    cand = minhash_lsh_pairs(sigs, threshold=0.9).select("id_a", "id_b")
     exact = ngram_jaccard_pairs(docs, cand)
     return exact.filter(F.col("jaccard") == 1.0).select("id_a", "id_b")
 
@@ -787,7 +786,6 @@ def q_dedup_planted(spark, sf_dir):
     direction on corpora without natural duplicates; see its docstring
     for why set equality, not string equality, is the contract)."""
     from ferrobus_spark.operators.dedup import (
-        N_HASHES,
         minhash_lsh_pairs,
         minhash_signatures,
         ngram_jaccard_pairs,
@@ -799,7 +797,7 @@ def q_dedup_planted(spark, sf_dir):
     )
     uni = docs.unionByName(planted)
     sigs = minhash_signatures(uni, n_bands=16)
-    cand = minhash_lsh_pairs(sigs, threshold=0.9, n_hashes=N_HASHES).select("id_a", "id_b")
+    cand = minhash_lsh_pairs(sigs, threshold=0.9).select("id_a", "id_b")
     exact = ngram_jaccard_pairs(uni, cand)
     return exact.filter(F.col("jaccard") == 1.0).select("id_a", "id_b")
 
@@ -831,7 +829,6 @@ def q_minhash_guard_planted_template(spark, sf_dir):
     filtered to planted-involving pairs so the natural corpus's pair set
     (gated separately by minhash_dup_pairs) stays out of scope."""
     from ferrobus_spark.operators.dedup import (
-        N_HASHES,
         minhash_lsh_pairs,
         minhash_signatures,
     )
@@ -845,7 +842,7 @@ def q_minhash_guard_planted_template(spark, sf_dir):
     uni = docs.unionByName(planted)
     sigs = minhash_signatures(uni, n_bands=16)
     pairs = minhash_lsh_pairs(
-        sigs, threshold=0.5, n_hashes=N_HASHES, max_bucket_size=256
+        sigs, threshold=0.5, max_bucket_size=256
     )
     return (
         pairs.filter((F.col("id_a") >= 2000000) | (F.col("id_b") >= 2000000))
@@ -882,7 +879,6 @@ def q_incremental_dedup_planted(spark, sf_dir):
     restricted to new-touching pairs (the DuckDB twin computes the full
     union and restricts)."""
     from ferrobus_spark.operators.dedup import (
-        N_HASHES,
         incremental_minhash_pairs,
         minhash_signatures,
     )
@@ -893,7 +889,7 @@ def q_incremental_dedup_planted(spark, sf_dir):
     )
     pairs = incremental_minhash_pairs(
         minhash_signatures(new), minhash_signatures(docs),
-        threshold=0.9, n_hashes=N_HASHES,
+        threshold=0.9,
     )
     return pairs.select("id_a", "id_b")
 

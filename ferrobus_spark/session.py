@@ -7,6 +7,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM, capped at 48g — a fixed 48g overcommits
+    small hosts. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(ram // 2, 48 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "ferrobus_spark",
     master: str | None = None,
@@ -35,7 +42,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # no stage-progress spinner: it pollutes captured bench/sweep
         # artifacts (BENCH_r6 'tail' noise) and round-over-round diffs

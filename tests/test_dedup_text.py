@@ -1,5 +1,7 @@
 """Dedup + text-analysis operators: correctness vs brute force."""
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -202,8 +204,7 @@ def test_hot_bucket_guard_bounds_template_blowup(spark):
         planted.append((a, b))
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
     sigs = minhash_signatures(df)
-    pairs = minhash_lsh_pairs(sigs, threshold=0.5, n_hashes=64,
-                              max_bucket_size=256)
+    pairs = minhash_lsh_pairs(sigs, threshold=0.5, max_bucket_size=256)
     got = pairs.toPandas()
     # bounded: 2999 star edges + all-pairs among the 40 (small-vocab, hence
     # mutually similar) planted docs — nowhere near 3000*2999/2 ≈ 4.5M
@@ -237,8 +238,8 @@ def test_hot_bucket_guard_noop_below_cap(spark):
         rows.append((1000 + i, rows[i][1]))
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
     sigs = minhash_signatures(df)
-    guarded = minhash_lsh_pairs(sigs, n_hashes=64, max_bucket_size=256).toPandas()
-    exact = minhash_lsh_pairs(sigs, n_hashes=64, max_bucket_size=None).toPandas()
+    guarded = minhash_lsh_pairs(sigs, max_bucket_size=256).toPandas()
+    exact = minhash_lsh_pairs(sigs, max_bucket_size=None).toPandas()
     key = lambda d: sorted(map(tuple, d[["id_a", "id_b"]].itertuples(index=False)))
     assert key(guarded) == key(exact)
     assert len(guarded) >= 10
@@ -298,7 +299,7 @@ def test_incremental_minhash_equals_full_restricted(spark):
     inc = incremental_minhash_pairs(new_sigs, old_sigs, threshold=0.5).toPandas()
 
     full = minhash_lsh_pairs(
-        minhash_signatures(old.unionByName(new)), threshold=0.5, n_hashes=64
+        minhash_signatures(old.unionByName(new)), threshold=0.5
     ).toPandas()
     new_ids = {r[0] for r in new_rows}
     want = {
@@ -340,100 +341,126 @@ def _plan_str(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _assert_equi_join_plan(plan: str):
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-
-
-def test_minhash_lsh_pairs_plan_shape(spark, monkeypatch):
-    """Physical-plan pin (mirrors knn_join's in test_spatial.py): the
-    AT-SCALE path — the joined fallback beyond the signature-broadcast
-    gate — must stay an equi-join on (band, bucket); a refactor that
-    degrades it to a cartesian/BNLJ would pass tiny-corpus value tests
-    while being a 100 TB scale-killer. The gate is forced shut so the
-    fallback plan is the one pinned."""
-    import ferrobus_spark.operators.dedup as dd
-
-    monkeypatch.setattr(dd, "_MAX_BROADCAST_SIGS", 0)
-    sigs = spark.range(64).select(
-        F.col("id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dd.N_HASHES)),
-            lambda i: F.xxhash64(F.col("id") % 7, i),
-        ).alias("signature"),
-    )
-    plan = _plan_str(dd.minhash_lsh_pairs(sigs, n_hashes=dd.N_HASHES))
-    _assert_equi_join_plan(plan)
-
-
-def test_minhash_vectorized_equals_joined_path(spark, monkeypatch):
-    """The round-8 vectorized scoring path (broadcast signature matrix +
-    in-bucket NumPy pair generation) must be row-identical to the
-    distributed join fallback, on a corpus that exercises hot buckets
-    (template docs over the cap), cold near-dup pairs, AND the kernel's
-    batch-straddling group carry + pair-chunk slicing (both forced tiny)."""
-    import ferrobus_spark.operators.dedup as dd
-
-    rows = []
-    did = 0
-    for i in range(40):  # template stratum -> hot buckets (cap forced low)
-        rows.append((did, "template boilerplate page body shared verbatim")); did += 1
-    for i in range(30):  # near-dup stratum
-        rows.append((did, f"document number {i % 6} with mostly shared words")); did += 1
-    for i in range(30):  # unique stratum
-        rows.append((did, f"totally unique text {i} {i*17} {i*29} xyz{i}")); did += 1
-    corpus = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    sigs = minhash_signatures(corpus)
-
-    def run():
-        return sorted(
-            map(tuple, minhash_lsh_pairs(sigs, n_hashes=64, max_bucket_size=8).collect())
-        )
-
-    monkeypatch.setattr(dd, "_PAIR_CHUNK", 3)  # force chunk slicing
-    vec = run()
-    monkeypatch.setattr(dd, "_MAX_BROADCAST_SIGS", 0)  # force joined path
-    joined = run()
-    assert vec == joined
-    assert len(vec) > 0
-
-
-def test_incremental_minhash_pairs_plan_shape(spark, monkeypatch):
-    """Pin the AT-SCALE fallback (beyond the round-8 union-side gate):
-    the new-bands-drive-the-probe join must stay an equi-join."""
-    import ferrobus_spark.operators.dedup as dd
+def _id_sigs(spark, lo, n, mod):
     from ferrobus_spark.operators.dedup import N_HASHES
 
-    monkeypatch.setattr(dd, "_MAX_BROADCAST_SIGS", 0)
-
-    def sigs(lo, n, mod):
-        return spark.range(lo, lo + n).select(
-            F.col("id"),
-            F.transform(
-                F.sequence(F.lit(1), F.lit(N_HASHES)),
-                lambda i: F.xxhash64(F.col("id") % mod, i),
-            ).alias("signature"),
-        )
-
-    plan = _plan_str(
-        dd.incremental_minhash_pairs(sigs(1000, 32, 5), sigs(0, 64, 7), n_hashes=N_HASHES)
+    return spark.range(lo, lo + n).select(
+        F.col("id"),
+        F.transform(
+            F.sequence(F.lit(1), F.lit(N_HASHES)),
+            lambda i: F.xxhash64(F.col("id") % mod, i),
+        ).alias("signature"),
     )
-    _assert_equi_join_plan(plan)
 
 
-def test_incremental_vectorized_equals_joined_path(spark, monkeypatch):
-    """The round-8 vectorized incremental path (union-side gate, is_new
-    flag carried as an extra broadcast column, keeper-flag stars derived
-    driver-side) must be row-identical to the asymmetric join fallback —
-    including the crawl-N rules that old×old pairs never surface and
-    hot-group star edges need a new member or a new keeper. Corpus:
-    template stratum split across old/new (hot buckets with old AND new
-    members over a tiny cap), an all-OLD template group (must emit
-    nothing), cross-crawl near-dups, uniques; kernel chunking forced
-    tiny."""
+@pytest.mark.parametrize("op", ["minhash", "incremental", "simhash"])
+def test_bucket_pairs_plan_shape(spark, op):
+    """Physical-plan pin (mirrors knn_join's in test_spatial.py): every
+    dedup pair operator is one (band, bucket) hash shuffle feeding the
+    Arrow bucket kernel. A join here would be a k² candidate stream, a
+    cartesian/BNLJ a 100 TB scale-killer that tiny-corpus value tests
+    miss, and a broadcast a payload riding every worker."""
+    import re
+
     import ferrobus_spark.operators.dedup as dd
-    from ferrobus_spark.operators.dedup import minhash_signatures
+
+    if op == "minhash":
+        df = dd.minhash_lsh_pairs(_id_sigs(spark, 0, 64, 7))
+    elif op == "incremental":
+        df = dd.incremental_minhash_pairs(
+            _id_sigs(spark, 1000, 32, 5), _id_sigs(spark, 0, 64, 7)
+        )
+    else:
+        df = dd.simhash_near_pairs(
+            spark.range(64).select(F.col("id"), F.xxhash64(F.col("id") % 9).alias("simhash"))
+        )
+    plan = _plan_str(df)
+    assert re.search(
+        r"MapInPandas kernel\(id#\d+L, band#\d+, bucket#\d+L, payload[^\n]*\n"
+        r"\s*\+- Sort \[band#[^\n]*\n"
+        r"\s*\+- Exchange hashpartitioning\(band#\d+, bucket#\d+L, \d+\)",
+        plan,
+    ), plan
+    for banned in ("Join", "CartesianProduct", "BroadcastNestedLoopJoin", "BroadcastExchange"):
+        assert banned not in plan, (banned, plan)
+
+
+@contextlib.contextmanager
+def _arrow_batch(spark, n: int):
+    """Tiny Arrow batches, so buckets straddle batches and the kernel's
+    carry runs; the session value is restored afterwards."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _strata_rows() -> list:
+    """Template stratum (hot buckets at cap 8), near-dup stratum, uniques."""
+    rows = []
+    did = 0
+    for i in range(40):
+        rows.append((did, "template boilerplate page body shared verbatim")); did += 1
+    for i in range(30):
+        rows.append((did, f"document number {i % 6} with mostly shared words")); did += 1
+    for i in range(30):
+        rows.append((did, f"totally unique text {i} {i*17} {i*29} xyz{i}")); did += 1
+    return rows
+
+
+def _twin(sql: str, rows: list) -> list:
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    return con.execute(sql).fetchall()
+
+
+def _minhash_twin_pairs(rows: list, cap: int) -> set:
+    from ferrobus_spark.registry_ext import _minhash_pairs_ctes
+
+    ctes = _minhash_pairs_ctes("documents", min_agree=32, cap=cap)
+    return set(_twin(f"WITH {ctes} SELECT id_a, id_b FROM mh_pairs", rows))
+
+
+def _assert_est_exact(got: list, sigs) -> None:
+    """est_jaccard is the exact agreement fraction of the two signatures."""
+    sig = {r.id: np.array(r.signature) for r in sigs.collect()}
+    for a, b, est in got:
+        assert est == (sig[a] == sig[b]).mean(), (a, b, est)
+
+
+def test_minhash_kernel_equals_duckdb_twin(spark, monkeypatch):
+    """minhash_lsh_pairs at cap 8 equals the DuckDB twin's CTE chain at
+    cap 8: hot template buckets become min-id stars, cold near-dup
+    buckets score all pairs. Arrow batches of 7 rows and 3-pair scoring
+    slices force the batch-straddling carry and the slicing."""
+    import ferrobus_spark.operators.dedup as dd
+
+    rows = _strata_rows()
+    sigs = minhash_signatures(
+        spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    ).localCheckpoint()
+    monkeypatch.setattr(dd, "_PAIR_CELLS", 3 * dd.N_HASHES)
+    with _arrow_batch(spark, 7):
+        got = sorted(map(tuple, minhash_lsh_pairs(
+            sigs, threshold=0.5, max_bucket_size=8).collect()))
+    assert {(a, b) for a, b, _ in got} == _minhash_twin_pairs(rows, cap=8)
+    assert len(got) == len({(a, b) for a, b, _ in got}) > 0
+    _assert_est_exact(got, sigs)
+
+
+def test_incremental_kernel_equals_duckdb_twin(spark, monkeypatch):
+    """incremental_minhash_pairs at cap 8 equals the twin's CTE chain
+    over old ∪ new restricted to new-touching pairs — including the
+    crawl-N rules that old×old pairs never surface and a hot-group star
+    edge needs a new member or a new keeper. Corpus: a template split
+    across old and new, an all-OLD template (must emit nothing),
+    near-dups straddling crawls, uniques; batches of 7 rows."""
+    import ferrobus_spark.operators.dedup as dd
 
     old_rows, new_rows = [], []
     did = 0
@@ -449,67 +476,80 @@ def test_incremental_vectorized_equals_joined_path(spark, monkeypatch):
     for i in range(20):  # uniques
         (old_rows if i % 2 else new_rows).append(
             (did, f"totally unique text {i} {i*17} {i*29} xyz{i}")); did += 1
-    old = spark.createDataFrame(pd.DataFrame(old_rows, columns=["doc_id", "text"]))
-    new = spark.createDataFrame(pd.DataFrame(new_rows, columns=["doc_id", "text"]))
-    old_sigs = minhash_signatures(old)
-    new_sigs = minhash_signatures(new)
 
-    def run():
-        return sorted(map(tuple, dd.incremental_minhash_pairs(
-            new_sigs, old_sigs, threshold=0.5, max_bucket_size=8
-        ).collect()))
+    def sigs(rows):
+        return minhash_signatures(
+            spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+        ).localCheckpoint()
 
-    monkeypatch.setattr(dd, "_PAIR_CHUNK", 3)  # force chunk slicing
-    vec = run()
-    monkeypatch.setattr(dd, "_MAX_BROADCAST_SIGS", 0)  # force joined path
-    joined = run()
-    assert vec == joined
-    assert len(vec) > 0
-    # old×old template-B pairs must not appear on either path
+    old_sigs, new_sigs = sigs(old_rows), sigs(new_rows)
+    monkeypatch.setattr(dd, "_PAIR_CELLS", 3 * dd.N_HASHES)
+    with _arrow_batch(spark, 7):
+        got = sorted(map(tuple, dd.incremental_minhash_pairs(
+            new_sigs, old_sigs, threshold=0.5, max_bucket_size=8).collect()))
     new_ids = {r[0] for r in new_rows}
-    assert all(a in new_ids or b in new_ids for a, b, _ in vec)
+    want = {
+        (a, b) for a, b in _minhash_twin_pairs(old_rows + new_rows, cap=8)
+        if a in new_ids or b in new_ids
+    }
+    assert {(a, b) for a, b, _ in got} == want
+    assert len(got) == len(want) > 0
+    _assert_est_exact(got, old_sigs.unionByName(new_sigs))
 
 
-def test_simhash_near_pairs_plan_shape(spark, monkeypatch):
-    """Pin the AT-SCALE fallback (beyond the round-8 broadcast gate):
-    the chunk self-join must stay an equi-join on (chunk_idx, chunk)."""
+def test_simhash_kernel_equals_duckdb_twin(spark, monkeypatch):
+    """simhash_near_pairs at cap 8 equals the DuckDB twin at cap 8,
+    hamming included; batches of 7 rows and 3-pair scoring slices. The
+    registered oracle is the twin at its default cap, byte for byte."""
+    import hashlib
+
+    import ferrobus_spark.operators.dedup as dd
+    from ferrobus_spark.registry import ORACLES
+    from ferrobus_spark.registry_ext import _simhash_oracle
+
+    assert ORACLES["simhash_near_pairs"] is _simhash_oracle
+    # the registered oracle text; it may change only with a stated reason
+    assert hashlib.sha256(_simhash_oracle().encode()).hexdigest() == (
+        "3a56fb8c9c0e28e2b7cac252688853a322f8dd8c77e17d28f475caf06c1f0df6"
+    )
+    rows = _strata_rows()
+    sim = simhash_col(
+        spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    ).localCheckpoint()
+    monkeypatch.setattr(dd, "_PAIR_CELLS", 3)
+    with _arrow_batch(spark, 7):
+        got = sorted(map(tuple, simhash_near_pairs(
+            sim, max_hamming=3, max_bucket_size=8).collect()))
+    assert got == sorted(_twin(_simhash_oracle(cap=8), rows))
+    assert len(got) > 0
+
+
+@pytest.mark.parametrize("op", ["minhash", "incremental", "simhash"])
+def test_hot_bucket_spanning_batches(spark, op):
+    """One hot bucket over several Arrow batches: 300 identical docs in
+    batches of 50 still give exactly one star from the min id (299 edges;
+    incremental: the 100 new copies onto the old keeper). At cap 100 the
+    bucket turns hot at 150 rows, and from then on only the run's leader
+    rides from batch to batch: a kernel that forgot the carried bucket
+    was hot would score its last 50-row slice as a cold bucket."""
     import ferrobus_spark.operators.dedup as dd
 
-    monkeypatch.setattr(dd, "_MAX_BROADCAST_SIGS", 0)
-    sim = spark.range(64).select(F.col("id"), F.xxhash64(F.col("id") % 9).alias("simhash"))
-    plan = _plan_str(dd.simhash_near_pairs(sim))
-    _assert_equi_join_plan(plan)
-
-
-def test_simhash_vectorized_equals_joined_path(spark, monkeypatch):
-    """The round-8 vectorized simhash path (driver hot buckets + stars,
-    broadcast value array, popcount kernel) must be row-identical to the
-    distributed chunk-join fallback on a corpus exercising hot buckets
-    (identical template docs over a tiny cap), near-dup pairs within
-    Hamming 3, uniques, AND the kernel's batch-straddling carry +
-    pair-chunk slicing (forced tiny)."""
-    import ferrobus_spark.operators.dedup as dd
-    from ferrobus_spark.operators.dedup import simhash_col
-
-    rows = []
-    did = 0
-    for i in range(40):  # template stratum -> identical simhash, hot buckets
-        rows.append((did, "template boilerplate page body shared verbatim")); did += 1
-    for i in range(30):  # near-dup stratum
-        rows.append((did, f"document number {i % 6} with mostly shared words")); did += 1
-    for i in range(30):  # unique stratum
-        rows.append((did, f"totally unique text {i} {i*17} {i*29} xyz{i}")); did += 1
-    corpus = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    sim = simhash_col(corpus)
-
-    def run():
-        return sorted(
-            map(tuple, dd.simhash_near_pairs(sim, max_hamming=3, max_bucket_size=8).collect())
-        )
-
-    monkeypatch.setattr(dd, "_PAIR_CHUNK", 3)  # force chunk slicing
-    vec = run()
-    monkeypatch.setattr(dd, "_MAX_BROADCAST_SIGS", 0)  # force joined path
-    joined = run()
-    assert vec == joined
-    assert len(vec) > 0
+    rng = np.random.default_rng(3)
+    ids = rng.permutation(np.arange(1000, 1300))
+    pdf = pd.DataFrame({"doc_id": ids, "text": "one hot template body " * 8})
+    df = spark.createDataFrame(pdf).repartition(3)
+    with _arrow_batch(spark, 50):
+        if op == "minhash":
+            got = dd.minhash_lsh_pairs(
+                minhash_signatures(df), max_bucket_size=100).collect()
+        elif op == "simhash":
+            got = dd.simhash_near_pairs(simhash_col(df), max_bucket_size=100).collect()
+        else:
+            got = dd.incremental_minhash_pairs(
+                minhash_signatures(df.filter(F.col("doc_id") >= 1200)),
+                minhash_signatures(df.filter(F.col("doc_id") < 1200)),
+                max_bucket_size=100,
+            ).collect()
+    lo = 1200 if op == "incremental" else 1001
+    assert sorted((r[0], r[1]) for r in got) == [(1000, i) for i in range(lo, 1300)]
+    assert {r[2] for r in got} == ({0} if op == "simhash" else {1.0})
