@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ferrobus_spark.plans.checkpoint import footer_rows
 from ferrobus_spark.plans.iterative import cleanup, materialize
 
 
@@ -114,7 +115,7 @@ def pagerank(
         .distinct(),
         shared,
     )
-    n = nodes.count()
+    n = sum(footer_rows(shared[-1]).values())
     outdeg = materialize(e.groupBy("src").agg(F.count("*").alias("outdeg")), shared)
 
     hot: list = []

@@ -5,8 +5,8 @@ runtime, so the same contract is implemented on parquet directories:
 
   <root>/<stage>/data/            the stage output (parquet)
   <root>/<stage>/_METRICS.json    rows, partitions, wall seconds, schema
-  <root>/<stage>/_LINEAGE.json    upstream stage names + per-partition
-                                  row counts (spark_partition_id histogram)
+  <root>/<stage>/_LINEAGE.json    upstream stage names + per-write-task
+                                  row counts (the part files' parquet footers)
 
 A pipeline is a list of (name, fn) stages; ``run_pipeline`` skips any
 stage whose metrics file already exists (resume-from-checkpoint) and
@@ -23,8 +23,8 @@ import os
 import time
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 Stage = tuple[str, Callable[..., DataFrame], list[str]]  # (name, fn, upstreams)
 
@@ -41,6 +41,23 @@ def stage_is_complete(root: str, name: str) -> bool:
     return os.path.exists(metrics)
 
 
+def footer_rows(path: str) -> dict[int, int]:
+    """Rows per write task of a parquet output directory, from the footers
+    (Iceberg's manifests hold the same counts), so no job re-scans it.
+
+    Spark names each output file ``part-NNNNN-...`` with NNNNN the
+    partition of the task that wrote it; a task that rolled over into
+    several files has their counts summed. Local paths only, the same
+    assumption as ``iterative.cleanup``.
+    """
+    rows: dict[int, int] = {}
+    for f in os.listdir(path):
+        if f.startswith("part-"):
+            p = int(f.split("-")[1])
+            rows[p] = rows.get(p, 0) + pq.read_metadata(os.path.join(path, f)).num_rows
+    return dict(sorted(rows.items()))
+
+
 def write_stage(
     spark: SparkSession, root: str, name: str, df: DataFrame, upstreams: list[str]
 ) -> DataFrame:
@@ -48,14 +65,11 @@ def write_stage(
     t0 = time.perf_counter()
     df.write.mode("overwrite").parquet(data)
     wall = time.perf_counter() - t0
-    out = spark.read.parquet(data)
-    per_part = (
-        out.groupBy(F.spark_partition_id().alias("partition"))
-        .count()
-        .orderBy("partition")
-        .collect()
-    )
-    n_rows = sum(r["count"] for r in per_part)
+    per_part = footer_rows(data)
+    n_rows = sum(per_part.values())
+    # file-source schemas are all-nullable, which is what inference would
+    # give back — without inference's job
+    out = spark.read.schema(df.schema).parquet(data)
     with open(metrics_p, "w") as f:
         json.dump(
             {
@@ -73,7 +87,7 @@ def write_stage(
             {
                 "stage": name,
                 "upstreams": upstreams,
-                "partition_rows": {str(r["partition"]): r["count"] for r in per_part},
+                "partition_rows": {str(p): n for p, n in per_part.items()},
             },
             f,
         )

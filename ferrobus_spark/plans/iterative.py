@@ -32,8 +32,11 @@ import tempfile
 import uuid
 import warnings
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ferrobus_spark.plans.checkpoint import footer_rows
 
 
 def materialize(df: DataFrame, registry: list[str] | None = None) -> DataFrame:
@@ -44,7 +47,9 @@ def materialize(df: DataFrame, registry: list[str] | None = None) -> DataFrame:
 
     ``registry``: optional list the new directory path is appended to, so
     iterative callers can delete superseded rounds with :func:`cleanup`
-    instead of accumulating one directory per iteration on disk.
+    instead of accumulating one directory per iteration on disk; count
+    the new one with ``checkpoint.footer_rows(registry[-1])``. The
+    re-read takes the written schema: no inference job.
     """
     spark = df.sparkSession
     try:
@@ -56,7 +61,7 @@ def materialize(df: DataFrame, registry: list[str] | None = None) -> DataFrame:
     df.write.mode("overwrite").parquet(path)
     if registry is not None:
         registry.append(path)
-    return spark.read.parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def cleanup(paths: list[str]) -> None:
@@ -131,8 +136,9 @@ def connected_components(
     Scale: each round is two aggregate+join passes over the edge list,
     shuffling on node id; rounds are O(log² n) worst-case, ~5 in practice.
     Edge sets under ``_MAX_DRIVER_CC_EDGES`` skip the loop entirely: the
-    materialized (deduplicated) edge list is collected once and labeled
-    by union-find — identical output, none of the per-round job overhead.
+    materialized (deduplicated) edge list is read once on the driver with
+    pyarrow and labeled by union-find — identical output, none of the
+    per-round job overhead. Edge counts come from the parquet footers.
     """
     e_dirs: list[str] = []
     E = (
@@ -141,18 +147,15 @@ def connected_components(
         .distinct()
     )
     E = materialize(E, e_dirs)
-    n_edges = E.count()  # parquet-footer count on the fresh materialize
-    if n_edges == 0:
-        return materialize(
-            E.select(F.col("u").alias("node"))
-            .union(E.select(F.col("v").alias("node")))
-            .distinct()
-        ).withColumn("component", F.col("node"))
+    n_edges = sum(footer_rows(e_dirs[-1]).values())
+    if n_edges == 0:  # only self-loops: no node is in any edge
+        cleanup(e_dirs)
+        return edges.sparkSession.createDataFrame([], "node BIGINT, component BIGINT")
     if n_edges <= _MAX_DRIVER_CC_EDGES:
-        ep = E.toPandas()
-        labels = _driver_union_find(ep["u"].tolist(), ep["v"].tolist())
         import pandas as pd
 
+        ep = pq.read_table(e_dirs[-1], columns=["u", "v"])
+        labels = _driver_union_find(ep["u"].to_pylist(), ep["v"].to_pylist())
         out = pd.DataFrame(
             {"node": list(labels.keys()), "component": list(labels.values())}
         )
@@ -195,10 +198,10 @@ def connected_components(
         prev_dirs, e_dirs = e_dirs, []
         new_E = materialize(small, e_dirs)
         # both edge sets are .distinct() outputs, so set equality is
-        # |new| == |old| AND new ⊆ old — one footer-cheap count plus one
+        # |new| == |old| AND new ⊆ old — a parquet-footer count plus one
         # anti-join probe, replacing two exceptAll passes (each a full
         # window-dedup shuffle) per round
-        n_new = new_E.count()
+        n_new = sum(footer_rows(e_dirs[-1]).values())
         changed = n_new != n_edges or (
             new_E.join(E, ["u", "v"], "left_anti").limit(1).count() > 0
         )

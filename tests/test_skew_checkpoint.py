@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ferrobus_spark.operators.skew import heavy_hitters, salted_count, salted_join
-from ferrobus_spark.plans.checkpoint import pipeline_metrics, run_pipeline
+from ferrobus_spark.plans.checkpoint import pipeline_metrics, run_pipeline, write_stage
+from ferrobus_spark.plans.iterative import cleanup, connected_components, materialize
 from ferrobus_spark.registry import CELL_REF_SQL
 from ferrobus_spark.sources.pages import pages_table
 
@@ -133,6 +134,78 @@ def test_checkpoint_resume_after_midwrite_crash(spark, tmp_path):
     metrics = {m["stage"]: m for m in pipeline_metrics(crash_root)}
     assert metrics["b"]["rows"] == 50
     shutil.rmtree(crash_root)
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted under a fresh job group."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_stage_job_budget_and_lineage(spark, tmp_path):
+    """write_stage counts rows from the part files' footers: it starts no
+    job beyond the write itself, and its lineage is per write task."""
+    df = spark.range(0, 100, 1, 4)
+    root = str(tmp_path / "ckpt")
+    plain = _jobs_in_group(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
+    staged = _jobs_in_group(spark, lambda: write_stage(spark, root, "s", df, []))
+    assert staged <= plain
+    with open(os.path.join(root, "s", "_LINEAGE.json")) as f:
+        assert json.load(f)["partition_rows"] == {"0": 25, "1": 25, "2": 25, "3": 25}
+    (metrics,) = pipeline_metrics(root)
+    assert (metrics["rows"], metrics["partitions"]) == (100, 4)
+
+
+def test_reread_schema_equals_inferred(spark, tmp_path):
+    """materialize and write_stage re-open their output with the written
+    schema; it must equal what parquet schema inference returns."""
+    df = spark.range(0, 10, 1, 2).select(
+        "id",  # non-null bigint
+        F.col("id").cast("int").alias("i"),
+        (F.col("id") / 3).alias("d"),
+        F.col("id").cast("string").alias("s"),
+        F.col("id").cast("string").cast("binary").alias("b"),
+        F.timestamp_seconds("id").alias("ts"),
+        F.array("id", F.lit(7).cast("long")).alias("arr"),
+        F.struct("id", F.col("id").cast("string").alias("t")).alias("st"),
+    )
+    dirs: list[str] = []
+    got = materialize(df, dirs)
+    assert got.schema == spark.read.parquet(dirs[-1]).schema
+    cleanup(dirs)
+    root = str(tmp_path / "ckpt")
+    got = write_stage(spark, root, "s", df, [])
+    assert got.schema == spark.read.parquet(os.path.join(root, "s", "data")).schema
+    assert sorted(got.collect()) == sorted(df.collect())
+
+
+def test_connected_components_self_loops_only(spark, tmp_path):
+    """A graph of only self-loops has no component and leaves no round
+    directory behind."""
+    ckpt = str(tmp_path / "ckpt")
+    prev = spark.conf.get("spark.ferrobus.ckpt.dir", None)
+    spark.conf.set("spark.ferrobus.ckpt.dir", ckpt)
+    try:
+        cc = connected_components(
+            spark.createDataFrame([(1, 1), (2, 2)], "src BIGINT, dst BIGINT")
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.ferrobus.ckpt.dir")
+        else:
+            spark.conf.set("spark.ferrobus.ckpt.dir", prev)
+    assert cc.count() == 0
+    assert cc.schema.simpleString() == "struct<node:bigint,component:bigint>"
+    assert os.listdir(ckpt) == []
 
 
 def test_connected_components_driver_equals_distributed(spark, monkeypatch):
