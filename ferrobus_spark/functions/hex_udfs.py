@@ -1,10 +1,10 @@
-"""Vectorized Arrow/pandas UDFs for hex-grid encoding (no per-row Python).
+"""Hex-grid column functions (no per-row Python).
 
-Each UDF receives whole Arrow batches and delegates to the pure-NumPy
-kernels in :mod:`ferrobus_spark.hexgrid` — the batched-H3-encoding shape
-the north rule prescribes. For the common fixed-resolution case prefer
-:func:`cell_expr_col`, which is a pure Column expression (whole-stage
-codegen, no Python at all).
+:func:`cell_expr_col` encodes latlng→cell as a pure Column expression
+(whole-stage codegen, no Python at all). :func:`grid_disk_col` is an
+Arrow-batched pandas UDF that delegates to the pure-NumPy kernels in
+:mod:`ferrobus_spark.hexgrid` — the batched-H3 shape the north rule
+prescribes.
 """
 
 from __future__ import annotations
@@ -25,28 +25,6 @@ def cell_expr_col(lon, lat, res: int) -> Column:
     if lon_s is None or lat_s is None:
         raise TypeError("cell_expr_col takes column-name strings")
     return F.expr(hexgrid.cell_sql(lon_s, lat_s, res))
-
-
-@F.pandas_udf(T.LongType())
-def _cell_udf(lon: pd.Series, lat: pd.Series, res: pd.Series) -> pd.Series:
-    out = hexgrid.latlng_to_cell(lon.to_numpy(np.float64), lat.to_numpy(np.float64), int(res.iloc[0]))
-    return pd.Series(out)
-
-
-def cell_udf_col(lon: Column | str, lat: Column | str, res: int) -> Column:
-    """latlng→cell via Arrow-batched pandas UDF (variable-resolution path)."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    return _cell_udf(lon, lat, F.lit(res))
-
-
-@F.pandas_udf(T.StructType([
-    T.StructField("lon", T.DoubleType()),
-    T.StructField("lat", T.DoubleType()),
-]))
-def cell_centroid_udf(cell: pd.Series) -> pd.DataFrame:
-    lon, lat = hexgrid.cell_to_latlng(cell.to_numpy(np.int64))
-    return pd.DataFrame({"lon": lon, "lat": lat})
 
 
 @F.pandas_udf(T.ArrayType(T.LongType()))

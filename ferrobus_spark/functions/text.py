@@ -36,14 +36,6 @@ def n_bpe_tokens_col(text: str | Column) -> Column:
     return F.regexp_count(c, F.lit(BPE_RE))
 
 
-def token_stats_sql(text_expr: str) -> dict[str, str]:
-    """DuckDB twins of the token counters (regexp_extract_all + len)."""
-    return {
-        "n_words": f"len(regexp_extract_all({text_expr}, '{WORD_RE}'))",
-        "n_bpe_tokens": f"len(regexp_extract_all({text_expr}, '{BPE_RE}'))",
-    }
-
-
 # ---------------------------------------------------------------------------
 # quality scoring — length / punctuation / digit / stopword ratios
 # ---------------------------------------------------------------------------

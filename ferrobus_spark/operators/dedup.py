@@ -571,9 +571,9 @@ def ngram_jaccard_pairs(
     list. The ``union == 0 -> 1.0`` fallback below is therefore
     unreachable; it exists only as a defensive division guard.
 
-    Kernel shape — measured, not assumed (scripts/ngram_refine_bench.py,
-    round 6): texts ride the pairs join and each pair's sides are
-    shingled in the Python worker, with a bounded per-batch memo keyed
+    Kernel shape — measured, not assumed (round-6 microbenchmark):
+    texts ride the pairs join and each pair's sides are shingled in the
+    Python worker, with a bounded per-batch memo keyed
     on doc id so a doc fanning out into many candidate pairs (LSH hot
     buckets) is shingled once per batch instead of once per pair.
     Three "more vectorized" shapes all measured SLOWER: pair-major

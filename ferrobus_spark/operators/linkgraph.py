@@ -18,13 +18,12 @@ Classic Common-Crawl-scale workloads over the ``extract_links`` output:
 Scale notes: each PageRank round is one edge-scale shuffle — the
 per-source contribution (rank/outdeg) is joined at node scale first,
 then edges ⋈ per_src (shuffle on src) → groupBy(dst) sum (shuffle on
-dst). Pre-partitioning both edges and ranks by the join key — or
-bucketing the edge table (operators/bucketing.py) — removes the
+dst). Pre-partitioning both edges and ranks by the join key removes the
 per-round re-shuffle of the edge side. Hub-host skew (the power-law
-mega-domain) is handled EXPLICITLY: ``pagerank(salt_hot=True)`` runs a
+mega-domain) is handled EXPLICITLY: :func:`pagerank` runs a
 heavy_hitters pass once and salts the hot sources through every round's
-join (operators/skew.py), which is how the driver's host_pagerank query
-runs it; AQE skew-join splitting remains as the second line of defense.
+join (operators/skew.py); AQE skew-join splitting remains as the second
+line of defense.
 """
 
 from __future__ import annotations
@@ -32,8 +31,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ferrobus_spark.operators.skew import heavy_hitters, salted_join
 from ferrobus_spark.plans.checkpoint import footer_rows
 from ferrobus_spark.plans.iterative import cleanup, materialize
+
+# a source owning at least this share of the (sampled) edges is salted
+# into this many sub-keys in every round's edges ⋈ contribution join
+HOT_THRESHOLD = 0.01
+N_SALT = 16
 
 
 def resolve_links(links: DataFrame, pages: DataFrame) -> DataFrame:
@@ -81,26 +86,22 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    salt_hot: bool = False,
-    hot_threshold: float = 0.01,
-    n_salt: int = 16,
 ) -> DataFrame:
     """→ (node, rank) after ``n_iter`` damped power iterations.
 
     ``edges``: directed (src, dst) pairs; parallel edges count as weight.
     rank_{t+1}(v) = (1-d)/N + d * (Σ_{u→v} rank_t(u)/outdeg(u) + dangling/N).
 
-    ``salt_hot=True`` runs one sampled :func:`~ferrobus_spark.operators.
-    skew.heavy_hitters` pass over the edge sources at setup and routes
-    every round's edges⋈(rank/outdeg) join through ``salted_join`` for
-    the hot keys — the explicit answer to the power-law hub problem (a
-    mega-host with 10⁷ out-edges is ONE join key; AQE can split its
-    post-shuffle partition but every round still funnels the key through
-    one shuffle write path). The salt changes only physical
-    distribution, so results are value-identical up to float partial-agg
-    summation ORDER (≤1 ulp per round — 9 orders below the nano
-    fixed-point driver gate, which stays green with salting ON as the
-    host_pagerank production configuration).
+    One sampled :func:`~ferrobus_spark.operators.skew.heavy_hitters`
+    pass over the edge sources at setup routes every round's
+    edges⋈(rank/outdeg) join through ``salted_join`` for the hot keys —
+    the explicit answer to the power-law hub problem (a mega-host with
+    10⁷ out-edges is ONE join key; AQE can split its post-shuffle
+    partition but every round still funnels the key through one shuffle
+    write path). The salt changes only physical distribution, so results
+    equal the unsalted power iteration up to float partial-agg summation
+    ORDER (≤1 ulp per round — 9 orders below the nano fixed-point driver
+    gate).
     """
     shared: list[str] = []  # dirs needed for the whole loop (edges/nodes/outdeg)
     rounds: list[str] = []  # superseded per-round rank dirs
@@ -118,13 +119,9 @@ def pagerank(
     n = sum(footer_rows(shared[-1]).values())
     outdeg = materialize(e.groupBy("src").agg(F.count("*").alias("outdeg")), shared)
 
-    hot: list = []
-    if salt_hot:
-        from ferrobus_spark.operators.skew import heavy_hitters
-
-        # one measured pass at setup; the hot-source set is a property of
-        # the (static) edge table, so it amortizes over all iterations
-        hot = heavy_hitters(e, "src", threshold=hot_threshold)
+    # one measured pass at setup; the hot-source set is a property of
+    # the (static) edge table, so it amortizes over all iterations
+    hot = heavy_hitters(e, "src", threshold=HOT_THRESHOLD)
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     for _ in range(n_iter):
@@ -136,9 +133,7 @@ def pagerank(
             .select("src", (F.col("rank") / F.col("outdeg")).alias("contrib"))
         )
         if hot:
-            from ferrobus_spark.operators.skew import salted_join
-
-            joined = salted_join(e, per_src, "src", hot, n_salt)
+            joined = salted_join(e, per_src, "src", hot, N_SALT)
         else:
             joined = e.join(per_src, "src")
         contribs = (

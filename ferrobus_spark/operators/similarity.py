@@ -311,9 +311,9 @@ def _sign_buckets(df: DataFrame, planes: np.ndarray, id_col: str, vec_col: str,
                   include_vec: bool = False) -> DataFrame:
     """(id, table, bucket[, vec]) rows.
 
-    With ``include_vec=False`` the rows are ids ONLY — the shape the
-    streaming/stats callers use. ``include_vec=True`` additionally
-    carries the NORMALIZED vector so the bucket cogroup in
+    With ``include_vec=False`` the rows are ids ONLY — the shape
+    :func:`lsh_topk`'s bucket-size count uses. ``include_vec=True``
+    additionally carries the NORMALIZED vector so the bucket cogroup in
     :func:`lsh_topk` can score each bucket block with one matmul; that
     costs one vector copy per table membership (×n_tables), which is
     LINEAR in corpus size — versus one copy per CANDIDATE PAIR in the

@@ -429,13 +429,9 @@ def q_host_pagerank(spark, sf_dir):
 
     pages = pages_table(spark, sf_dir)
     resolved = resolve_links(extract_links(pages), pages)
-    # salting ON: the production configuration — heavy-hitter hosts are
-    # salted through every round's edge join; results (and thus the
-    # hash) are exactly the unsalted ones
     ranks = pagerank(
         resolved.select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst")),
         n_iter=8,
-        salt_hot=True,
     )
     return ranks.select(
         "node",

@@ -556,46 +556,3 @@ def legs_to_geojson_model(
             ).alias("geojson"),
         )
     )
-
-
-def legs_to_geojson(legs: DataFrame, stops_dim: DataFrame) -> DataFrame:
-    """One GeoJSON FeatureCollection string per pair (to_geojson.rs shape;
-    straight-line leg geometry — see legs_to_geojson_model for the
-    reference's street-path/pattern geometry)."""
-    s_from = stops_dim.select(
-        F.col("stop_idx").alias("from_stop"),
-        F.col("lon").alias("f_lon"), F.col("lat").alias("f_lat"),
-    )
-    s_to = stops_dim.select(
-        F.col("stop_idx").alias("to_stop"),
-        F.col("lon").alias("t_lon"), F.col("lat").alias("t_lat"),
-    )
-    enriched = legs.join(F.broadcast(s_from), "from_stop", "left").join(
-        F.broadcast(s_to), "to_stop", "left"
-    )
-    feature = F.to_json(F.struct(
-        F.lit("Feature").alias("type"),
-        F.struct(
-            F.col("kind"), F.col("depart"), F.col("arrive"),
-            (F.col("arrive") - F.col("depart")).alias("duration"),
-        ).alias("properties"),
-        F.struct(
-            F.lit("LineString").alias("type"),
-            F.array(
-                F.array("f_lon", "f_lat"), F.array("t_lon", "t_lat")
-            ).alias("coordinates"),
-        ).alias("geometry"),
-    ))
-    return (
-        enriched.withColumn("feature", feature)
-        .groupBy("pair_id")
-        .agg(F.sort_array(F.collect_list(F.struct("leg_idx", "feature"))).alias("fs"))
-        .select(
-            "pair_id",
-            F.concat(
-                F.lit('{"type": "FeatureCollection", "features": ['),
-                F.concat_ws(", ", F.transform("fs", lambda x: x.feature)),
-                F.lit("]}"),
-            ).alias("geojson"),
-        )
-    )

@@ -75,10 +75,7 @@ def page_html_sql() -> str:
 
 
 def warc_ts_col(id_col: str = "doc_id"):
-    """Deterministic fetch timestamp for a synthetic page — THE single
-    definition shared by the batch ``pages_table``, the streaming
-    ``read_pages_stream``, and their batch-equivalence test, so the
-    derivation cannot silently diverge between the three."""
+    """Deterministic fetch timestamp for a synthetic page."""
     h = (F.col(id_col) * 2654435761) % 4294967296
     return F.to_timestamp(F.lit("2024-01-01 00:00:00")) + F.make_interval(
         secs=(h % 2592000).cast("double")

@@ -15,10 +15,40 @@ this module gives them genuinely independent SQL twins:
 * everything downstream — the RAPTOR rounds themselves, the one-to-many
   candidate scan, tie rules, walking comparison, departure enumeration,
   the order-dependent Pareto filter — is COMPUTED BY DUCKDB from those
-  inputs, by unrolling the joins-formulation of RAPTOR
-  (plans/raptor_joins.py: per round queue → earliest-trip join+min →
-  running-min window → arrival harvest → ascending footpath chain →
-  label min) into a WITH chain of ``max_transfers`` rounds.
+  inputs, by unrolling a joins formulation of RAPTOR into a WITH chain
+  of ``max_transfers`` rounds. Labels are rows keyed by (okey, stop);
+  each round is
+
+    frontier → route queue (min marked pos per route)
+    → earliest-trip range join + min-agg
+    → running-min over pattern positions      (the trip-upgrade rule)
+    → arrival harvest join
+    → ascending footpath chain                (transfer relax)
+    → label min per (okey, stop).
+
+Why the joins formulation equals the sequential kernel:
+
+* running-min over per-position earliest catchable trips ≡ the
+  mid-route upgrade loop: an upgrade is always to an earlier trip;
+* min-union of route labels and footpath labels ≡ the reference's
+  guarded sequential updates: in all-targets mode curr_board ≥
+  curr_arr holds for every label, so the board-time skip
+  (raptor_utils.rs:90) can never reject an arrival-improving relax;
+* next frontier = stops whose best arrival improved this round
+  (state.rs:44-57 marks exactly when best improves);
+* within-round footpath chaining: the reference's footpath pass
+  (raptor_utils.rs:63-103) reads live board times in ascending stop
+  order, so a transfer chain s1→s2→s3 between route-marked stops
+  (s1 < s2 < s3) relaxes TWO hops within one round as an artifact of
+  iteration order. A marked stop u's effective board is therefore
+  min(route board, ascending chains w1 < w2 < … < u of transfers
+  between route-marked stops); the sequential improvement guard only
+  prunes dominated chains, so a min-agg recursion over ascending hops
+  is result-identical. ``_FOOT_CHAIN_DEPTH`` hops reproduce chains
+  through up to ``_FOOT_CHAIN_DEPTH``+1 route-marked stops; a longer
+  chain would complete one round later than the kernel (the transit
+  oracle rows pass against the kernel, so none occurs on their
+  fixture). tests/test_routing.py pins the kernel's 1→2→3 chain.
 
 Semantics notes (kernel parity):
 
@@ -28,7 +58,7 @@ Semantics notes (kernel parity):
   board`` under QUALIFY ROW_NUMBER()=1 (phase 0 = route, 1 = foot);
 * footpath chaining replicates the reference's ascending live-read pass
   via ``_FOOT_CHAIN_DEPTH`` min-recursion hops between route-marked
-  stops (see plans/raptor_joins.py for the equivalence argument);
+  stops (equivalence argument above);
 * the range oracle uses the ALL-TARGETS formulation: on this fixture
   the target-pruned kernel's arrival and transfers at the egress stop
   are identical to the all-targets run for every (pair, departure) —
@@ -47,6 +77,7 @@ from __future__ import annotations
 
 from functools import lru_cache
 
+# footpath ascending-chain hops per round (see the module docstring)
 _FOOT_CHAIN_DEPTH = 2
 AREA = [(-122.495, 37.705), (-122.43, 37.705), (-122.43, 37.77), (-122.495, 37.77)]
 
@@ -140,7 +171,7 @@ def _model_ctes() -> list[str]:
 def _raptor_ctes(max_transfers: int, target: bool) -> list[str]:
     """CTE chain src(okey, stop_idx, dep) [+ tg(okey, tstop)] → best_R.
 
-    Transliteration of plans/raptor_joins.py round structure; ``target``
+    One WITH block per round, as in the module docstring; ``target``
     adds the kernel's target-stop board rule (effective board := arrival
     at the target, default_raptor.rs:85-96).
     """

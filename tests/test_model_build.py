@@ -133,6 +133,47 @@ def test_node_to_stop_last_wins(spark_model, oracle_model):
     assert got == oracle_model.node_to_stop
 
 
+def test_model_integrity_all_zero(spark_model):
+    """Structural invariants of the built model (the dataflow analogue of
+    the reference's audit_transit_model index checks); every count is 0."""
+    stops = spark_model["stops_dim"].select("stop_idx")
+    routes = spark_model["routes"]
+    route_stops = spark_model["route_stops"]
+    stop_times = spark_model["stop_times"]
+    transfers = spark_model["transfers"]
+
+    def bad_shape(table, expected):
+        return (
+            routes.join(table.groupBy("route_idx").count(), "route_idx")
+            .filter(F.col("count") != expected)
+            .count()
+        )
+
+    checks = {
+        "route_stops_bad_stop": route_stops.join(stops, "stop_idx", "left_anti").count(),
+        # route_stops rows per route == num_stops
+        "route_stops_shape": bad_shape(route_stops, F.col("num_stops")),
+        # stop_times rows per route == num_trips * num_stops
+        "stop_times_shape": bad_shape(
+            stop_times, F.col("num_trips") * F.col("num_stops")
+        ),
+        "arrival_after_departure": stop_times.filter(
+            F.col("arrival") > F.col("departure")
+        ).count(),
+        "transfer_bad_endpoint": sum(
+            transfers.join(
+                stops.withColumnRenamed("stop_idx", end), end, "left_anti"
+            ).count()
+            for end in ("from_stop", "to_stop")
+        ),
+        "transfer_self_loop": transfers.filter(
+            F.col("from_stop") == F.col("to_stop")
+        ).count(),
+        "transfer_negative": transfers.filter(F.col("duration") < 0).count(),
+    }
+    assert all(v == 0 for v in checks.values()), checks
+
+
 def test_colocated_pairwise_rust_scenario(spark):
     """loading/transfers.rs:347-361 ported as data: stops snapped to
     nodes [A, A, B, A, (unsnapped)] produce pairwise zero transfers

@@ -233,59 +233,6 @@ def test_multi_feed_zhelez_plus_disjoint(spark, tmp_path_factory):
     assert m[(0, 1)] == 1044 and m[(1, 0)] == 1253  # goldens unchanged
 
 
-def test_matrix_golden_via_joins_raptor(spark, zhelez_model, zhelez_points):
-    """Both RAPTOR regimes carry golden parity: the iterative
-    DataFrame-joins formulation (plans/raptor_joins.py) reproduces the
-    reference's matrix goldens end-to-end on the real-city fixture —
-    previously it was only equivalence-tested against the kernel on the
-    synthetic fixture. Product algebra (rank-1 access stop, all egress
-    ranks) mirrors the travel_time_matrix oracle."""
-    from pyspark.sql import functions as F
-
-    from ferrobus_spark.plans.raptor_joins import raptor_all_targets_joins
-
-    dep = 8 * 3600
-    access = (
-        zhelez_points["point_stops"]
-        .filter((F.col("rank") == 1) & F.col("point_id").isin(0, 1))
-        .select("point_id", "stop_idx", "access_secs")
-        .toPandas()
-    )
-    sources = spark.createDataFrame(
-        [
-            (int(r.point_id), int(r.stop_idx), dep + int(r.access_secs))
-            for r in access.itertuples(index=False)
-        ],
-        "origin_id LONG, stop_idx LONG, departure LONG",
-    )
-    labels = raptor_all_targets_joins(
-        spark, zhelez_model.tables, sources, max_transfers=2
-    ).toPandas()
-    egress = zhelez_points["point_stops"].select(
-        "point_id", "stop_idx", "access_secs"
-    ).toPandas()
-
-    got = {}
-    for oid, sub in labels.groupby("origin_id"):
-        lab = dict(zip(sub["stop_idx"], sub["best_arrival"]))
-        a_secs = int(access[access.point_id == oid].iloc[0].access_secs)
-        for did in (0, 1):
-            if did == oid:
-                continue
-            cands = [
-                a_secs + (int(lab[s]) - (dep + a_secs)) + int(es)
-                for s, es in zip(
-                    egress[egress.point_id == did].stop_idx,
-                    egress[egress.point_id == did].access_secs,
-                )
-                if s in lab
-            ]
-            if cands:
-                got[(int(oid), did)] = min(cands)
-    assert got[(0, 1)] == 1044  # reference test.py:52
-    assert got[(1, 0)] == 1253  # reference test.py:53
-
-
 def test_range_routing_golden(spark, zhelez_model, zhelez_tt, zhelez_points):
     """range_multimodal_routing golden (reference test.py:103-137): the
     (56.256657,93.533561)→(56.242574,93.499159) pair over departures

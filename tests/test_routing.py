@@ -147,3 +147,55 @@ def test_statistics_match_oracle(
                 assert g is None or pd.isna(g), (stat, pid)
             else:
                 assert g == pytest.approx(e, abs=1e-9), (stat, pid)
+
+
+def _chain_model(spark):
+    """Minimal model with an ascending 2-hop footpath chain.
+
+    Round 1 route phase marks stop 1 (arr 1100) and stop 2 (arr 1200).
+    The reference's ascending live-read footpath pass then relaxes
+    1→2 (board 1150, improves stop 2) AND — because stop 2 is processed
+    after stop 1 — 2→3 with the IMPROVED board (1150+50=1200). Stop 3's
+    round-1 board 1200 catches route 2's 1210 departure in round 2; a
+    one-hop-only relax would put stop 3 at 1250 and miss the trip.
+    """
+    routes = spark.createDataFrame(
+        [(0, "A", 1, 2), (1, "B", 1, 2), (2, "C", 1, 2)],
+        "route_idx LONG, route_id STRING, num_trips LONG, num_stops LONG",
+    )
+    route_stops = spark.createDataFrame(
+        [(0, 0, 0), (0, 1, 1), (1, 0, 0), (1, 1, 2), (2, 0, 3), (2, 1, 4)],
+        "route_idx LONG, pos LONG, stop_idx LONG",
+    )
+    stop_times = spark.createDataFrame(
+        [
+            (0, 0, 0, 1000, 1000), (0, 0, 1, 1100, 1100),
+            (1, 0, 0, 1000, 1000), (1, 0, 1, 1200, 1200),
+            (2, 0, 0, 1210, 1210), (2, 0, 1, 1300, 1300),
+        ],
+        "route_idx LONG, trip_pos LONG, pos LONG, arrival LONG, departure LONG",
+    )
+    transfers = spark.createDataFrame(
+        [(1, 2, 50), (2, 3, 50)],
+        "from_stop LONG, to_stop LONG, duration LONG",
+    )
+    stops_dim = spark.createDataFrame(
+        [(i,) for i in range(6)], "stop_idx LONG"
+    )
+    return {
+        "routes": routes,
+        "route_stops": route_stops,
+        "stop_times": stop_times,
+        "transfers": transfers,
+        "stops_dim": stops_dim,
+    }
+
+
+def test_raptor_kernel_chains_footpaths_within_round(spark):
+    tt = build_timetable_csr(_chain_model(spark))
+    best, _ = spark_raptor(tt, 0, 900, MAX_TRANSFERS, target=None)
+    # the kernel (reference-exact) chains 1→2→3 within round 1...
+    assert int(best[2]) == 1150
+    assert int(best[3]) == 1200
+    # ...which is what lets round 2 catch route C's 1210 departure
+    assert int(best[4]) == 1300

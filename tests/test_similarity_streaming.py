@@ -1,4 +1,4 @@
-"""Similarity search + streaming operators."""
+"""Similarity search operators (top-k, near-duplicate pairs)."""
 
 import numpy as np
 import pandas as pd
@@ -75,174 +75,6 @@ def test_ivf_topk_recall(spark, embeddings):
     assert recall >= 0.8, f"IVF 1-NN recall too low: {recall:.2f}"
     # every query must get k results (no empty probe sets)
     assert len(a1) == len(e1)
-
-
-def test_streaming_windowed_counts(spark, sf_dir, tmp_path):
-    import shutil
-
-    from ferrobus_spark.streaming.events import (
-        read_events_stream,
-        run_available_now,
-        windowed_event_counts,
-    )
-
-    src = tmp_path / "events_stream"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "part-0.parquet")
-
-    stream = read_events_stream(spark, str(src))
-    assert stream.isStreaming
-    rows = run_available_now(windowed_event_counts(stream), "win_counts_t")
-
-    # batch twin must agree exactly
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    exp = (
-        batch.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-        .collect()
-    )
-    got = {(r.window_start, r.event_type): r.n_events for r in rows}
-    want = {(r.window_start, r.event_type): r.n_events for r in exp}
-    assert got == want
-
-
-def test_stateful_first_seen(spark, sf_dir, tmp_path):
-    import shutil
-
-    from ferrobus_spark.streaming.events import (
-        read_events_stream,
-        run_available_now,
-        stateful_first_seen,
-    )
-
-    src = tmp_path / "events_stream3"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "part-0.parquet")
-    rows = run_available_now(
-        stateful_first_seen(read_events_stream(spark, str(src))),
-        "first_seen_t",
-        output_mode="append",
-    )
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet").toPandas()
-    exp = (
-        batch.sort_values(["ts", "event_id"])
-        .groupby("user_id", as_index=False)
-        .first()
-    )
-    got = {r.user_id: (r.first_ts, r.first_event_id) for r in rows}
-    assert len(got) == len(exp)
-    for r in exp.itertuples(index=False):
-        assert got[r.user_id] == (r.ts, r.event_id), r.user_id
-
-
-def test_streaming_session_windows(spark, sf_dir, tmp_path):
-    import shutil
-
-    from ferrobus_spark.streaming.events import (
-        read_events_stream,
-        run_available_now,
-        session_windows,
-    )
-
-    src = tmp_path / "events_stream2"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "part-0.parquet")
-    rows = run_available_now(
-        session_windows(read_events_stream(spark, str(src))), "sess_t"
-    )
-    assert len(rows) > 0
-    # session totals must cover every event exactly once
-    total = sum(r.n_events for r in rows)
-    assert total == spark.read.parquet(f"{sf_dir}/events.parquet").count()
-
-
-def test_streaming_url_first_seen(spark, sf_dir, tmp_path):
-    """Streaming crawl-frontier dedup ≡ batch min_by per canonical url:
-    a re-crawl of every page under messier URLs (upper-cased host, :443,
-    fragment) arrives in a LATER file; the stateful operator must emit
-    one row per canonical url with the ORIGINAL fetch."""
-    from pyspark.sql import functions as F
-
-    from ferrobus_spark.functions.urls import canonical_url_col
-    from ferrobus_spark.sources.pages import pages_table
-    from ferrobus_spark.streaming.events import run_available_now, url_first_seen
-
-    pages = pages_table(spark, sf_dir).select("url", "warc_ts").limit(200).localCheckpoint()
-    recrawl = pages.select(
-        F.concat(
-            F.lit("HTTPS://"),
-            F.upper(F.regexp_extract("url", r"^https://([^/]+)", 1)),
-            F.lit(":443"),
-            F.regexp_extract("url", r"^https://[^/]+(.*)$", 1),
-            F.lit("#utm"),
-        ).alias("url"),
-        (F.col("warc_ts") + F.expr("INTERVAL 7 DAYS")).alias("warc_ts"),
-    )
-    src = tmp_path / "pages_stream"
-    pages.coalesce(1).write.mode("overwrite").parquet(str(src / "f0"))
-    recrawl.coalesce(1).write.mode("overwrite").parquet(str(src / "f1"))
-
-    stream = (
-        spark.readStream.schema("url STRING, warc_ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
-    got = {
-        r.canon_url: (r.first_ts, r.first_url)
-        for r in run_available_now(url_first_seen(stream), "url_first_seen", "append")
-    }
-
-    batch = (
-        pages.unionByName(recrawl)
-        .withColumn("canon_url", canonical_url_col(F.col("url")))
-        .groupBy("canon_url")
-        .agg(F.min(F.struct("warc_ts", "url")).alias("m"))
-        .select("canon_url", F.col("m.warc_ts").alias("first_ts"), F.col("m.url").alias("first_url"))
-    )
-    exp = {r.canon_url: (r.first_ts, r.first_url) for r in batch.collect()}
-    assert got == exp
-    assert len(got) == 200  # every re-crawl collapsed onto its original
-    assert all(u.startswith("https://") and "#" not in u for u in got)
-
-
-def test_streaming_tile_counts(spark, sf_dir, tmp_path):
-    """Streaming per-tile heat map ≡ the batch tile histogram over the
-    same derived (warc_ts, cell) columns."""
-    import shutil
-
-    from ferrobus_spark.registry import CELL_REF_SQL
-    from ferrobus_spark.streaming.events import (
-        read_pages_stream,
-        run_available_now,
-        streaming_tile_counts,
-    )
-
-    src = tmp_path / "pages_stream"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/documents.parquet", src / "part-0.parquet")
-
-    stream = read_pages_stream(spark, str(src))
-    assert stream.isStreaming
-    rows = run_available_now(streaming_tile_counts(stream), "tile_counts_t")
-
-    # expected side comes from the BATCH pages table, not a third copy of
-    # the derivation — a batch-side change now breaks this test instead
-    # of silently diverging from it
-    from ferrobus_spark.sources.pages import pages_table
-
-    exp = (
-        pages_table(spark, sf_dir)
-        .select("warc_ts", "lon", "lat", "doc_id")
-        .groupBy(F.window("warc_ts", "1 hour").alias("w"), F.expr(CELL_REF_SQL).alias("cell"))
-        .agg(F.count("*").alias("n_pages"))
-        .select(F.col("w.start").alias("window_start"), "cell", "n_pages")
-        .collect()
-    )
-    got = {(r.window_start, r.cell): r.n_pages for r in rows}
-    want = {(r.window_start, r.cell): r.n_pages for r in exp}
-    assert got == want and len(got) > 10
 
 
 def test_ivf_twin_quantizer_bit_identical():

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ferrobus_spark.routing.points import build_point_tables
-from ferrobus_spark.routing.traced import detailed_journeys, legs_to_geojson
+from ferrobus_spark.routing.traced import detailed_journeys, legs_to_geojson_model
 from ferrobus_spark.sources.transit import query_points
 
 DEP = 8 * 3600
@@ -88,28 +88,11 @@ def test_traced_totals_match_oracle(oracle_model, legs):
         assert total == exp_total, pid
 
 
-def test_geojson_emit(spark, spark_model, legs):
-    import json
-
-    gj = legs_to_geojson(
-        spark.createDataFrame(legs), spark_model["stops_dim"]
-    ).toPandas()
-    assert len(gj) == legs["pair_id"].nunique()
-    for s in gj["geojson"]:
-        obj = json.loads(s)
-        assert obj["type"] == "FeatureCollection"
-        assert len(obj["features"]) >= 1
-        for f in obj["features"]:
-            assert f["geometry"]["type"] == "LineString"
-
-
 def test_geojson_model_geometry(spark, spark_model, legs):
     """Reference leg geometry (to_geojson.rs): transfer legs follow the
     street graph, transit legs pass through intermediate pattern stops,
     waiting legs are Points."""
     import json
-
-    from ferrobus_spark.routing.traced import legs_to_geojson_model
 
     gj = legs_to_geojson_model(
         spark.createDataFrame(legs), spark_model
@@ -119,6 +102,7 @@ def test_geojson_model_geometry(spark, spark_model, legs):
     for s in gj["geojson"]:
         obj = json.loads(s)
         assert obj["type"] == "FeatureCollection"
+        assert len(obj["features"]) >= 1
         for f in obj["features"]:
             t = f["properties"]["leg_type"]
             kinds_seen.add(t)
