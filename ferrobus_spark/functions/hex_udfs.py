@@ -1,19 +1,14 @@
-"""Hex-grid column functions (no per-row Python).
+"""Hex-grid column functions (no Python at all).
 
-:func:`cell_expr_col` encodes latlng→cell as a pure Column expression
-(whole-stage codegen, no Python at all). :func:`grid_disk_col` is an
-Arrow-batched pandas UDF that delegates to the pure-NumPy kernels in
-:mod:`ferrobus_spark.hexgrid` — the batched-H3 shape the north rule
-prescribes.
+:func:`cell_expr_col` encodes latlng→cell and :func:`grid_disk_col`
+expands a cell to its k-ring, both as pure Column expressions that run
+in whole-stage codegen.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ferrobus_spark import hexgrid
 
@@ -27,24 +22,13 @@ def cell_expr_col(lon, lat, res: int) -> Column:
     return F.expr(hexgrid.cell_sql(lon_s, lat_s, res))
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _grid_disk_udf(cell: pd.Series, k: pd.Series) -> pd.Series:
-    cells = cell.to_numpy(np.int64)
-    kk = int(k.iloc[0])
-    offs = hexgrid.grid_disk_offsets(kk)  # (m, 2)
-    q, r, res = hexgrid.cell_to_qr(cells)
-    # vectorized outer sum: (n, m) neighbor grids
-    nq = q[:, None] + offs[None, :, 0]
-    nr = r[:, None] + offs[None, :, 1]
-    flat = (
-        res[:, None] * np.int64(hexgrid.RES_SHIFT)
-        + (nq + hexgrid.OFF) * np.int64(hexgrid.Q_SHIFT)
-        + (nr + hexgrid.OFF)
-    )
-    return pd.Series(list(flat))
+def grid_disk_col(cell: str, k: int) -> Column:
+    """cell → array of k-ring neighbor cells (H3 ``grid_disk`` analogue).
 
-
-def grid_disk_col(cell: Column | str, k: int) -> Column:
-    """cell → array of k-ring neighbor cells (H3 ``grid_disk`` analogue)."""
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    return _grid_disk_udf(cell, F.lit(k))
+    A neighbor at axial offset (dq, dr) is ``cell + dq*Q_SHIFT + dr`` in
+    the packed id (``r + OFF`` stays inside its 29 bits), listed in
+    :func:`hexgrid.grid_disk`'s order. One SQL string, not a Column call
+    per neighbor, keeps the driver-side build cheap.
+    """
+    offsets = (int(dq) * hexgrid.Q_SHIFT + int(dr) for dq, dr in hexgrid.grid_disk_offsets(k))
+    return F.expr("array(" + ", ".join(f"{cell} + {off}" for off in offsets) + ")")

@@ -31,6 +31,7 @@ import shutil
 from pyspark.sql import SparkSession
 
 from ferrobus_spark.model.build import TransitModel, build_model
+from ferrobus_spark.plans.checkpoint import read_parquet
 from ferrobus_spark.routing.csr import build_csr
 
 #: Bump for ANY change that alters cached bytes under the same fixture:
@@ -105,7 +106,7 @@ def load_or_build_model(
             shutil.rmtree(tmp, ignore_errors=True)
 
     tables = {
-        name: spark.read.parquet(os.path.join(cdir, name))
+        name: read_parquet(spark, os.path.join(cdir, name))
         for name in sorted(os.listdir(cdir))
         if name != _MARKER and name != "points" and not name.startswith(".")
     }
@@ -153,7 +154,7 @@ def load_or_build_points(
             shutil.rmtree(tmp, ignore_errors=True)
 
     return {
-        name: spark.read.parquet(os.path.join(pdir, name))
+        name: read_parquet(spark, os.path.join(pdir, name))
         for name in sorted(os.listdir(pdir))
         if name != _MARKER and not name.startswith(".")
     }

@@ -10,7 +10,9 @@ These are the engine's backbone (SURVEY.md §7 step 2, north-rule metric):
   refinement only on boundary cells, with interior cells accepted
   without refinement.
 * :func:`knn_join` — k-ring candidate generation + Haversine + window
-  rank (reference J1/J2, streets/network.rs:31-37 R-tree NN).
+  rank (reference J1/J2, streets/network.rs:31-37 R-tree NN): the small
+  broadcast target side is expanded to its rings, so the point side runs
+  in codegen with no Python exec node.
 """
 
 from __future__ import annotations
@@ -140,33 +142,38 @@ def knn_join(
     plat: str = "lat",
     tlon: str = "lon",
     tlat: str = "lat",
-    broadcast_targets: bool = True,
 ) -> DataFrame:
     """k nearest targets per point via k-ring candidate join.
 
-    Both sides are hex-encoded at ``res``; each point explodes its
-    ``grid_disk(ring)`` neighborhood and equi-joins target cells — the
-    distributed analogue of the reference's R-tree NN
-    (streets/network.rs:31-37). Exact within the ring radius: callers
-    pick (res, ring) so the k-th neighbor is always closer than the
-    minimum distance guaranteed by the ring (inradius*(ring) cells).
+    Both sides are hex-encoded at ``res``; each (broadcast) target
+    explodes its ``grid_disk(ring)`` neighborhood and every point
+    equi-joins on its own cell — the distributed analogue of the
+    reference's R-tree NN (streets/network.rs:31-37). Hex distance is
+    symmetric, so these are the pairs a point-side ring would give.
+    Exact within the ring radius: callers pick (res, ring) so the k-th
+    neighbor is always closer than the minimum distance guaranteed by
+    the ring (inradius*(ring) cells).
 
     Returns (point_id, target_id, dist_m, knn_rank).
     """
-    p = assign_cells(points, plon, plat, res, "__pcell").select(
+    p = points.select(
         point_id,
         F.col(plon).alias("__plon"),
         F.col(plat).alias("__plat"),
-        F.explode(grid_disk_col("__pcell", ring)).alias("__cell"),
+        # a non-nullable key: a nullable one makes Catalyst infer
+        # isnotnull(cell) and push it below the lon/lat projection,
+        # inlining the whole cell expression into a sort method too big
+        # for the JIT; -1 is no cell id, so null points still join nothing
+        F.coalesce(cell_expr_col(plon, plat, res), F.lit(-1)).alias("__cell"),
     )
-    t = assign_cells(targets, tlon, tlat, res, "__cell").select(
-        target_id,
-        F.col(tlon).alias("__tlon"),
-        F.col(tlat).alias("__tlat"),
-        "__cell",
+    t = F.broadcast(
+        assign_cells(targets, tlon, tlat, res, "__tcell").select(
+            target_id,
+            F.col(tlon).alias("__tlon"),
+            F.col(tlat).alias("__tlat"),
+            F.explode(grid_disk_col("__tcell", ring)).alias("__cell"),
+        )
     )
-    if broadcast_targets:
-        t = F.broadcast(t)
     cand = p.join(t, "__cell", "inner").withColumn(
         "dist_m", haversine_col("__plon", "__plat", "__tlon", "__tlat")
     )

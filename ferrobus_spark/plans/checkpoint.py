@@ -25,6 +25,7 @@ from collections.abc import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 Stage = tuple[str, Callable[..., DataFrame], list[str]]  # (name, fn, upstreams)
 
@@ -56,6 +57,38 @@ def footer_rows(path: str) -> dict[int, int]:
             p = int(f.split("-")[1])
             rows[p] = rows.get(p, 0) + pq.read_metadata(os.path.join(path, f)).num_rows
     return dict(sorted(rows.items()))
+
+
+#: absolute path → (its files' (name, size, mtime_ns), inferred schema)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _files_key(path: str) -> tuple:
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _, names in os.walk(path) for f in names
+    )
+    stats = ((f, os.stat(f)) for f in files)
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a path's schema once per
+    process: inference runs a Spark job over the footers, so later reads
+    of the same, unchanged files bind the cached schema and start none.
+    A file added, removed, resized or touched re-infers. Local paths
+    only, the same assumption as :func:`footer_rows`; any other path is
+    a plain read.
+    """
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    path = os.path.abspath(path)
+    key = _files_key(path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
 
 
 def write_stage(
@@ -110,7 +143,7 @@ def run_pipeline(
     for name, fn, upstreams in stages:
         data, _, _ = _paths(root, name)
         if stage_is_complete(root, name):
-            env[name] = spark.read.parquet(data)
+            env[name] = read_parquet(spark, data)
             continue
         os.makedirs(os.path.dirname(data), exist_ok=True)
         df = fn(spark, env)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ferrobus_spark import hexgrid
 from ferrobus_spark.functions.geo import haversine_sql, lonlat_sql
+from ferrobus_spark.plans.checkpoint import read_parquet
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -43,12 +44,12 @@ def register(name: str, oracle: str | Callable[[], str] | None = None):
     return deco
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _read(spark, sf_dir, "documents")
 
 
 # ---------------------------------------------------------------------------
@@ -231,16 +232,18 @@ def q_knn_nearest_stop(spark, sf_dir):
 def q_knn_nearest_stop_kring(spark, sf_dir):
     """The SAME 1-NN answer through the 100×-scale plan: k-ring candidate
     cells + equi-join (``spatial.knn_join``) instead of the broadcast
-    crossJoin+window baseline — no crossJoin anywhere, candidates are a
-    cell-key equi-join, so the shape survives a billion-point left side.
-    Hash-gated against the IDENTICAL brute-force oracle; coverage proof:
-    the farthest true 1-NN in the synthetic geo layout is 41.8 km
-    (≈0.48° lon at 37.8°N) and ring=2 at res=1 guarantees candidate
-    coverage past 2×inradius = 0.87°."""
+    crossJoin+window baseline — no crossJoin anywhere: the 8 stops (a
+    ``VALUES`` local relation) are broadcast with their 19-cell rings and
+    each page equi-joins on its own cell, so the shape survives a
+    billion-point left side and runs no Python. Hash-gated against the
+    IDENTICAL brute-force oracle; coverage proof: the farthest true 1-NN
+    in the synthetic geo layout is 41.8 km (≈0.48° lon at 37.8°N) and
+    ring=2 at res=1 guarantees candidate coverage past 2×inradius =
+    0.87°."""
     from ferrobus_spark.operators.spatial import knn_join
 
     docs = _docs_geo(spark, sf_dir)
-    stops = spark.createDataFrame(STOPS, "stop_id INT, slon DOUBLE, slat DOUBLE")
+    stops = spark.sql(f"SELECT * FROM VALUES {_STOPS_VALUES} AS v(stop_id, slon, slat)")
     knn = knn_join(
         docs, stops, k=1, res=1, ring=2,
         point_id="doc_id", target_id="stop_id", tlon="slon", tlat="slat",

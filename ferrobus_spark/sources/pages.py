@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ferrobus_spark.functions.geo import lonlat_cols
+from ferrobus_spark.plans.checkpoint import read_parquet
 
 #: Zipf-ish domain pool — weights fall off harmonically via modulo bias.
 _DOMAINS = [
@@ -24,7 +25,7 @@ _DOMAINS = [
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
 #: bucket upper bounds for the harmonic-ish domain skew (h%64 → 8 domains)

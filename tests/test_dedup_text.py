@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ferrobus_spark.operators.dedup import (
-    _minhash,
     _shingle_hashes,
     minhash_lsh_pairs,
     minhash_signatures,

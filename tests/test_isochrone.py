@@ -3,19 +3,10 @@
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from ferrobus_spark.model.build import build_model
 from ferrobus_spark.operators import isochrone as iso
 from ferrobus_spark.routing.points import build_point_tables
-from ferrobus_spark.routing.timetable import build_timetable_csr
-from ferrobus_spark.sources.transit import (
-    MAX_TRANSFER_TIME,
-    QUERY_DATE,
-    node_lonlat,
-    to_spark,
-    transit_fixture,
-)
+from ferrobus_spark.sources.transit import node_lonlat
 from tests.oracle import transit_oracle as O
 
 # polygon over the city grid core

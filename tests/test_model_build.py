@@ -2,17 +2,7 @@
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
-
-from ferrobus_spark.model.build import build_model
-from ferrobus_spark.sources.transit import (
-    MAX_TRANSFER_TIME,
-    QUERY_DATE,
-    to_spark,
-    transit_fixture,
-)
-from tests.oracle import transit_oracle as O
 
 
 def test_active_service_filtering(spark_model, oracle_model):

@@ -1,6 +1,5 @@
 """Range routing + Pareto front vs oracle — exact journey-set parity."""
 
-import pandas as pd
 import pytest
 
 from ferrobus_spark.routing.points import build_point_tables
@@ -141,7 +140,7 @@ def test_warm_start_tie_semantics():
     import numpy as np
 
     from ferrobus_spark.routing.raptor import raptor, rraptor
-    from ferrobus_spark.routing.timetable import INF, Timetable
+    from ferrobus_spark.routing.timetable import Timetable
 
     tt = Timetable(
         n_stops=3,

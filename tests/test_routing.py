@@ -1,23 +1,14 @@
 """Routing kernels vs the pure-Python oracle — exact integer parity."""
 
-import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from ferrobus_spark.model.build import build_model
 from ferrobus_spark.routing import products
 from ferrobus_spark.routing.points import build_point_tables
 from ferrobus_spark.routing.raptor import raptor as spark_raptor
 from ferrobus_spark.routing.timetable import INF as TT_INF
 from ferrobus_spark.routing.timetable import build_timetable_csr
-from ferrobus_spark.sources.transit import (
-    MAX_TRANSFER_TIME,
-    QUERY_DATE,
-    query_points,
-    to_spark,
-    transit_fixture,
-)
+from ferrobus_spark.sources.transit import query_points
 from tests.oracle import transit_oracle as O
 
 DEPARTURE = 8 * 3600

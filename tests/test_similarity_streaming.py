@@ -1,7 +1,6 @@
 """Similarity search operators (top-k, near-duplicate pairs)."""
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 

@@ -7,7 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from ferrobus_spark.operators.skew import heavy_hitters, salted_count, salted_join
-from ferrobus_spark.plans.checkpoint import pipeline_metrics, run_pipeline, write_stage
+from ferrobus_spark.plans.checkpoint import (
+    pipeline_metrics,
+    read_parquet,
+    run_pipeline,
+    write_stage,
+)
 from ferrobus_spark.plans.iterative import cleanup, connected_components, materialize
 from ferrobus_spark.registry import CELL_REF_SQL
 from ferrobus_spark.sources.pages import pages_table
@@ -163,6 +168,26 @@ def test_write_stage_job_budget_and_lineage(spark, tmp_path):
         assert json.load(f)["partition_rows"] == {"0": 25, "1": 25, "2": 25, "3": 25}
     (metrics,) = pipeline_metrics(root)
     assert (metrics["rows"], metrics["partitions"]) == (100, 4)
+
+
+def test_read_parquet_infers_once_per_unchanged_path(spark, tmp_path):
+    """read_parquet infers a path's schema with a job once; later reads of
+    the unchanged files bind it and start none; a rewrite re-infers."""
+    path = str(tmp_path / "t")
+    spark.range(0, 10, 1, 2).selectExpr("id", "CAST(id AS STRING) AS s").write.parquet(path)
+    first: list = []
+    assert _jobs_in_group(spark, lambda: first.append(read_parquet(spark, path))) >= 1
+    again: list = []
+    assert _jobs_in_group(spark, lambda: again.append(read_parquet(spark, path))) == 0
+    inferred = spark.read.parquet(path).schema
+    assert first[0].schema == again[0].schema == inferred
+    assert sorted(again[0].collect()) == sorted(first[0].collect())
+
+    spark.range(0, 5, 1, 1).selectExpr("id", "id * 2 AS x").write.mode("overwrite").parquet(path)
+    fresh: list = []
+    assert _jobs_in_group(spark, lambda: fresh.append(read_parquet(spark, path))) >= 1
+    assert fresh[0].schema == spark.read.parquet(path).schema
+    assert fresh[0].columns == ["id", "x"]
 
 
 def test_reread_schema_equals_inferred(spark, tmp_path):

@@ -7,7 +7,9 @@ from pyspark.sql import functions as F
 
 from ferrobus_spark import hexgrid as hg
 from ferrobus_spark.functions.geo import lonlat_numpy
+from ferrobus_spark.functions.hex_udfs import grid_disk_col
 from ferrobus_spark.operators.spatial import assign_cells, knn_join, pip_join
+from ferrobus_spark.registry import _docs_geo
 from ferrobus_spark.sources.pages import pages_table
 
 RES = 9
@@ -144,5 +146,59 @@ def test_knn_join_plan_has_no_cartesian(spark, pages):
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # the candidate join IS an equi-join on the exploded cell key
+    # the candidate join IS an equi-join: each point's own cell against
+    # the targets' exploded rings
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
+
+
+def _subtree(plan: str, node: str) -> str:
+    """The lines of ``plan``'s tree string under the first ``node``."""
+    lines = plan.splitlines()
+    start = next(i for i, ln in enumerate(lines) if node in ln)
+    depth = lines[start].index(node)
+    out = [lines[start]]
+    for ln in lines[start + 1:]:
+        body = ln.lstrip(" :|+-")
+        if len(ln) - len(body) <= depth:
+            break
+        out.append(ln)
+    return "\n".join(out)
+
+
+def test_knn_join_plan_runs_no_python(spark, sf_dir):
+    """The ring expansion is a codegen ``Generate`` on the broadcast
+    target side, and no Python exec node runs. The point-side scan has
+    no data filter: a nullable join key would make Catalyst infer
+    ``isnotnull(cell)`` and push it down there, inlining the whole cell
+    expression into a sort method too large for the JIT."""
+    targets = spark.sql(
+        "SELECT * FROM VALUES (0, -122.45D, 37.75D), (1, -122.41D, 37.77D)"
+        " AS v(target_id, lon, lat)"
+    )
+    pts = _docs_geo(spark, sf_dir).withColumnRenamed("doc_id", "point_id")
+    plan = (
+        knn_join(pts, targets, k=1, res=1, ring=2)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in plan, node
+    assert plan.count("Generate") == 1
+    assert "Generate" in _subtree(plan, "BroadcastExchange")
+    (scan,) = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert "DataFilters: []" in scan, scan
+
+
+@pytest.mark.parametrize("res", [0, 1, 6, 9, 15])
+def test_grid_disk_col_matches_numpy(spark, res):
+    """The Column k-ring equals ``hexgrid.grid_disk``, order included,
+    for centres on both sides of the axial origin."""
+    qs = [-200000, -3, -1, 0, 2, 150000]
+    cells = [int(hg.qr_to_cell(q, r, res)) for q in qs for r in qs]
+    df = spark.createDataFrame(pd.DataFrame({"cell": np.array(cells, np.int64)}))
+    got = df.select(
+        "cell", *[grid_disk_col("cell", k).alias(f"k{k}") for k in range(4)]
+    ).collect()
+    assert len(got) == len(cells)
+    for row in got:
+        for k in range(4):
+            assert row[f"k{k}"] == hg.grid_disk(row["cell"], k).tolist(), (row["cell"], k)

@@ -1,8 +1,6 @@
 """Traced journeys: leg-chain invariants + consistency with untraced."""
 
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from ferrobus_spark.routing.points import build_point_tables
 from ferrobus_spark.routing.traced import detailed_journeys, legs_to_geojson_model

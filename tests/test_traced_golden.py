@@ -5,7 +5,7 @@ engine's traced kernel."""
 import numpy as np
 import pytest
 
-from ferrobus_spark.routing.timetable import INF, Timetable
+from ferrobus_spark.routing.timetable import Timetable
 from ferrobus_spark.routing.traced import (
     TracedState,
     _reconstruct,

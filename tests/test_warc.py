@@ -35,7 +35,6 @@ def test_warc_roundtrip(spark, sf_dir):
 def test_warc_gzip_roundtrip(spark, sf_dir):
     """Common-Crawl layout: one gzip member per record, .warc.gz files."""
     import glob
-    import gzip
     import os
 
     pages = pages_table(spark, sf_dir).localCheckpoint()
