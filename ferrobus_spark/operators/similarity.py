@@ -4,14 +4,18 @@
   row-normalized NumPy matrix, queries stream through ``mapInPandas``
   doing one BLAS matmul per Arrow batch. The baseline and the verifier
   for the approximate paths.
-* :func:`lsh_topk` — random-hyperplane LSH: sign-bit signatures →
-  per-(table, bucket) cogroup scoring a bounded-memory top-k per query.
-  The scale path when the corpus no longer broadcasts (both sides stay
-  distributed; each bucket block meets its queries exactly once).
+* :func:`lsh_topk` — random-hyperplane LSH: sign-bit signatures put each
+  vector in one (table, bucket) group per table, and :func:`_group_topk`
+  scores every group's queries against its corpus. The scale path when
+  the corpus no longer broadcasts (both sides stay distributed; each
+  group meets its queries exactly once).
+* :func:`ivf_topk` — inverted-file search: the same :func:`_group_topk`
+  with k-means lists as groups, each query probing its nearest lists.
 * :func:`cosine_neardup_pairs` — embedding near-duplicate detection
   (cosine ≥ threshold) via the same LSH candidates.
 
-Deterministic: hyperplanes come from a fixed-seed generator.
+Deterministic: hyperplanes come from a fixed-seed generator. Self-matches
+(query id == neighbor id) are never returned.
 """
 
 from __future__ import annotations
@@ -38,18 +42,33 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-# Matmul block bounds for the cogroup top-k kernels. Peak sims memory per
-# Python task is _Q_CHUNK × _C_CHUNK doubles (128 MB) REGARDLESS of how
-# large an inverted list or LSH bucket a single cogroup task receives —
-# the round-7 fix for the one remaining 100×-scale hazard: at 100 TB one
-# IVF list ≈ corpus/n_lists, and the round-6 kernel held the whole
-# (queries_probing_list × list_size) sims matrix in one allocation.
-# lsh_topk/ivf_topk capture these into their kernel closures at
-# plan-build time (cloudpickle ships closure VALUES to workers), so
-# tests can monkeypatch them down to single digits to force the merge
-# path — a worker's fresh module import would ignore a driver patch.
+# Matmul block bounds for _block_topk. Peak sims memory per Python task
+# is _Q_CHUNK × _C_CHUNK doubles (128 MB) however many queries and corpus
+# rows one group holds: at 100 TB one IVF list ≈ corpus/n_lists, and a
+# single (queries × list) sims matrix would not fit. _MAX_GROUP_ROWS
+# bounds the corpus vectors _group_topk holds for one group: a
+# template-heavy corpus can put millions of near-identical pages in one
+# LSH bucket. _group_topk reads all three at plan-build time
+# (cloudpickle ships closure VALUES to workers), so tests can monkeypatch
+# them down to single digits — a worker's fresh module import would
+# ignore a driver patch.
 _Q_CHUNK = 2048
 _C_CHUNK = 8192
+_MAX_GROUP_ROWS = 100_000
+
+_CAND_SCHEMA = T.StructType([
+    T.StructField("query_id", T.LongType()),
+    T.StructField("neighbor_id", T.LongType()),
+    T.StructField("cosine", T.DoubleType()),
+])
+
+# _sign_buckets and ivf_topk's assignment: one row per vector, carrying
+# the normalized vector and the ids of the groups it belongs to
+_GROUPED_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("vec", T.ArrayType(T.DoubleType())),
+    T.StructField("groups", T.ArrayType(T.LongType())),
+])
 
 
 def _block_topk(
@@ -58,7 +77,6 @@ def _block_topk(
     cids: np.ndarray,
     cm: np.ndarray,
     k: int,
-    exclude_self: bool,
     q_chunk: int = _Q_CHUNK,
     c_chunk: int = _C_CHUNK,
 ) -> dict:
@@ -70,9 +88,9 @@ def _block_topk(
     after every chunk, each chunk contributes a SUPERSET of its possible
     top-k rows via a per-row np.partition threshold (the (k+1)-th
     largest value — k+1 so a present self-match cannot crowd out a true
-    neighbor; the >= mask keeps every boundary tie), survivors
-    accumulate across chunks, and ONE global lexsort under the exact
-    (query, cosine DESC, id ASC) order ranks them (lexsort, not
+    neighbor; the >= mask keeps every boundary tie), self-matches drop,
+    survivors accumulate across chunks, and ONE global lexsort under the
+    exact (query, cosine DESC, id ASC) order ranks them (lexsort, not
     argpartition alone, because identical vectors DO tie exactly and
     must break by id, matching the DuckDB twins' window order). Exact:
     a query's true top-k within a chunk is inside that chunk's
@@ -112,9 +130,8 @@ def _block_topk(
         r_ = np.concatenate(acc_r)
         s_ = np.concatenate(acc_s)
         n_ = np.concatenate(acc_n)
-        if exclude_self:
-            keep = n_ != qi[r_]
-            r_, s_, n_ = r_[keep], s_[keep], n_[keep]
+        keep = n_ != qi[r_]
+        r_, s_, n_ = r_[keep], s_[keep], n_[keep]
         if not len(r_):
             continue
         order = np.lexsort((n_, -s_, r_))
@@ -133,64 +150,106 @@ def _block_topk(
     }
 
 
-def _sub_split(
-    qdf: DataFrame,
-    cdf: DataFrame,
-    keys: list[str],
-    max_rows: int,
-    sizes_from: DataFrame | None = None,
-    sizes_df: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, list[str]]:
-    """Bound cogroup GROUP size, not just the matmul inside it.
+def _group_topk(qrows: DataFrame, crows: DataFrame, k: int) -> DataFrame:
+    """Per-group exact top-k: each query scored against the corpus rows
+    that share one of its groups.
 
-    ``applyInPandas`` materializes each whole (keys) group in one Python
-    task before the kernel runs, so a mega-bucket/mega-list is an
-    executor OOM even with chunked scoring — the same hazard class the
-    dedup family's hot-bucket cap (``dedup._bucket_pairs``) guards.
-    Corpus rows in groups over ``max_rows`` are salted by id-hash into
-    ceil(size/max_rows) sub-groups; queries replicate to every sub-group of their group.
-    Exact: a group's top-k is contained in the union of its sub-groups'
-    top-ks (top-k(A ∪ B) ⊆ top-k(A) ∪ top-k(B)), and the caller's
-    (query, neighbor) dedup + global rank window finish the merge.
-    Queries in corpus-empty groups drop at the inner join — they would
-    have produced nothing anyway. Cost when no group is hot: one count
-    aggregation + two broadcast equi-joins (the sizes table is at most
-    one row per group key), every ``_nsub`` = 1. Pass ``sizes_from``
-    when a VECTOR-FREE restatement of cdf's group keys exists — the
-    counting pass then avoids re-serializing the wide vec column
-    through Arrow just to count rows (20× narrower at dim=64). Pass
-    ``sizes_df`` — a ready (keys..., _nsub) table — when the caller
-    already KNOWS the group sizes (ivf_topk computes them driver-side
-    from the training sample when it covers the whole corpus), which
-    skips the counting aggregation job entirely. ``_nsub`` is purely a
-    physical-distribution parameter: any value ≥ 1 yields identical
-    results (the union-of-sub-groups argument below), so an
-    approximately-sized table is safe.
+    Both sides are ``(id, vec, groups)`` rows of :data:`_GROUPED_SCHEMA`
+    with normalized vectors (dot == cosine). ``groups`` explodes in the
+    JVM to one row per membership; the sides union with a ``side`` byte
+    (0 = query), hash-partition on ``group`` and sort by (group, side,
+    id), so inside a partition each group arrives as its queries, then
+    its corpus. One ``mapInPandas`` kernel holds the current group's
+    queries and scores its corpus through :func:`_block_topk` in slices
+    of at most ``_MAX_GROUP_ROWS`` rows. Exact: top-k(A ∪ B) ⊆ top-k(A) ∪
+    top-k(B), so a rank window over the per-slice top-ks finishes the
+    merge. Memory: one Arrow batch, the group's queries and one slice.
+    Passing the same frame as both sides (a self-search) runs its pass
+    once and feeds both sides from it. Returns (query_id, neighbor_id,
+    cosine) candidates of :data:`_CAND_SCHEMA`; a pair recurs only when
+    it shares several groups.
     """
-    if sizes_df is not None:
-        sizes = sizes_df
-    else:
-        sizes = (
-            (sizes_from if sizes_from is not None else cdf)
-            .groupBy(*keys)
-            .agg(F.count("*").alias("_gsz"))
-            .withColumn(
-                "_nsub",
-                F.greatest(F.lit(1), F.ceil(F.col("_gsz") / F.lit(max_rows))).cast("int"),
-            )
-            .drop("_gsz")
+    q_chunk, c_chunk, max_rows = _Q_CHUNK, _C_CHUNK, _MAX_GROUP_ROWS
+
+    def members(df):
+        return df.select(F.explode("groups").alias("group"), "id", "vec")
+
+    if crows is qrows:
+        rows = members(qrows).withColumn(
+            "side", F.explode(F.array(F.lit(0).cast("byte"), F.lit(1).cast("byte")))
         )
-    cdf = (
-        cdf.join(sizes, keys)
-        .withColumn("sub", F.pmod(F.xxhash64(F.col("id")), F.col("_nsub")).cast("int"))
-        .drop("_nsub")
+    else:
+        rows = members(qrows).withColumn("side", F.lit(0).cast("byte")).unionByName(
+            members(crows).withColumn("side", F.lit(1).cast("byte"))
+        )
+
+    def kernel(batches):
+        group, held = None, 0
+        qs: list = []  # the current group's (ids, vectors) query pieces
+        cs: list = []  # its corpus pieces not yet scored, ``held`` rows
+        out: list = []
+
+        def score():
+            if qs and cs:
+                qi, qm = (np.concatenate(a) for a in zip(*qs))
+                ci, cm = (np.concatenate(a) for a in zip(*cs))
+                qs[:] = [(qi, qm)]
+                out.append(_block_topk(qi, qm, ci, cm, k, q_chunk, c_chunk))
+            cs.clear()
+
+        def emit():
+            frame = pd.DataFrame({
+                c: np.concatenate([o[c] for o in out]) for c in _CAND_SCHEMA.names
+            })
+            out.clear()
+            return frame
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            g = pdf["group"].to_numpy(np.int64)
+            side = pdf["side"].to_numpy()
+            ids = pdf["id"].to_numpy(np.int64)
+            vec = pdf["vec"].to_numpy()
+            cut = np.flatnonzero((g[1:] != g[:-1]) | (side[1:] != side[:-1])) + 1
+            for lo, hi in zip([0, *cut], [*cut, len(g)]):
+                if g[lo] != group:
+                    score()
+                    group, held = g[lo], 0
+                    qs.clear()
+                if side[lo] == 0:
+                    qs.append((ids[lo:hi], np.stack(vec[lo:hi])))
+                    continue
+                while qs and lo < hi:  # corpus rows: fill, score full slices
+                    n = min(hi - lo, max_rows - held)
+                    cs.append((ids[lo : lo + n], np.stack(vec[lo : lo + n])))
+                    lo, held = lo + n, held + n
+                    if held == max_rows:
+                        score()
+                        held = 0
+            if out:
+                yield emit()
+        score()
+        if out:
+            yield emit()
+
+    npart = rows.sparkSession.sparkContext.defaultParallelism
+    return (
+        rows.repartition(npart, "group")
+        .sortWithinPartitions("group", "side", "id")
+        .mapInPandas(kernel, _CAND_SCHEMA)
     )
-    qdf = (
-        qdf.join(sizes, keys)
-        .withColumn("sub", F.explode(F.sequence(F.lit(0), F.col("_nsub") - 1)))
-        .drop("_nsub")
+
+
+def _rank(cand: DataFrame, k: int) -> DataFrame:
+    """Top-k per query of (query_id, neighbor_id, cosine) candidates,
+    ties broken by neighbor id (the DuckDB twins' window order)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
     )
-    return qdf, cdf, [*keys, "sub"]
 
 
 def brute_force_topk(
@@ -200,17 +259,14 @@ def brute_force_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
     max_corpus_rows: int | None = 2_000_000,
-    on_overflow: str = "ivf",
 ) -> DataFrame:
     """Exact cosine top-k; corpus must fit in a broadcast (~GBs).
 
     Scale gate: the exact path driver-collects the corpus, which dies
     at 100× data. If the corpus exceeds ``max_corpus_rows``, fall back
-    to the distributed :func:`ivf_topk` (``on_overflow='ivf'``) or
-    raise with a clear message (``on_overflow='error'``). Pass
-    ``max_corpus_rows=None`` to force the exact path (oracle use)."""
+    to the distributed :func:`ivf_topk`. Pass ``max_corpus_rows=None``
+    to force the exact path (oracle use)."""
     if max_corpus_rows is not None:
         # gate and collect in ONE job (round 8: the former separate
         # limit(max+1).count() probe was a full extra scan): pull at
@@ -219,17 +275,7 @@ def brute_force_topk(
         # otherwise it IS the full corpus and is reused directly.
         cp = corpus.select(id_col, vec_col).limit(max_corpus_rows + 1).toPandas()
         if len(cp) > max_corpus_rows:
-            if on_overflow == "ivf":
-                return ivf_topk(
-                    spark, queries, corpus, k,
-                    id_col=id_col, vec_col=vec_col, exclude_self=exclude_self,
-                )
-            raise ValueError(
-                f"brute_force_topk: corpus has > "
-                f"max_corpus_rows={max_corpus_rows} rows; the exact path "
-                "broadcasts the whole corpus. Use ivf_topk/lsh_topk, or "
-                "pass max_corpus_rows=None to force the exact path."
-            )
+            return ivf_topk(spark, queries, corpus, k, id_col=id_col, vec_col=vec_col)
     else:
         cp = corpus.select(id_col, vec_col).toPandas()
     ids = cp[id_col].to_numpy(np.int64)
@@ -274,9 +320,8 @@ def brute_force_topk(
                     mask = sc >= thr[:, None]
                 r_, c_ = np.nonzero(mask)
                 s_, n_ = sc[r_, c_], cids[c_]
-                if exclude_self:
-                    keep = n_ != qi[r_]
-                    r_, s_, n_ = r_[keep], s_[keep], n_[keep]
+                keep = n_ != qi[r_]
+                r_, s_, n_ = r_[keep], s_[keep], n_[keep]
                 order = np.lexsort((n_, -s_, r_))
                 r_o, s_o, n_o = r_[order], s_[order], n_[order]
                 starts = np.flatnonzero(
@@ -307,53 +352,34 @@ def _hyperplanes(dim: int, n_bits: int) -> np.ndarray:
 
 
 def _sign_buckets(df: DataFrame, planes: np.ndarray, id_col: str, vec_col: str,
-                  n_tables: int, bits_per_table: int, spark: SparkSession,
-                  include_vec: bool = False) -> DataFrame:
-    """(id, table, bucket[, vec]) rows.
+                  n_tables: int, bits_per_table: int, spark: SparkSession) -> DataFrame:
+    """(id, vec, groups) rows of :data:`_GROUPED_SCHEMA`: the NORMALIZED
+    vector and its ``n_tables`` LSH groups, each packing (table, bucket)
+    as ``table << bits_per_table | bucket``.
 
-    With ``include_vec=False`` the rows are ids ONLY — the shape
-    :func:`lsh_topk`'s bucket-size count uses. ``include_vec=True``
-    additionally carries the NORMALIZED vector so the bucket cogroup in
-    :func:`lsh_topk` can score each bucket block with one matmul; that
-    costs one vector copy per table membership (×n_tables), which is
-    LINEAR in corpus size — versus one copy per CANDIDATE PAIR in the
-    former join-back re-rank, which grows with bucket occupancy² (the
-    round-6 IVF lesson; see ivf_topk's docstring).
+    Carrying the vector costs one copy per table membership (×n_tables)
+    once ``groups`` explodes, which is LINEAR in corpus size — versus one
+    copy per CANDIDATE PAIR in a join-back re-rank, which grows with
+    bucket occupancy² (the round-6 IVF lesson; see ivf_topk's docstring).
     """
     bc = spark.sparkContext.broadcast(planes)
-    fields = [
-        T.StructField("id", T.LongType()),
-        T.StructField("table", T.IntegerType()),
-        T.StructField("bucket", T.LongType()),
-    ]
-    if include_vec:
-        fields.append(T.StructField("vec", T.ArrayType(T.DoubleType())))
-    out_t = T.StructType(fields)
+    pw = 1 << np.arange(bits_per_table, dtype=np.int64)
+    table = np.arange(n_tables, dtype=np.int64) << bits_per_table
 
     def kernel(batches):
         pl = bc.value
         for pdf in batches:
             mat = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            ids = pdf[id_col].to_numpy(np.int64)
-            signs = (mat @ pl.T) >= 0  # (n, n_bits)
-            rows = {"id": [], "table": [], "bucket": []}
-            if include_vec:
-                rows["vec"] = []
-                vlist = mat.tolist()
-            pw = (1 << np.arange(bits_per_table, dtype=np.int64))
-            for t in range(n_tables):
-                chunk = signs[:, t * bits_per_table : (t + 1) * bits_per_table]
-                buckets = (chunk.astype(np.int64) * pw).sum(axis=1)
-                rows["id"] += ids.tolist()
-                rows["table"] += [t] * len(ids)
-                rows["bucket"] += buckets.tolist()
-                if include_vec:
-                    rows["vec"] += vlist
-            yield pd.DataFrame(rows)
+            signs = ((mat @ pl.T) >= 0).reshape(len(mat), n_tables, bits_per_table)
+            yield pd.DataFrame({
+                "id": pdf[id_col].to_numpy(np.int64),
+                "vec": list(mat),
+                "groups": list((signs * pw).sum(axis=2) + table),
+            })
 
     from ferrobus_spark.plans.partitioning import spread_for_kernel
 
-    return spread_for_kernel(df.select(id_col, vec_col)).mapInPandas(kernel, out_t)
+    return spread_for_kernel(df.select(id_col, vec_col)).mapInPandas(kernel, _GROUPED_SCHEMA)
 
 
 def lsh_topk(
@@ -365,9 +391,7 @@ def lsh_topk(
     vec_col: str = "embedding",
     n_tables: int = 8,
     bits_per_table: int = 8,
-    exclude_self: bool = True,
     dim: int | None = None,
-    max_bucket_size: int | None = 100_000,
 ) -> DataFrame:
     """Approximate cosine top-k via random-hyperplane bucket join.
 
@@ -376,81 +400,33 @@ def lsh_topk(
     ad-hoc use (same contract as ``n_hashes`` in
     :func:`~ferrobus_spark.operators.dedup.minhash_lsh_pairs`).
 
-    ``max_bucket_size`` bounds the corpus rows one cogroup task can
-    receive (see :func:`_sub_split`) — a template-heavy corpus can put
-    millions of near-identical pages in ONE (table, bucket) group,
-    which ``applyInPandas`` would otherwise materialize whole in a
-    single Python worker. ``None`` disables the guard (oracle twins)."""
+    Each (table, bucket) group is scored by :func:`_group_topk`, so only
+    its top-k pairs survive and the dedup below sees ≤ n_tables·k rows
+    per query instead of every bucket collision (~625/query at sf1.0).
+    Exact: any global top-k neighbor shares ≥ 1 bucket with the query
+    and ranks ≤ k inside it, so the union of per-bucket top-ks contains
+    the global top-k; ties break (cosine DESC, id ASC) at both levels.
+    The in-bucket score IS the returned cosine — selection and final
+    ranking use ONE score. Cross-bucket dedup is a groupBy max, not
+    distinct(): the same pair scored in two different-sized blocks may
+    differ in the last ulp (BLAS kernel choice varies with matrix
+    shape), and distinct() would then leak both rows into the rank
+    window. A self-search (``corpus is queries``) signs once."""
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     planes = _hyperplanes(dim, n_tables * bits_per_table)
-    qb = _sign_buckets(queries, planes, id_col, vec_col, n_tables,
-                       bits_per_table, spark, include_vec=True)
-    cb = _sign_buckets(corpus, planes, id_col, vec_col, n_tables,
-                       bits_per_table, spark, include_vec=True)
-    # Per-bucket cogroup top-k (the round-6 IVF shape): each (table,
-    # bucket) block is scored with the doubly-chunked _block_topk kernel
-    # — one bounded matmul per (query, corpus) chunk pair, so a
-    # template-corpus mega-bucket can no longer hold a full-bucket sims
-    # matrix in one task — and only its top-k pairs survive, so the
-    # dedup below sees ≤ n_tables·k rows per query instead of every
-    # bucket collision (~625/query at sf1.0). Exact: any global top-k
-    # neighbor shares ≥ 1 bucket with the query and ranks ≤ k inside
-    # it, so the union of per-bucket top-ks contains the global top-k;
-    # ties break (cosine DESC, id ASC) at both levels, and only
-    # identical vectors tie exactly. Round 7 (advisor): the in-bucket
-    # score IS the returned cosine — selection and final ranking use
-    # ONE score, closing the near-tie k-boundary inversion between the
-    # former numpy selection score and the join-back recompute, and
-    # dropping two shuffle joins + a pandas-UDF recompute. Cross-bucket
-    # dedup is a groupBy max, not distinct(): the same pair scored in
-    # two different-sized bucket blocks may differ in the last ulp
-    # (BLAS kernel choice varies with matrix shape), and distinct()
-    # would then leak both rows into the rank window. Identical vectors
-    # share identical signatures, so exact ties are always scored in
-    # the same blocks and stay exactly tied.
-    pre_t = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
 
-    # read the chunk bounds HERE (driver, plan-build time) so the kernel
-    # closure ships the values — tests shrink them via monkeypatch
-    q_chunk, c_chunk = _Q_CHUNK, _C_CHUNK
+    def sign(df):
+        return _sign_buckets(df, planes, id_col, vec_col, n_tables, bits_per_table, spark)
 
-    def bucket_topk(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cosine": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "cosine": "float64"})
-        return pd.DataFrame(_block_topk(
-            qpdf["id"].to_numpy(np.int64),
-            np.stack(qpdf["vec"].to_numpy()),
-            cpdf["id"].to_numpy(np.int64),
-            np.stack(cpdf["vec"].to_numpy()),
-            k, exclude_self, q_chunk, c_chunk,
-        ))
-
-    gkeys = ["table", "bucket"]
-    if max_bucket_size is not None:
-        cb_ids = _sign_buckets(corpus, planes, id_col, vec_col, n_tables,
-                               bits_per_table, spark, include_vec=False)
-        qb, cb, gkeys = _sub_split(qb, cb, gkeys, max_bucket_size,
-                                   sizes_from=cb_ids)
+    qrows = sign(queries)
+    crows = qrows if corpus is queries else sign(corpus)
     cand = (
-        qb.groupBy(*gkeys)
-        .cogroup(cb.groupBy(*gkeys))
-        .applyInPandas(lambda qp, cp: bucket_topk(qp, cp), pre_t)
+        _group_topk(qrows, crows, k)
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank(cand, k)
 
 
 def train_ivf_centroids(
@@ -494,10 +470,8 @@ def ivf_topk(
     vec_col: str = "embedding",
     n_lists: int | None = None,
     n_probe: int = 4,
-    exclude_self: bool = True,
     seed: int = 20240503,
     max_train: int = 100_000,
-    max_list_size: int | None = 200_000,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means coarse quantizer →
     corpus partitioned by nearest centroid (the inverted lists) → each
@@ -507,39 +481,28 @@ def ivf_topk(
     The scale shape: centroids are a tiny broadcast model trained on a
     bounded deterministic sample (first ``max_train`` ids — a TakeOrdered
     top-k, not a full sort; the FAISS-style practice of training the
-    quantizer on a sample); the re-rank is a COGROUP on ``list_id`` —
-    each inverted list meets its probing queries once, a numpy matmul
-    scores the whole list block in one BLAS call, and only the per-list
-    top-k survives, so the global top-k window sees n_probe·k rows per
-    query instead of every candidate. The former shape (equi-join
-    carrying both vectors per candidate row, then a row-wise dot) moved
-    each vector once per CANDIDATE PAIR — ~200M wide rows / ~200 GB of
-    traffic at sf1.0, measured 194-214 s on local[8] whether the dot ran
-    as a Catalyst HOF or an Arrow UDF; the cogroup moves each vector
-    once per list MEMBERSHIP (corpus: once; queries: n_probe times) and
-    measured 17 s — 12.7×. Per-list top-k is exact: a corpus vector lives in
-    exactly one list, so the global top-k is a subset of the union of
-    per-list top-ks, with ties broken (sim DESC, neighbor_id) at both
-    levels.
+    quantizer on a sample); the re-rank is :func:`_group_topk` with
+    ``list_id`` as the group — each inverted list meets its probing
+    queries once, numpy matmuls score the list block, and only the
+    per-list top-k survives, so the global top-k window sees n_probe·k
+    rows per query instead of every candidate. The former shape
+    (equi-join carrying both vectors per candidate row, then a row-wise
+    dot) moved each vector once per CANDIDATE PAIR — ~200M wide rows /
+    ~200 GB of traffic at sf1.0, measured 194-214 s on local[8]; the
+    grouped shape moves each vector once per list MEMBERSHIP (corpus:
+    once; queries: n_probe times) and measured 17 s — 12.7×. Per-list
+    top-k is exact: a corpus vector lives in exactly one list, so the
+    global top-k is a subset of the union of per-list top-ks, with ties
+    broken (sim DESC, neighbor_id) at both levels.
 
-    Round-7 scale bounds (the last 100× hazard the round-6 verdict named):
-
-    * ``n_lists=None`` (the default) auto-sizes from a corpus count —
-      ≈√N, the published FAISS guidance — clamped to [16, max_train//39]
-      (FAISS warns below ~39 training points per centroid) so one
-      inverted list is ≈√N rows instead of corpus/16, and the
-      driver-side Lloyd stays bounded by the training sample. Pass an
-      explicit ``n_lists`` to pin it (the driver-gate queries pin 16 so
-      their DuckDB quantizer twins stay bit-reproducible).
-    * ``rerank`` scores through :func:`_block_topk`: _Q_CHUNK×_C_CHUNK
-      matmul blocks with a running per-query top-k merge, so a single
-      task's sims allocation is ~128 MB no matter how large its list —
-      the former one-shot ``qm @ cm.T`` held (queries_probing_list ×
-      list_size) doubles, an executor OOM at 100 TB list widths.
-    * ``max_list_size`` bounds the GROUP a cogroup task materializes
-      (:func:`_sub_split`): even a skewed quantizer or an explicit
-      small ``n_lists`` cannot hand one Python worker more than
-      ``max_list_size`` corpus vectors.
+    ``n_lists=None`` (the default) auto-sizes from a corpus count —
+    ≈√N, the published FAISS guidance — clamped to [16, max_train//39]
+    (FAISS warns below ~39 training points per centroid) so one inverted
+    list is ≈√N rows instead of corpus/16, and the driver-side Lloyd
+    stays bounded by the training sample. Pass an explicit ``n_lists``
+    to pin it (the driver-gate queries pin 16 so their DuckDB quantizer
+    twins stay bit-reproducible). However skewed the lists, a worker
+    holds at most ``_MAX_GROUP_ROWS`` corpus vectors of one list.
     """
     if n_lists is None:
         # parquet-footer-cheap count; √N per FAISS practice. The clamp
@@ -551,114 +514,32 @@ def ivf_topk(
         np.stack(train[vec_col].to_numpy()), n_lists, seed
     )
     bc = spark.sparkContext.broadcast(cn)
+    from ferrobus_spark.plans.partitioning import spread_for_kernel
 
-    def assign(n_nearest: int, include_vec: bool = True):
-        fields = [T.StructField("id", T.LongType())]
-        if include_vec:
-            fields.append(T.StructField("vec", T.ArrayType(T.DoubleType())))
-        fields.append(T.StructField("list_id", T.IntegerType()))
-        out_t = T.StructType(fields)
+    def assign(df: DataFrame, n_nearest: int) -> DataFrame:
+        """(id, vec, groups = the ``n_nearest`` nearest list ids) rows."""
 
         def kernel(batches):
             cents = bc.value
             for pdf in batches:
                 if len(pdf) == 0:
-                    cols = {"id": pd.Series(dtype="int64")}
-                    if include_vec:
-                        cols["vec"] = pd.Series(dtype="object")
-                    cols["list_id"] = pd.Series(dtype="int32")
-                    yield pd.DataFrame(cols)
                     continue
                 mat = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-                ids = pdf[id_col].to_numpy(np.int64)
-                sims = mat @ cents.T  # (n, n_lists)
                 # stable sort: similarity ties break by centroid index,
                 # matching the SQL twin's (sim DESC, cid) window order
-                order = np.argsort(-sims, axis=1, kind="stable")[:, :n_nearest]
-                # vectorized fan-out (round 8: the per-row Python append
-                # loop was ~1 s/task at sf1.0's 20k×8 probe rows)
-                cols = {"id": np.repeat(ids, n_nearest)}
-                if include_vec:
-                    vlist = mat.tolist()
-                    cols["vec"] = [
-                        vlist[i]
-                        for i in np.repeat(np.arange(len(ids)), n_nearest)
-                    ]
-                cols["list_id"] = order.ravel().astype(np.int32)
-                yield pd.DataFrame(cols)
+                order = np.argsort(-(mat @ cents.T), axis=1, kind="stable")
+                yield pd.DataFrame({
+                    "id": pdf[id_col].to_numpy(np.int64),
+                    "vec": list(mat),
+                    "groups": list(order[:, :n_nearest].astype(np.int64)),
+                })
 
-        return kernel, out_t
+        return spread_for_kernel(df.select(id_col, vec_col)).mapInPandas(
+            kernel, _GROUPED_SCHEMA
+        )
 
-    ck, ct = assign(1)       # corpus rows live in exactly one list
-    qk, qt = assign(n_probe)  # queries probe several lists
-    from ferrobus_spark.plans.partitioning import spread_for_kernel
-
-    cb = spread_for_kernel(corpus.select(id_col, vec_col)).mapInPandas(ck, ct)
-    qb = spread_for_kernel(queries.select(id_col, vec_col)).mapInPandas(qk, qt)
-
-    rerank_t = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    # captured at plan-build time so monkeypatched test values ship in
-    # the closure (workers re-import the module and would miss a patch)
-    q_chunk, c_chunk = _Q_CHUNK, _C_CHUNK
-
-    def rerank(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []}).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
-            )
-        # vectors pre-normalized by assign(); dot == cosine
-        return pd.DataFrame(_block_topk(
-            qpdf["id"].to_numpy(np.int64),
-            np.stack(qpdf["vec"].to_numpy()),
-            cpdf["id"].to_numpy(np.int64),
-            np.stack(cpdf["vec"].to_numpy()),
-            k, exclude_self, q_chunk, c_chunk,
-        ))
-
-    # bound the per-task group width too: auto-sized n_lists targets
-    # √N-wide lists, but a skewed quantizer (or an explicit small
-    # n_lists) can still concentrate the corpus into one list
-    gkeys = ["list_id"]
-    if max_list_size is not None:
-        if len(train) < max_train:
-            # the bounded training sample turned out to BE the whole
-            # corpus, so list sizes are computable driver-side from
-            # vectors already in hand — no third assignment pass over
-            # the corpus. A last-ulp BLAS-shape difference vs the
-            # distributed assignment could only shift a size by ±1,
-            # and _nsub is a physical-distribution parameter (any
-            # value ≥ 1 is exact — see _sub_split).
-            x_tr = _normalize(np.stack(train[vec_col].to_numpy()).astype(np.float64))
-            a_idx = np.argsort(-(x_tr @ cn.T), axis=1, kind="stable")[:, 0]
-            counts = np.bincount(a_idx, minlength=len(cn))
-            nsub = np.maximum(1, np.ceil(counts / max_list_size)).astype(int)
-            sizes_df = spark.createDataFrame(
-                [(int(i), int(s)) for i, s in enumerate(nsub)],
-                "list_id INT, _nsub INT",
-            )
-            qb, cb, gkeys = _sub_split(qb, cb, gkeys, max_list_size,
-                                       sizes_df=F.broadcast(sizes_df))
-        else:
-            sk, st_ = assign(1, include_vec=False)  # vec-free counting pass
-            cb_ids = spread_for_kernel(corpus.select(id_col, vec_col)).mapInPandas(sk, st_)
-            qb, cb, gkeys = _sub_split(qb, cb, gkeys, max_list_size,
-                                       sizes_from=cb_ids)
-    cand = (
-        qb.groupBy(*gkeys)
-        .cogroup(cb.groupBy(*gkeys))
-        .applyInPandas(lambda qp, cp: rerank(qp, cp), rerank_t)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    # corpus rows live in exactly one list; queries probe several
+    return _rank(_group_topk(assign(queries, n_probe), assign(corpus, 1), k), k)
 
 
 def incremental_cosine_neardup_pairs(
@@ -703,10 +584,7 @@ def incremental_cosine_neardup_pairs(
         n_tables=n_tables, bits_per_table=bits_per_table, dim=dim,
     )
     return (
-        res.filter(
-            (F.col("cosine") >= threshold)
-            & (F.col("query_id") != F.col("neighbor_id"))
-        )
+        res.filter(F.col("cosine") >= threshold)
         .select(
             F.least("query_id", "neighbor_id").alias("id_a"),
             F.greatest("query_id", "neighbor_id").alias("id_b"),
@@ -743,5 +621,4 @@ def cosine_neardup_pairs(
             F.col("neighbor_id").alias("id_b"),
             "cosine",
         )
-        .distinct()
     )

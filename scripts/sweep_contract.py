@@ -1,12 +1,13 @@
 """Resilient, resumable driver-contract sweep at an arbitrary scale factor.
 
-Mirrors tests/test_driver_contract.py's comparison exactly (canonical
-column sort, dtype-kind strictness with unsigned folded to signed,
-NaN-tolerant value equality) but runs each query in its OWN subprocess —
-fresh Spark JVM + fresh DuckDB connection — so a silent JVM exit or a
-multi-hour oracle stall costs one row, not the sweep. Motivation: the
-first round-6 sf1.0 sweep ran all 50 rows through one pytest process and
-lost the 33 remaining rows when the shared session-scoped JVM died as a
+Compares with ``perfbench.checks.mismatch``, the comparator
+tests/test_driver_contract.py uses (canonical column and row sort,
+dtype-kind strictness with unsigned folded to signed, NaN-tolerant value
+equality), but runs each query in its OWN subprocess — fresh Spark JVM
++ fresh DuckDB connection — so a silent JVM exit or a multi-hour oracle
+stall costs one row, not the sweep. Motivation: the first round-6 sf1.0
+sweep ran all 50 rows through one pytest process and lost the 33
+remaining rows when the shared session-scoped JVM died as a
 zombie 16 tests in (BENCH/sweep_sf1_r6b_partial.log).
 
 Usage:
@@ -24,7 +25,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
 import subprocess
 import sys
@@ -48,22 +48,6 @@ HEAVY = [
     "simhash_near_pairs",
     "curation_curated",
 ]
-
-
-def _canon(df):
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
-
-
-def _values_equal(a, b) -> bool:
-    if isinstance(a, float) and isinstance(b, float):
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return a == b
-    return a == b
 
 
 PAIRS_PER_CHUNK = 400_000_000  # sf1.0-proven one-shot size (93 s, in-RAM)
@@ -97,11 +81,12 @@ def run_one(name: str, sf_dir: str, oracle_chunks: int = 1) -> dict:
 
     import __spark_entry__ as entry_mod
     from ferrobus_spark.session import get_spark
+    from perfbench.checks import mismatch
 
     rec: dict = {"name": name, "sf_dir": sf_dir}
     spark = get_spark("sweep", master="local[8]", shuffle_partitions=8)
     t0 = time.time()
-    got = _canon(entry_mod.queries()[name](spark, sf_dir).toPandas())
+    got = entry_mod.queries()[name](spark, sf_dir).toPandas()
     rec["spark_s"] = round(time.time() - t0, 2)
     rec["rows"] = len(got)
 
@@ -135,36 +120,16 @@ def run_one(name: str, sf_dir: str, oracle_chunks: int = 1) -> dict:
             con.sql(ORACLE_CHUNKERS[name](oracle_chunks, i)).df()
             for i in range(oracle_chunks)
         ]
-        exp = _canon(pd.concat(parts, ignore_index=True))
+        exp = pd.concat(parts, ignore_index=True)
         rec["oracle_chunks"] = oracle_chunks
     else:
-        exp = _canon(con.sql(entry_mod.oracle_sql()[name]).df())
+        exp = con.sql(entry_mod.oracle_sql()[name]).df()
     rec["oracle_s"] = round(time.time() - t0, 2)
 
-    errs = []
-    if list(got.columns) != list(exp.columns):
-        errs.append(f"columns {list(got.columns)} vs {list(exp.columns)}")
-    elif len(got) != len(exp):
-        errs.append(f"rows {len(got)} vs {len(exp)}")
-    else:
-        for c in got.columns:
-            gk = got[c].dtype.kind.replace("u", "i")
-            ek = exp[c].dtype.kind.replace("u", "i")
-            if gk != ek:
-                errs.append(f"dtype {c}: {got[c].dtype} vs {exp[c].dtype}")
-        if not errs:
-            for c in got.columns:
-                bad = [
-                    (i, x, y)
-                    for i, (x, y) in enumerate(zip(got[c].tolist(), exp[c].tolist()))
-                    if not _values_equal(x, y)
-                ]
-                if bad:
-                    errs.append(f"col {c}: first mismatches {bad[:5]}")
-                    break
-    rec["status"] = "pass" if not errs else "fail"
-    if errs:
-        rec["err"] = "; ".join(errs)[:2000]
+    err = mismatch(got, exp)
+    rec["status"] = "pass" if err is None else "fail"
+    if err is not None:
+        rec["err"] = err[:2000]
     return rec
 
 

@@ -4,7 +4,6 @@ Row-count + schema-shape + order-insensitive value comparison at sf0.01,
 mirroring CORRECTNESS_r{N}.json. Any mismatch here is a mismatch there.
 """
 
-import math
 import os
 
 import duckdb
@@ -12,6 +11,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from perfbench.checks import canon, mismatch
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
@@ -30,47 +30,15 @@ def con():
     return c
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
-
-
-def _values_equal(a, b) -> bool:
-    if isinstance(a, float) and isinstance(b, float):
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return a == b
-    return a == b
-
-
 @pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql().keys()))
 def test_query_matches_oracle(spark, con, name):
-    q = entry_mod.queries()[name]
-    got = _canon(q(spark, SF_DIR).toPandas())
-    exp = _canon(con.sql(entry_mod.oracle_sql()[name]).df())
-    assert list(got.columns) == list(exp.columns), (
-        f"column mismatch: {list(got.columns)} vs {list(exp.columns)}"
-    )
-    assert len(got) == len(exp), f"row count {len(got)} vs {len(exp)}"
+    got = entry_mod.queries()[name](spark, SF_DIR).toPandas()
+    exp = con.sql(entry_mod.oracle_sql()[name]).df()
     # dtype-strict: the driver hashes raw values, so int64 vs float64 (e.g.
-    # DuckDB HUGEINT SUM results) must fail here too, not just values.
-    for c in got.columns:
-        gk, ek = got[c].dtype.kind, exp[c].dtype.kind
-        gk = "i" if gk == "u" else gk
-        ek = "i" if ek == "u" else ek
-        assert gk == ek, (
-            f"dtype mismatch col {c}: spark {got[c].dtype} vs oracle {exp[c].dtype}"
-            " — add CAST(... AS BIGINT/DOUBLE) to the oracle SQL"
-        )
-    for c in got.columns:
-        ga, ea = got[c].tolist(), exp[c].tolist()
-        bad = [
-            (i, x, y) for i, (x, y) in enumerate(zip(ga, ea)) if not _values_equal(x, y)
-        ]
-        assert not bad, f"col {c}: first mismatches {bad[:5]}"
+    # DuckDB HUGEINT SUM results) must fail here too, not just values —
+    # add CAST(... AS BIGINT/DOUBLE) to the oracle SQL
+    err = mismatch(got, exp)
+    assert err is None, err
 
 
 @pytest.mark.parametrize("name", ["knn_embeddings_bruteforce", "knn_embeddings_ivf"])
@@ -83,10 +51,10 @@ def test_chunked_oracle_equivalence(con, name):
     involved — this pins DuckDB-vs-DuckDB."""
     from ferrobus_spark.registry_ext import ORACLE_CHUNKERS
 
-    plain = _canon(con.sql(entry_mod.oracle_sql()[name]).df())
+    plain = canon(con.sql(entry_mod.oracle_sql()[name]).df())
     n = 4
     parts = [con.sql(ORACLE_CHUNKERS[name](n, i)).df() for i in range(n)]
-    chunked = _canon(pd.concat(parts, ignore_index=True))
+    chunked = canon(pd.concat(parts, ignore_index=True))
     pd.testing.assert_frame_equal(plain, chunked)
 
 

@@ -29,15 +29,8 @@ def test_bruteforce_topk_matches_numpy(spark, embeddings):
 
 def test_bruteforce_gate_falls_back_to_ivf(spark, embeddings):
     """Above the broadcast cap the exact path must not driver-collect:
-    'ivf' falls back to the distributed path, 'error' raises clearly."""
-    with pytest.raises(ValueError, match="max_corpus_rows"):
-        brute_force_topk(
-            spark, embeddings, embeddings, k=1,
-            max_corpus_rows=10, on_overflow="error",
-        )
-    out = brute_force_topk(
-        spark, embeddings, embeddings, k=1, max_corpus_rows=10, on_overflow="ivf"
-    )
+    it falls back to the distributed IVF path."""
+    out = brute_force_topk(spark, embeddings, embeddings, k=1, max_corpus_rows=10)
     # fallback produced a full per-query result set via IVF
     assert out.select("query_id").distinct().count() == embeddings.count()
 
@@ -125,44 +118,41 @@ def _plan_str(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_group_topk_shape(plan, python_nodes):
+    """One sorted-group mapInPandas kernel scores the groups: no cogroup,
+    no join of any kind (no per-candidate vector join-back, no group-size
+    join) and exactly ``python_nodes`` Python operators."""
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "Join" not in plan
+    assert "CartesianProduct" not in plan
+    assert plan.count("MapInPandas") == python_nodes
+
+
 def test_lsh_topk_plan_shape(spark, embeddings):
-    """Pin the round-6/7 ANN shape: a (table, bucket[, sub]) COGROUP
-    scores each bucket block (FlatMapCoGroupsInPandas); since the
-    round-7 score unification there is NO per-candidate vector
-    join-back — the only joins left are the id-light hot-bucket size
-    equi-joins from _sub_split. With dim supplied, no driver probe job
-    is needed to build the plan."""
+    """A self-search signs once: the sign pass feeds both sides, so the
+    plan holds two Python nodes (sign, group kernel). With dim supplied,
+    no driver probe job is needed to build the plan."""
     from pyspark.sql import functions as F
 
     dim = embeddings.select(F.size("embedding")).first()[0]
     res = lsh_topk(spark, embeddings, embeddings, k=3, dim=dim)
-    plan = _plan_str(res)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "FlatMapCoGroupsInPandas" in plan
-    # with the guard disabled, no join operator of any kind remains
-    plain = _plan_str(lsh_topk(
-        spark, embeddings, embeddings, k=3, dim=dim, max_bucket_size=None
-    ))
-    assert "Join" not in plain
+    _assert_group_topk_shape(_plan_str(res), python_nodes=2)
 
 
 def test_ivf_topk_plan_shape(spark, embeddings):
+    """Two assignment passes (queries probe n_probe lists, corpus rows
+    live in one) feed the list_id group kernel — not a candidate
+    equi-join carrying both vectors per pair, which moved ~200 GB at
+    sf1.0."""
     from ferrobus_spark.operators.similarity import ivf_topk
 
     res = ivf_topk(spark, embeddings, embeddings, k=3, n_lists=8, n_probe=2)
-    plan = _plan_str(res)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # round-6 shape: the re-rank is a list_id COGROUP (one matmul per
-    # inverted list, per-list top-k), not a candidate equi-join carrying
-    # both vectors per pair — the join shape moved ~200 GB at sf1.0
-    assert "FlatMapCoGroupsInPandas" in plan
+    _assert_group_topk_shape(_plan_str(res), python_nodes=3)
 
 
 def test_block_topk_chunked_merge_is_exact(spark, embeddings, monkeypatch):
     """Force the bounded-memory merge path (the round-7 OOM fix): with
-    _Q_CHUNK/_C_CHUNK shrunk to single digits every cogroup task must
+    _Q_CHUNK/_C_CHUNK shrunk to single digits every group's scoring must
     run dozens of merge rounds, and the (ids, ranks) must be IDENTICAL
     to the default wide-matmul blocks — the running top-k merge is
     exact, not approximate. Cosines compare at 1e-12: chunked BLAS may
@@ -217,11 +207,13 @@ def test_ivf_forced_giant_list_matches_exact(spark, embeddings, monkeypatch):
     )
 
 
-def test_sub_split_forced_equivalence(spark, embeddings):
-    """Force _sub_split to shatter every bucket/list (caps of 3 and 5
-    rows) — the salted sub-group union must reproduce the unguarded
-    results exactly on (ids, ranks): top-k(group) ⊆ ∪ top-k(sub)."""
-    from ferrobus_spark.operators.similarity import ivf_topk
+def test_group_slices_spanning_batches_are_exact(spark, embeddings, monkeypatch):
+    """Force _group_topk to slice every LSH bucket and IVF list into
+    3-row corpus slices, with 5-row Arrow batches so each group's queries
+    and corpus span many batches: the per-slice top-k union must
+    reproduce the default results exactly on (ids, ranks) —
+    top-k(group) ⊆ ∪ top-k(slice)."""
+    from ferrobus_spark.operators import similarity as sim
 
     def key(df):
         return (
@@ -229,17 +221,25 @@ def test_sub_split_forced_equivalence(spark, embeddings):
             .reset_index(drop=True)[["query_id", "neighbor_id", "rank"]]
         )
 
-    base = lsh_topk(spark, embeddings, embeddings, k=3, dim=64,
-                    max_bucket_size=None).toPandas()
-    split = lsh_topk(spark, embeddings, embeddings, k=3, dim=64,
-                     max_bucket_size=3).toPandas()
-    assert key(base).equals(key(split))
+    def run():
+        return (
+            sim.lsh_topk(spark, embeddings, embeddings, k=3, dim=64).toPandas(),
+            sim.ivf_topk(spark, embeddings, embeddings, k=3, n_lists=4,
+                         n_probe=4).toPandas(),
+        )
 
-    base_i = ivf_topk(spark, embeddings, embeddings, k=3, n_lists=4,
-                      n_probe=4, max_list_size=None).toPandas()
-    split_i = ivf_topk(spark, embeddings, embeddings, k=3, n_lists=4,
-                       n_probe=4, max_list_size=5).toPandas()
-    assert key(base_i).equals(key(split_i))
+    base = run()
+    monkeypatch.setattr(sim, "_MAX_GROUP_ROWS", 3)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "5")
+    try:
+        sliced = run()
+    finally:
+        spark.conf.set(conf, old)
+    for b, s in zip(base, sliced):
+        assert len(b) > 0
+        assert key(b).equals(key(s))
 
 
 def test_ivf_auto_n_lists(spark, embeddings):
