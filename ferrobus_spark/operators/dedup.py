@@ -59,24 +59,6 @@ def _shingle_hashes(text: str, k: int) -> np.ndarray:
     return np.unique(h)
 
 
-def _minhash(shingles: np.ndarray, n_hashes: int) -> np.ndarray:
-    """n permutations via (a*x + b) mod p universal hashing.
-
-    NB: ``a*x`` runs in numpy uint64, so the product WRAPS mod 2^64
-    before the Mersenne mod — the effective permutation is
-    ``((a*x mod 2^64) + b mod 2^64) mod p``. That's still a fine mixing
-    family for MinHash and is now pinned by the ``minhash_dup_pairs``
-    DuckDB oracle (which replicates the wrap explicitly), so don't
-    "fix" it to true modular arithmetic without regenerating both."""
-    rng = np.random.default_rng(20240501)  # fixed seed: signatures are stable
-    a = rng.integers(1, MERSENNE, n_hashes, dtype=np.int64).astype(np.uint64)
-    b = rng.integers(0, MERSENNE, n_hashes, dtype=np.int64).astype(np.uint64)
-    x = shingles % np.uint64(MERSENNE)
-    # (n_hashes, n_shingles) without overflow: use python-int matmul? stay u64
-    vals = (np.outer(a, x) + b[:, None]) % np.uint64(MERSENNE)
-    return vals.min(axis=1)
-
-
 def _batch_shingle_hashes(texts, k: int) -> tuple[np.ndarray, np.ndarray]:
     """Rolling k-byte hashes for a whole batch in one vectorized pass.
 
@@ -112,6 +94,14 @@ def _batch_shingle_hashes(texts, k: int) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _minhash_params(n_hashes: int) -> tuple[np.ndarray, np.ndarray]:
+    """(a, b) of n permutations ``(a*x + b) mod p`` (universal hashing).
+
+    NB: ``a*x`` runs in numpy uint64, so the product WRAPS mod 2^64
+    before the Mersenne mod — the effective permutation is
+    ``((a*x mod 2^64) + b mod 2^64) mod p``. That's still a fine mixing
+    family for MinHash and is pinned by the ``minhash_dup_pairs``
+    DuckDB oracle (which replicates the wrap explicitly), so don't
+    "fix" it to true modular arithmetic without regenerating both."""
     rng = np.random.default_rng(20240501)
     a = rng.integers(1, MERSENNE, n_hashes, dtype=np.int64).astype(np.uint64)
     b = rng.integers(0, MERSENNE, n_hashes, dtype=np.int64).astype(np.uint64)

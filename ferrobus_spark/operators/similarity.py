@@ -283,63 +283,22 @@ def brute_force_topk(
     bc = spark.sparkContext.broadcast((ids, mat))
 
     def kernel(batches):
-        # Vectorized exact top-k (round 8): the former per-query
-        # full-corpus lexsort was the kernel's wall (O(n log n) per
-        # query); replaced by one np.partition threshold per query row +
-        # a single lexsort over the ~k+1 survivors of the whole chunk.
-        # Exact under ties: any true top-k neighbor (excluding self)
-        # is beaten by at most k-1 non-self rows plus possibly self, so
-        # it ranks within the top-(k+1) overall and its score is >= the
-        # (k+1)-th largest value; the >= threshold mask keeps every
-        # boundary tie and the survivor lexsort applies the exact
-        # (cosine DESC, id ASC) order, matching the DuckDB twin.
+        # the whole corpus is one _block_topk chunk; query chunks bound
+        # the scores allocation at ~128 MB
         cids, cmat = bc.value
-        n_c = cmat.shape[0]
-        kth = n_c - (k + 1)
-        # bound the scores allocation at ~128 MB per chunk, like _block_topk
-        q_chunk = max(64, (16 * 1024 * 1024) // max(n_c, 1))
+        n_c = max(cmat.shape[0], 1)
+        q_chunk = max(64, (16 * 1024 * 1024) // n_c)
         for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({
-                    "query_id": pd.Series(dtype="int64"),
-                    "neighbor_id": pd.Series(dtype="int64"),
-                    "cosine": pd.Series(dtype="float64"),
-                    "rank": pd.Series(dtype="int32"),
-                })
+            if not len(pdf):
                 continue
             q = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            qids = pdf[id_col].to_numpy(np.int64)
-            out_q, out_n, out_s, out_r = [], [], [], []
-            for lo in range(0, len(qids), q_chunk):
-                qi = qids[lo : lo + q_chunk]
-                sc = q[lo : lo + q_chunk] @ cmat.T
-                if kth <= 0:
-                    mask = np.ones(sc.shape, bool)
-                else:
-                    thr = np.partition(sc, kth, axis=1)[:, kth]
-                    mask = sc >= thr[:, None]
-                r_, c_ = np.nonzero(mask)
-                s_, n_ = sc[r_, c_], cids[c_]
-                keep = n_ != qi[r_]
-                r_, s_, n_ = r_[keep], s_[keep], n_[keep]
-                order = np.lexsort((n_, -s_, r_))
-                r_o, s_o, n_o = r_[order], s_[order], n_[order]
-                starts = np.flatnonzero(
-                    np.concatenate([[True], r_o[1:] != r_o[:-1]])
-                )
-                counts = np.diff(np.concatenate([starts, [len(r_o)]]))
-                ranks = np.arange(len(r_o)) - np.repeat(starts, counts) + 1
-                sel = ranks <= k
-                out_q.append(qi[r_o[sel]])
-                out_n.append(n_o[sel])
-                out_s.append(s_o[sel])
-                out_r.append(ranks[sel])
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q) if out_q else np.empty(0, np.int64),
-                "neighbor_id": np.concatenate(out_n) if out_n else np.empty(0, np.int64),
-                "cosine": np.concatenate(out_s) if out_s else np.empty(0, np.float64),
-                "rank": (np.concatenate(out_r) if out_r else np.empty(0)).astype(np.int32),
-            })
+            out = _block_topk(pdf[id_col].to_numpy(np.int64), q, cids, cmat, k, q_chunk, n_c)
+            # each query's neighbors arrive contiguous and in rank order
+            qid = out["query_id"]
+            starts = np.flatnonzero(np.concatenate([[True], qid[1:] != qid[:-1]]))
+            counts = np.diff(np.concatenate([starts, [len(qid)]]))
+            rank = np.arange(len(qid)) - np.repeat(starts, counts) + 1
+            yield pd.DataFrame({**out, "rank": rank.astype(np.int32)})
 
     from ferrobus_spark.plans.partitioning import spread_for_kernel
 

@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ferrobus_spark import pyworker
+
 
 def _default_driver_mem() -> str:
     """Half of physical RAM, capped at 48g — a fixed 48g overcommits
@@ -27,6 +29,12 @@ def get_spark(
     H3 cells / hot domains — SURVEY.md §4), UTC session time for oracle
     parity, and shuffle partitions sized to the local core count rather
     than Spark's 200 default.
+
+    Python workers start from :mod:`ferrobus_spark.pyworker`
+    (``spark.python.daemon.module``), which imports the installed
+    pyspark instead of Spark's ``pyspark.zip``, so no task re-reads the
+    archive. Every worker must therefore import ``ferrobus_spark``: run
+    from the repo root or put it on ``PYTHONPATH``.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -51,6 +59,7 @@ def get_spark(
         # artifacts (BENCH_r6 'tail' noise) and round-over-round diffs
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", pyworker.__name__)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
