@@ -53,7 +53,6 @@ def build_iso_grid(
 def isochrone_cells(
     spark: SparkSession,
     tt,
-    model,
     origin_tables: dict[str, DataFrame],
     grid_tables: dict[str, DataFrame],
     departure: int | None,
@@ -61,9 +60,7 @@ def isochrone_cells(
     cutoff: int,
 ) -> DataFrame:
     """(origin_id, departure, cell) reachable-tile assignments (F6)."""
-    res = one_to_many(
-        spark, tt, model.csr, origin_tables, grid_tables, departure, max_transfers
-    )
+    res = one_to_many(spark, tt, origin_tables, grid_tables, departure, max_transfers)
     return res.filter(F.col("travel_time") <= cutoff).select(
         "origin_id", "departure", F.col("dest_id").alias("cell")
     )
@@ -95,7 +92,6 @@ def isochrone_wkt(cells_df: DataFrame) -> DataFrame:
 def percent_access_cells(
     spark: SparkSession,
     tt,
-    model,
     origin_tables: dict[str, DataFrame],
     grid_tables: dict[str, DataFrame],
     dep_range: tuple[int, int],
@@ -116,7 +112,7 @@ def percent_access_cells(
         "point_nodes": origin_tables["point_nodes"].crossJoin(F.broadcast(deps_df)),
     }
     cells = isochrone_cells(
-        spark, tt, model, sampled, grid_tables, None, max_transfers, cutoff
+        spark, tt, sampled, grid_tables, None, max_transfers, cutoff
     )
     return (
         cells.groupBy("origin_id", "cell")

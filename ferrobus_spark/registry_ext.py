@@ -1811,9 +1811,9 @@ def _transit_points(spark):
 def q_transit_matrix(spark, sf_dir):
     from ferrobus_spark.routing import products
 
-    model, tt = _transit_ctx(spark)
+    _, tt = _transit_ctx(spark)
     pts = _transit_points(spark)
-    return products.travel_time_matrix(spark, tt, model.csr, pts, 8 * 3600, 3)
+    return products.travel_time_matrix(spark, tt, pts, 8 * 3600, 3)
 
 
 @register("transit_travel_time_stats", _oracle_stats)
@@ -1824,15 +1824,9 @@ def q_transit_stats(spark, sf_dir):
     is exact; the median midpoint likewise."""
     from ferrobus_spark.routing import products
 
-    model, tt = _transit_ctx(spark)
+    _, tt = _transit_ctx(spark)
     pts = _transit_points(spark)
-    mean = products.travel_time_statistics(
-        spark, tt, model.csr, pts, 8 * 3600, 3, stat="mean"
-    ).selectExpr("origin_id", "stat_value AS mean_tt")
-    med = products.travel_time_statistics(
-        spark, tt, model.csr, pts, 8 * 3600, 3, stat="median"
-    ).selectExpr("origin_id", "stat_value AS median_tt")
-    return mean.join(med, "origin_id")
+    return products.travel_time_statistics(spark, tt, pts, 8 * 3600, 3)
 
 
 @register("transit_range_pareto", _oracle_range)
@@ -1840,14 +1834,12 @@ def q_transit_range_pareto(spark, sf_dir):
     """Range routing journeys + exact Pareto flags over the fixture."""
     from ferrobus_spark.routing.range import range_routing
 
-    model, tt = _transit_ctx(spark)
+    _, tt = _transit_ctx(spark)
     pts = _transit_points(spark)
     od = spark.createDataFrame(
         [(0, 0, 5), (1, 2, 8), (2, 1, 11)], "pair_id LONG, origin_id LONG, dest_id LONG"
     )
-    return range_routing(
-        spark, tt, model.csr, od, pts, pts, (7 * 3600, 9 * 3600), 3
-    )
+    return range_routing(spark, tt, od, pts, pts, (7 * 3600, 9 * 3600), 3)
 
 
 def _oracle_detailed() -> str:
@@ -1864,12 +1856,12 @@ def q_transit_detailed_journeys(spark, sf_dir):
     VALUES oracle — the legs table is deterministic integer rows."""
     from ferrobus_spark.routing.traced import detailed_journeys
 
-    model, tt = _transit_ctx(spark)
+    _, tt = _transit_ctx(spark)
     pts = _transit_points(spark)
     od = spark.createDataFrame(
         [(0, 0, 5), (1, 2, 8), (2, 4, 9)], "pair_id LONG, origin_id LONG, dest_id LONG"
     )
-    return detailed_journeys(spark, tt, model.csr, od, pts, pts, 8 * 3600, 3)
+    return detailed_journeys(spark, tt, od, pts, pts, 8 * 3600, 3)
 
 
 def _oracle_geojson() -> str:
@@ -1891,7 +1883,7 @@ def q_transit_journey_geojson(spark, sf_dir):
     od = spark.createDataFrame(
         [(0, 0, 5), (1, 2, 8), (2, 4, 9)], "pair_id LONG, origin_id LONG, dest_id LONG"
     )
-    legs = detailed_journeys(spark, tt, model.csr, od, pts, pts, 8 * 3600, 3)
+    legs = detailed_journeys(spark, tt, od, pts, pts, 8 * 3600, 3)
     return legs_to_geojson_model(legs, model)
 
 
@@ -1918,7 +1910,7 @@ def q_transit_percent_access(spark, sf_dir):
         model["street_nodes"], model["node_to_stop"], model.csr,
     )
     return iso.percent_access_cells(
-        spark, tt, model, origins, grid, (7 * 3600, 7 * 3600 + 3600), 1200, 3, 1800
+        spark, tt, origins, grid, (7 * 3600, 7 * 3600 + 3600), 1200, 3, 1800
     )
 
 
@@ -1943,4 +1935,4 @@ def q_transit_isochrone(spark, sf_dir):
         ),
         model["street_nodes"], model["node_to_stop"], model.csr,
     )
-    return iso.isochrone_cells(spark, tt, model, origins, grid, 8 * 3600, 3, 1800)
+    return iso.isochrone_cells(spark, tt, origins, grid, 8 * 3600, 3, 1800)

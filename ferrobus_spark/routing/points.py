@@ -9,6 +9,9 @@ keep top-k by access time. Built for whole point tables at once:
   point_walk(point_id, node_id, walk_secs)           — bounded SSSP out
   point_stops(point_id, stop_idx, access_secs, rank) — k-NN by network time
 
+:func:`od_legs` joins them into the legs of the OD-pair products, so no
+product walks the street graph again.
+
 Tie-break: (access_secs, stop_idx) — deterministic refinement of the
 reference's unspecified HashMap tie order (documented deviation).
 """
@@ -104,3 +107,66 @@ def build_point_tables(
         "point_walk": point_walk,
         "point_stops": point_stops,
     }
+
+
+def od_legs(
+    od_pairs: DataFrame,
+    origin_tables: dict[str, DataFrame],
+    dest_tables: dict[str, DataFrame],
+) -> DataFrame:
+    """One row per routable OD pair: (pair_id, origin_id, dest_id, walking,
+    a_stop, a_secs, e_stop, e_secs).
+
+    ``walking`` is the origin's ``point_walk`` entry at the destination's
+    snap node (walking_time_to, transit_model.rs:250-252), null when the
+    walk budget does not reach it. The access and egress legs are the
+    rank-1 ``point_stops`` rows (MAX_CANDIDATE_STOPS=1, lib.rs:14), null
+    when a point reaches no stop. A pair whose origin or destination fails
+    the snap gate has no row.
+    """
+
+    def rank1(tables, id_col, stop_col, secs_col):
+        return tables["point_stops"].filter(F.col("rank") == 1).select(
+            F.col("point_id").alias(id_col),
+            F.col("stop_idx").alias(stop_col),
+            F.col("access_secs").alias(secs_col),
+        )
+
+    walk = origin_tables["point_walk"].select(
+        F.col("point_id").alias("origin_id"),
+        "node_id",
+        F.col("walk_secs").alias("walking"),
+    )
+    return (
+        od_pairs.join(
+            origin_tables["point_nodes"].select(F.col("point_id").alias("origin_id")),
+            "origin_id",
+        )
+        .join(
+            dest_tables["point_nodes"].select(
+                F.col("point_id").alias("dest_id"), "node_id"
+            ),
+            "dest_id",
+        )
+        .join(walk, ["origin_id", "node_id"], "left")
+        .join(rank1(origin_tables, "origin_id", "a_stop", "a_secs"), "origin_id", "left")
+        .join(rank1(dest_tables, "dest_id", "e_stop", "e_secs"), "dest_id", "left")
+        .select(
+            "pair_id", "origin_id", "dest_id", "walking",
+            "a_stop", "a_secs", "e_stop", "e_secs",
+        )
+    )
+
+
+def unpack_legs(r) -> tuple[int | None, tuple[int, int, int, int] | None]:
+    """``(walking, (a_stop, a_secs, e_stop, e_secs))`` of one od_legs row
+    as ints. ``walking`` is None when unwalkable; the stop legs are None
+    when a side reaches no stop, or when access plus egress alone take at
+    least the walk (the reference's a+e pruning)."""
+    walking = None if pd.isna(r.walking) else int(r.walking)
+    if pd.isna(r.a_stop) or pd.isna(r.e_stop):
+        return walking, None
+    legs = (int(r.a_stop), int(r.a_secs), int(r.e_stop), int(r.e_secs))
+    if walking is not None and legs[1] + legs[3] >= walking:
+        return walking, None
+    return walking, legs

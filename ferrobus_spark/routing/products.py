@@ -1,7 +1,7 @@
-"""Routing products: one-to-many, travel-time matrix, statistics.
+"""Routing products: one-to-many, find_route, travel-time matrix, statistics.
 
-The broadcast-kernel regime of SURVEY §3.2: the timetable CSR and the
-destination set are broadcast once; origins are the parallel axis
+The broadcast-kernel regime of SURVEY §3.2: the timetable CSR is
+broadcast once and destinations are joined; origins are the parallel axis
 (mirroring the reference's rayon loops in src/matrix.rs:40). Each
 origin runs ONE all-targets RAPTOR and fans results across all
 destinations — the shape the reference itself uses for one-to-many
@@ -12,7 +12,7 @@ Semantics replicated exactly:
   multimodal_routing.rs:181, :201);
 * walking tie goes to walking (``walking <= total``,
   multimodal_routing.rs:36);
-* direct walk time = origin's bounded-SSSP map at the dest's node —
+* direct walk time = origin's ``point_walk`` map at the dest's node —
   snap legs NOT added (transit_model.rs:250-252);
 * candidate iteration in (egress_secs, stop) order with first-strictly-
   better wins (ties keep the earlier candidate).
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ferrobus_spark.routing.csr import CSRGraph, bounded_dijkstra
+from ferrobus_spark.routing.points import od_legs, unpack_legs
 from ferrobus_spark.routing.raptor import raptor
 from ferrobus_spark.routing.timetable import INF, Timetable
 
@@ -39,34 +39,6 @@ RESULT_SCHEMA = T.StructType([
     T.StructField("walking_time", T.LongType()),
     T.StructField("transfers", T.LongType()),
 ])
-
-
-# find_route is an explicit-OD-pairs product; its dest map is broadcast to
-# the kernel, so bound the driver-side footprint with a hard cap (a caller
-# with more pairs wants the one_to_many join regime, not find_route).
-MAX_ROUTE_PAIRS = 100_000
-
-
-def _collect_dests(point_tables: dict[str, DataFrame], dest_ids: list[int]) -> list:
-    """[(dest_id, node_id, [(egress_secs, stop_idx)]), ...] — ONLY the
-    requested dests, and only their rank-1 egress row (``take(1)`` —
-    find_route scans a single egress candidate, lib.rs:14), so the
-    driver collect is O(|pairs' dests|), never the whole point table."""
-    wanted = F.col("point_id").isin([int(d) for d in dest_ids])
-    nodes = {
-        int(r.point_id): int(r.node_id)
-        for r in point_tables["point_nodes"]
-        .filter(wanted).select("point_id", "node_id").collect()
-    }
-    stops: dict[int, list] = {pid: [] for pid in nodes}
-    for r in (
-        point_tables["point_stops"]
-        .filter(wanted & (F.col("rank") == 1))
-        .select("point_id", "stop_idx", "access_secs")
-        .collect()
-    ):
-        stops[int(r.point_id)].append((int(r.access_secs), int(r.stop_idx)))
-    return [(pid, nodes[pid], stops[pid]) for pid in sorted(nodes)]
 
 
 LABEL_SCHEMA = T.StructType([
@@ -133,7 +105,6 @@ def raptor_labels(
 def one_to_many(
     spark: SparkSession,
     tt: Timetable,
-    csr: CSRGraph,
     origin_tables: dict[str, DataFrame],
     dest_tables: dict[str, DataFrame],
     departure: int | None,
@@ -158,9 +129,6 @@ def one_to_many(
                     total ≥ a+e always;
       4. walking ties beat transit (walking <= total,
          multimodal_routing.rs:36).
-
-    ``csr`` is kept in the signature for API stability; the walk maps
-    come precomputed from ``origin_tables["point_walk"]``.
     """
     labels = raptor_labels(spark, tt, origin_tables, departure, max_transfers)
 
@@ -228,82 +196,49 @@ def one_to_many(
 def route_pairs(
     spark: SparkSession,
     tt: Timetable,
-    csr: CSRGraph,
+    od_pairs: DataFrame,
     origin_tables: dict[str, DataFrame],
     dest_tables: dict[str, DataFrame],
-    pairs: list[tuple[int, int]],
     departure: int,
     max_transfers: int,
 ) -> DataFrame:
     """The reference's ``find_route`` product (multimodal_routing.rs:70-141).
 
-    Unlike one_to_many (all egress candidates scanned), find_route takes
-    the SINGLE rank-1 access stop × SINGLE rank-1 egress stop
+    ``od_pairs``: (pair_id, origin_id, dest_id). Unlike one_to_many (all
+    egress candidates scanned), find_route takes the SINGLE rank-1 access
+    stop × SINGLE rank-1 egress stop from :func:`od_legs`
     (``take(MAX_CANDIDATE_STOPS)`` on both sides, lib.rs:14) and runs the
     target-pruned single-target RAPTOR — whose pruning semantics make its
     arrival differ from the all-targets scan (the reference's own
     find_route vs one-to-many goldens differ on the same OD pair: 1566
-    vs 1524 on the zhelez fixture). Walking tie goes to walking.
+    vs 1524 on the zhelez fixture). Walking tie goes to walking. A pair
+    whose origin or destination fails the snap gate has no row.
     """
-    if len(pairs) > MAX_ROUTE_PAIRS:
-        raise ValueError(
-            f"route_pairs: {len(pairs)} OD pairs exceeds MAX_ROUTE_PAIRS="
-            f"{MAX_ROUTE_PAIRS}; use one_to_many (the join regime) for "
-            "bulk OD products instead of find_route."
-        )
-    dests = _collect_dests(dest_tables, sorted({int(d) for _o, d in pairs}))
-    dmap = {pid: (node, stops) for pid, node, stops in dests}
-    bc = spark.sparkContext.broadcast((tt, csr, dmap, pairs))
-
-    origins = origin_tables["point_nodes"].join(
-        origin_tables["point_stops"].filter(F.col("rank") == 1)
-        .select("point_id", "stop_idx", "access_secs"),
-        "point_id",
-        "left",
-    ).withColumn("departure", F.lit(int(departure)))
+    rows = od_legs(od_pairs, origin_tables, dest_tables)
+    bc = spark.sparkContext.broadcast(tt)
 
     def kernel(batches):
-        tt_, csr_, dmap_, pairs_ = bc.value
-        want: dict[int, list[int]] = {}
-        for o, d in pairs_:
-            want.setdefault(int(o), []).append(int(d))
+        tt_ = bc.value
         for pdf in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                origin_id = int(row.point_id)
-                if origin_id not in want:
-                    continue
-                dep = int(row.departure)
-                node = int(row.node_id)
-                snap = int(row.snap_secs)
-                mwt = int(getattr(row, "max_walking_time", 1200))
-                dense = int(csr_.dense_of([node])[0])
-                walk = bounded_dijkstra(csr_, dense, max_cost=mwt - snap)
-                walk_ext = {int(csr_.node_ids[k]): v for k, v in walk.items()}
-                has_access = row.stop_idx is not None and not pd.isna(row.stop_idx)
-                for dest_id in want[origin_id]:
-                    dnode, egress = dmap_[dest_id]
-                    walking = walk_ext.get(dnode)
-                    cand = None
-                    if has_access and egress:
-                        a_stop, a_secs = int(row.stop_idx), int(row.access_secs)
-                        e_secs, e_stop = egress[0]  # take(1): rank-1 only
-                        skip = (
-                            (walking is not None and a_secs + e_secs >= walking)
-                        )
-                        if not skip:
-                            best, best_k = raptor(
-                                tt_, a_stop, dep + a_secs, max_transfers, target=e_stop
-                            )
-                            arr = best[e_stop]
-                            if arr != INF:
-                                transit = int(arr) - (dep + a_secs)
-                                cand = (a_secs + transit + e_secs, transit, int(best_k[e_stop]))
-                    if cand is not None and not (walking is not None and walking <= cand[0]):
-                        total, transit, k = cand
-                        out.append((origin_id, dep, dest_id, total, transit, total - transit, k))
-                    elif walking is not None:
-                        out.append((origin_id, dep, dest_id, walking, None, walking, 0))
+            for r in pdf.itertuples(index=False):
+                walking, legs = unpack_legs(r)
+                cand = None
+                if legs is not None:
+                    a_stop, a_secs, e_stop, e_secs = legs
+                    best, best_k = raptor(
+                        tt_, a_stop, departure + a_secs, max_transfers, target=e_stop
+                    )
+                    arr = best[e_stop]
+                    if arr != INF:
+                        transit = int(arr) - (departure + a_secs)
+                        cand = (a_secs + transit + e_secs, transit, int(best_k[e_stop]))
+                o, d = int(r.origin_id), int(r.dest_id)
+                if cand is not None and not (walking is not None and walking <= cand[0]):
+                    total, transit, k = cand
+                    out.append((o, departure, d, total, transit, total - transit, k))
+                elif walking is not None:
+                    out.append((o, departure, d, walking, None, walking, 0))
             yield pd.DataFrame(
                 out,
                 columns=[
@@ -312,45 +247,44 @@ def route_pairs(
                 ],
             )
 
-    parts = max(1, min(origins.count(), spark.sparkContext.defaultParallelism))
-    return origins.repartition(parts).mapInPandas(kernel, RESULT_SCHEMA)
+    parts = max(1, min(rows.count(), spark.sparkContext.defaultParallelism * 2))
+    return rows.repartition(parts).mapInPandas(kernel, RESULT_SCHEMA)
 
 
-def travel_time_matrix(
-    spark, tt, csr, point_tables, departure, max_transfers
-) -> DataFrame:
+def travel_time_matrix(spark, tt, point_tables, departure, max_transfers) -> DataFrame:
     """(origin_id, dest_id, travel_time nullable) — src/matrix.rs:30-67."""
-    res = one_to_many(spark, tt, csr, point_tables, point_tables, departure, max_transfers)
+    res = one_to_many(spark, tt, point_tables, point_tables, departure, max_transfers)
     return res.select("origin_id", "dest_id", "travel_time")
 
 
 def travel_time_statistics(
     spark,
     tt,
-    csr,
     point_tables,
     departure: int,
     max_transfers: int,
     threshold: float = 0.75,
-    stat: str = "mean",
     filter_cutoff: int | None = None,
 ) -> DataFrame:
-    """Per-origin mean/exact-median with reachability gate (A6/A10,
+    """(origin_id, mean_tt, median_tt) per origin from ONE one-to-many
+    pass, both null below the reachability gate (A6/A10,
     src/matrix.rs:102-186). Median = midpoint(lo, hi) for even counts —
     Spark's exact ``percentile(col, 0.5)`` matches that rule."""
-    res = one_to_many(spark, tt, csr, point_tables, point_tables, departure, max_transfers)
+    res = one_to_many(spark, tt, point_tables, point_tables, departure, max_transfers)
     total = point_tables["point_nodes"].count()
     if filter_cutoff is not None:
         res = res.filter(F.col("travel_time") <= filter_cutoff)
-    agg = F.avg("travel_time") if stat == "mean" else F.percentile("travel_time", F.lit(0.5))
+    gated = F.col("n_reached") / F.lit(float(total)) < threshold
     return (
         res.groupBy("origin_id")
-        .agg(F.count("*").alias("n_reached"), agg.alias("stat_value"))
-        .withColumn(
-            "stat_value",
-            F.when(F.col("n_reached") / F.lit(float(total)) < threshold, F.lit(None)).otherwise(
-                F.col("stat_value")
-            ),
+        .agg(
+            F.count("*").alias("n_reached"),
+            F.avg("travel_time").alias("mean_tt"),
+            F.percentile("travel_time", F.lit(0.5)).alias("median_tt"),
         )
-        .select("origin_id", "stat_value")
+        .select(
+            "origin_id",
+            *(F.when(gated, F.lit(None)).otherwise(F.col(c)).alias(c)
+              for c in ("mean_tt", "median_tt")),
+        )
     )

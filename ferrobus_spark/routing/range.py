@@ -1,12 +1,19 @@
 """Range (profile) routing + Pareto front (reference pareto.rs, rRAPTOR).
 
 Per SURVEY §4: the reference's rRAPTOR label-reuse (latest-first warm
-start, range_raptor.rs:21-39) is only a speed trick — per-departure
-results are independent — so the engine runs each departure as a row
-through the same all-exact RAPTOR kernel and Spark parallelizes the
-departure × OD-pair axis. The Pareto filter replicates the reference's
-order-dependent insertion algorithm exactly (pareto.rs:120-144), and
-both medians are kept distinct (SURVEY §7 hard part 4):
+start, range_raptor.rs:21-39) is only a speed trick, so the engine runs
+each departure through the same target-pruned RAPTOR kernel that
+find_route uses, and Spark parallelizes the OD-pair axis.
+
+Documented deviation (ties): the reference persists ``best``/``best_k``
+across departures, so when an earlier departure exactly ties a later
+departure's arrival it reports the transfer count of the later run.
+Here every departure reports its own count. Arrivals are identical
+either way; the registered ``transit_range_pareto`` twin and the Python
+oracle use the same per-departure semantics.
+
+The Pareto filter replicates the reference's order-dependent insertion
+algorithm exactly (pareto.rs:120-144), and both medians are kept distinct (SURVEY §7 hard part 4):
 statistics median = midpoint(lo,hi); range median = times[len/2].
 """
 
@@ -18,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ferrobus_spark.routing.csr import bounded_dijkstra
+from ferrobus_spark.routing.points import od_legs, unpack_legs
 from ferrobus_spark.routing.raptor import raptor
 from ferrobus_spark.routing.timetable import INF, Timetable
 
@@ -89,80 +96,31 @@ def pareto_front_flags(journeys: list[dict]) -> list[bool]:
 def range_routing(
     spark: SparkSession,
     tt: Timetable,
-    csr,
     od_pairs: DataFrame,
     origin_tables: dict[str, DataFrame],
     dest_tables: dict[str, DataFrame],
     dep_range: tuple[int, int],
     max_transfers: int,
-    warm_start: bool = False,
 ) -> DataFrame:
     """Journeys for each OD pair over a departure window.
 
-    ``od_pairs``: (pair_id, origin_id, dest_id). Access and egress stops
-    are both capped at MAX_CANDIDATE_STOPS=1 (pareto.rs:170-173).
-    Output: one row per journey (walking option included) with the
-    reference's exact Pareto keep-flag.
-
-    ``warm_start=True`` uses the reference's rRAPTOR label reuse
-    (range_raptor.rs — latest-first departures sharing best-arrival
-    bounds) instead of independent per-departure runs. Arrivals are
-    identical (leaving earlier can never arrive later, so the shared
-    bounds only prune dominated work); it trades the embarrassingly
-    parallel departure axis for less total work per pair. Tie caveat:
-    when an EARLIER departure exactly ties a later departure's arrival,
-    the persisted ``best_k`` reports the transfers count of the run that
-    first achieved it (reference parity — the reference persists best
-    across departures too), while the cold path recomputes per
-    departure. Such ties require two departures boarding into the same
-    arrival instant; on the tested fixtures every departure boards a
-    distinct trip, so the two paths are byte-identical there.
+    ``od_pairs``: (pair_id, origin_id, dest_id). The walking option and
+    the rank-1 access and egress stops come from :func:`od_legs`
+    (MAX_CANDIDATE_STOPS=1, pareto.rs:170-173); the kernel runs one
+    target-pruned RAPTOR per source departure in the window. Output: one
+    row per journey (walking option included) with the reference's exact
+    Pareto keep-flag.
     """
-    o_nodes = origin_tables["point_nodes"].select(
-        F.col("point_id").alias("origin_id"),
-        F.col("node_id").alias("o_node"),
-        F.col("snap_secs").alias("o_snap"),
-        F.col("max_walking_time").alias("o_mwt"),
-    )
-    o_stop = (
-        origin_tables["point_stops"].filter(F.col("rank") == 1)
-        .select(
-            F.col("point_id").alias("origin_id"),
-            F.col("stop_idx").alias("a_stop"),
-            F.col("access_secs").alias("a_secs"),
-        )
-    )
-    d_nodes = dest_tables["point_nodes"].select(
-        F.col("point_id").alias("dest_id"), F.col("node_id").alias("d_node")
-    )
-    d_stop = (
-        dest_tables["point_stops"].filter(F.col("rank") == 1)
-        .select(
-            F.col("point_id").alias("dest_id"),
-            F.col("stop_idx").alias("e_stop"),
-            F.col("access_secs").alias("e_secs"),
-        )
-    )
-    rows = (
-        od_pairs.join(o_nodes, "origin_id")
-        .join(o_stop, "origin_id", "left")
-        .join(d_nodes, "dest_id")
-        .join(d_stop, "dest_id", "left")
-    )
-    bc = spark.sparkContext.broadcast((tt, csr))
+    rows = od_legs(od_pairs, origin_tables, dest_tables)
+    bc = spark.sparkContext.broadcast(tt)
     lo, hi = dep_range
 
     def kernel(batches):
-        tt_, csr_ = bc.value
+        tt_ = bc.value
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                dense = int(csr_.dense_of([int(r.o_node)])[0])
-                walk = bounded_dijkstra(
-                    csr_, dense, max_cost=int(r.o_mwt) - int(r.o_snap)
-                )
-                walk_ext = {int(csr_.node_ids[k]): v for k, v in walk.items()}
-                walking = walk_ext.get(int(r.d_node))
+                walking, legs = unpack_legs(r)
                 journeys = []
                 if walking is not None:
                     journeys.append({
@@ -170,47 +128,26 @@ def range_routing(
                         "travel_time": walking, "transfers": 0,
                         "walking_time": walking,
                     })
-                has = (
-                    r.a_stop is not None and not pd.isna(r.a_stop)
-                    and r.e_stop is not None and not pd.isna(r.e_stop)
-                )
-                if has:
-                    a_stop, a_secs = int(r.a_stop), int(r.a_secs)
-                    e_stop, e_secs = int(r.e_stop), int(r.e_secs)
-                    skip = walking is not None and a_secs + e_secs >= walking
-                    if not skip:
-                        if warm_start:
-                            from ferrobus_spark.routing.raptor import rraptor
-
-                            results = [
-                                (dep, arr, k)
-                                for dep, arr, k in rraptor(
-                                    tt_, a_stop, e_stop,
-                                    lo + a_secs, hi + a_secs, max_transfers,
-                                )
-                                if arr is not None
-                            ]
-                        else:
-                            results = []
-                            for dep in source_departures(tt_, a_stop, lo + a_secs, hi + a_secs):
-                                best, best_k = raptor(
-                                    tt_, a_stop, dep, max_transfers, target=e_stop
-                                )
-                                arr = best[e_stop]
-                                if arr != INF:
-                                    results.append((dep, int(arr), int(best_k[e_stop])))
-                        for dep, arr, k in sorted(results):
-                            transit = int(arr) - dep
-                            origin_dep = dep - a_secs
-                            dest_arr = int(arr) + e_secs
-                            total = dest_arr - origin_dep
-                            journeys.append({
-                                "departure_time": origin_dep,
-                                "arrival_time": dest_arr,
-                                "travel_time": total,
-                                "transfers": int(k),
-                                "walking_time": total - transit,
-                            })
+                if legs is not None:
+                    a_stop, a_secs, e_stop, e_secs = legs
+                    for dep in source_departures(tt_, a_stop, lo + a_secs, hi + a_secs):
+                        best, best_k = raptor(
+                            tt_, a_stop, dep, max_transfers, target=e_stop
+                        )
+                        arr = best[e_stop]
+                        if arr == INF:
+                            continue
+                        transit = int(arr) - dep
+                        origin_dep = dep - a_secs
+                        dest_arr = int(arr) + e_secs
+                        total = dest_arr - origin_dep
+                        journeys.append({
+                            "departure_time": origin_dep,
+                            "arrival_time": dest_arr,
+                            "travel_time": total,
+                            "transfers": int(best_k[e_stop]),
+                            "walking_time": total - transit,
+                        })
                 keep = pareto_front_flags(journeys)
                 for j, k in zip(journeys, keep):
                     out.append((

@@ -134,145 +134,3 @@ def raptor(
         if not marked.any():
             break
     return best, best_k
-
-
-def rraptor(
-    tt: Timetable,
-    source: int,
-    target: int,
-    dep_lo: int,
-    dep_hi: int,
-    max_transfers: int,
-    departures: list[int] | None = None,
-) -> list[tuple[int, int | None, int]]:
-    """rRAPTOR warm-start (range_raptor.rs:50-219): departures processed
-    latest→earliest REUSING the best-arrival labels across runs.
-
-    Returns [(departure, arrival|None, transfers_used)] in latest-first
-    order. Semantics mirrored exactly:
-
-    * ``best``/``best_k`` persist across departures (state.update guards
-      against them, state.rs:44-57) — valid because leaving earlier can
-      never arrive later, so retained bounds only prune dominated work;
-    * per departure, round arrays reset but rounds CARRY OVER improvements
-      (carry_over_improvements, :22-30): after the swap, any stop whose
-      prev board beats curr inherits the prev labels and is re-marked;
-    * footpath pass runs over ALL currently marked stops (carried +
-      route-marked), ascending with live reads (raptor_utils.rs:63-103);
-    * per-departure result = the PERSISTED best arrival at the target
-      (:195-214) — the profile "depart at or after" value.
-    """
-    n = tt.n_stops
-    if departures is None:
-        from ferrobus_spark.routing.range import source_departures
-
-        departures = source_departures(tt, source, dep_lo, dep_hi)
-    deps = sorted(departures, reverse=True)
-
-    best = np.full(n, INF, np.int64)
-    best_k = np.zeros(n, np.int64)
-    journeys: list[tuple[int, int | None, int]] = []
-
-    for dep in deps:
-        prev_arr = np.full(n, INF, np.int64)
-        prev_board = np.full(n, INF, np.int64)
-        curr_arr = np.full(n, INF, np.int64)
-        curr_board = np.full(n, INF, np.int64)
-        marked = np.zeros(n, bool)
-
-        def update(rnd: int, stop: int, arrival: int, board: int) -> bool:
-            if arrival < curr_arr[stop]:
-                curr_arr[stop] = arrival
-                curr_board[stop] = board
-                if arrival < best[stop]:
-                    best[stop] = arrival
-                    best_k[stop] = rnd
-                    return True
-            return False
-
-        update(0, source, dep, dep)
-        marked[source] = True
-        for k in range(tt.tr_indptr[source], tt.tr_indptr[source + 1]):
-            t = int(tt.tr_target[k])
-            nt = dep + int(tt.tr_secs[k])
-            if update(0, t, nt, nt):
-                marked[t] = True
-
-        for rnd in range(1, max_transfers + 1):
-            prev_arr, curr_arr = curr_arr, prev_arr
-            prev_board, curr_board = curr_board, prev_board
-            # queue from pre-carry marked stops
-            marked_stops = np.nonzero(marked)[0]
-            route_ids = np.unique(
-                np.concatenate(
-                    [tt.sr_routes[tt.sr_indptr[s] : tt.sr_indptr[s + 1]] for s in marked_stops]
-                )
-                if len(marked_stops)
-                else np.array([], np.int64)
-            )
-            queue_mask = marked.copy()
-            marked.fill(False)
-            # carry over improvements from the previous round (rraptor-only:
-            # curr is NOT cleared, it holds round r-2; prev-better wins)
-            carry = prev_board < curr_board
-            curr_arr[carry] = prev_arr[carry]
-            curr_board[carry] = prev_board[carry]
-            marked |= carry
-            if len(route_ids) == 0 and not marked.any():
-                break
-            target_bound = best[target]
-
-            for r in route_ids:
-                stops = tt.route_stops(int(r))
-                mk = np.nonzero(queue_mask[stops])[0]
-                if len(mk) == 0:
-                    continue
-                start_pos = int(mk[0])
-                arr_m, dep_m = tt.trip_block(int(r))
-                n_trips = arr_m.shape[0]
-                boards = prev_board[stops]
-                e = np.full(len(stops), n_trips, np.int64)
-                active = boards != INF
-                active[:start_pos] = False
-                for pos in np.nonzero(active)[0]:
-                    e[pos] = np.searchsorted(dep_m[:, pos], boards[pos], side="left")
-                t_pos = np.minimum.accumulate(e)
-                riding = t_pos < n_trips
-                if not riding.any():
-                    continue
-                for pos in np.nonzero(riding)[0]:
-                    ti = int(t_pos[pos])
-                    s = int(stops[pos])
-                    actual_arrival = int(arr_m[ti, pos])
-                    effective_board = (
-                        actual_arrival if s == target else int(dep_m[ti, pos])
-                    )
-                    if update(rnd, s, actual_arrival, effective_board):
-                        marked[s] = True
-                    if effective_board >= target_bound:
-                        break
-
-            # footpaths from ALL marked (carried + route-marked), ascending
-            new_marks = np.zeros(n, bool)
-            tb = best[target]
-            for s in np.nonzero(marked)[0]:
-                cb = int(curr_board[s])
-                for k in range(tt.tr_indptr[s], tt.tr_indptr[s + 1]):
-                    t = int(tt.tr_target[k])
-                    nt = cb + int(tt.tr_secs[k])
-                    if nt >= curr_board[t] or nt >= tb:
-                        continue
-                    if update(rnd, t, nt, nt):
-                        new_marks[t] = True
-            marked |= new_marks
-
-            at = curr_arr[target]
-            if at != INF and at > best[target]:
-                break
-            if not marked.any():
-                break
-
-        arr = None if best[target] == INF else int(best[target])
-        journeys.append((int(dep), arr, int(best_k[target]) if arr is not None else 0))
-
-    return journeys

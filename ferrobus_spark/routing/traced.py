@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ferrobus_spark.routing.csr import bounded_dijkstra
+from ferrobus_spark.routing.points import od_legs, unpack_legs
 from ferrobus_spark.routing.timetable import INF, Timetable
 
 LEG_SCHEMA = T.StructType([
@@ -273,76 +273,40 @@ def _reconstruct(tt: Timetable, st: TracedState, source: int, target: int,
 def detailed_journeys(
     spark: SparkSession,
     tt: Timetable,
-    csr,
     od_pairs: DataFrame,
     origin_tables: dict[str, DataFrame],
     dest_tables: dict[str, DataFrame],
     departure: int,
     max_transfers: int,
 ) -> DataFrame:
-    """Legs table per OD pair (traced_multimodal_routing, capped 1×1)."""
-    o_nodes = origin_tables["point_nodes"].select(
-        F.col("point_id").alias("origin_id"), F.col("node_id").alias("o_node"),
-        F.col("snap_secs").alias("o_snap"), F.col("max_walking_time").alias("o_mwt"),
-    )
-    o_stop = origin_tables["point_stops"].filter(F.col("rank") == 1).select(
-        F.col("point_id").alias("origin_id"),
-        F.col("stop_idx").alias("a_stop"), F.col("access_secs").alias("a_secs"),
-    )
-    d_nodes = dest_tables["point_nodes"].select(
-        F.col("point_id").alias("dest_id"), F.col("node_id").alias("d_node")
-    )
-    d_stop = dest_tables["point_stops"].filter(F.col("rank") == 1).select(
-        F.col("point_id").alias("dest_id"),
-        F.col("stop_idx").alias("e_stop"), F.col("access_secs").alias("e_secs"),
-    )
-    rows = (
-        od_pairs.join(o_nodes, "origin_id").join(o_stop, "origin_id", "left")
-        .join(d_nodes, "dest_id").join(d_stop, "dest_id", "left")
-    )
-    bc = spark.sparkContext.broadcast((tt, csr))
+    """Legs table per OD pair (traced_multimodal_routing, capped 1×1).
+
+    The walking option and the rank-1 access and egress stops come from
+    :func:`od_legs`; the kernel only runs the traced RAPTOR."""
+    rows = od_legs(od_pairs, origin_tables, dest_tables)
+    bc = spark.sparkContext.broadcast(tt)
 
     def kernel(batches):
-        tt_, csr_ = bc.value
-        # one bounded Dijkstra per ORIGIN, not per pair: the walking map
-        # depends only on (o_node, budget); pairs are partitioned by
-        # origin_id below so an origin's dests hit the same worker's memo
-        walk_memo: dict[tuple[int, int], dict[int, int]] = {}
+        tt_ = bc.value
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
                 pid = int(r.pair_id)
-                wkey = (int(r.o_node), int(r.o_mwt) - int(r.o_snap))
-                if wkey not in walk_memo:
-                    if len(walk_memo) >= 128:  # bound task memory
-                        walk_memo.clear()
-                    dense = int(csr_.dense_of([wkey[0]])[0])
-                    walk = bounded_dijkstra(csr_, dense, max_cost=wkey[1])
-                    walk_memo[wkey] = {
-                        int(csr_.node_ids[k]): v for k, v in walk.items()
-                    }
-                walking = walk_memo[wkey].get(int(r.d_node))
-                has = (r.a_stop is not None and not pd.isna(r.a_stop)
-                       and r.e_stop is not None and not pd.isna(r.e_stop))
+                walking, legs = unpack_legs(r)
                 best_total = None
-                best = None
-                if has:
-                    a_stop, a_secs = int(r.a_stop), int(r.a_secs)
-                    e_stop, e_secs = int(r.e_stop), int(r.e_secs)
-                    bound = walking if walking is not None else None
-                    if bound is None or a_secs + e_secs < bound:
-                        j = traced_raptor(
-                            tt_, a_stop, departure + a_secs, max_transfers, e_stop
-                        )
-                        if j is not None:
-                            transit_time = j.arrival_time - j.departure_time
-                            best_total = a_secs + transit_time + e_secs
-                            best = (a_stop, a_secs, e_stop, e_secs, j)
+                j = None
+                if legs is not None:
+                    a_stop, a_secs, e_stop, e_secs = legs
+                    j = traced_raptor(
+                        tt_, a_stop, departure + a_secs, max_transfers, e_stop
+                    )
+                    if j is not None:
+                        transit_time = j.arrival_time - j.departure_time
+                        best_total = a_secs + transit_time + e_secs
                 if walking is not None and (best_total is None or walking <= best_total):
                     out.append((pid, 0, "walk", -1, -1, departure,
                                 departure + walking, -1, -1))
-                elif best is not None:
-                    a_stop, a_secs, e_stop, e_secs, j = best
+                elif j is not None:
                     idx = 0
                     out.append((pid, idx, "walk", -1, a_stop, departure,
                                 departure + a_secs, -1, -1))
@@ -357,11 +321,8 @@ def detailed_journeys(
                                 j.arrival_time + e_secs, -1, -1))
             yield pd.DataFrame(out, columns=[f.name for f in LEG_SCHEMA.fields])
 
-    # hash-partition by origin so each origin's Dijkstra runs once per
-    # worker (memo above); origins are many, so no single-task skew
     parts = max(1, min(rows.count(), spark.sparkContext.defaultParallelism * 2))
-    rows = rows.repartition(parts, "origin_id").sortWithinPartitions("origin_id")
-    return rows.mapInPandas(kernel, LEG_SCHEMA)
+    return rows.repartition(parts).mapInPandas(kernel, LEG_SCHEMA)
 
 
 def legs_to_geojson_model(

@@ -54,11 +54,11 @@ def test_grid_snap_matches(spark_grid, oracle_index):
     assert got == exp
 
 
-def test_isochrone_cells_exact(spark, timetable, spark_model, spark_origins,
+def test_isochrone_cells_exact(spark, timetable, spark_origins,
                                spark_grid, oracle_model, oracle_index):
     got = (
         iso.isochrone_cells(
-            spark, timetable, spark_model, spark_origins, spark_grid,
+            spark, timetable, spark_origins, spark_grid,
             DEP, MAX_TRANSFERS, CUTOFF,
         )
         .toPandas()
@@ -75,9 +75,9 @@ def test_isochrone_cells_exact(spark, timetable, spark_model, spark_origins,
         assert len(exp) >= 3  # non-trivial isochrone
 
 
-def test_isochrone_wkt_shape(spark, timetable, spark_model, spark_origins, spark_grid):
+def test_isochrone_wkt_shape(spark, timetable, spark_origins, spark_grid):
     cells = iso.isochrone_cells(
-        spark, timetable, spark_model, spark_origins, spark_grid,
+        spark, timetable, spark_origins, spark_grid,
         DEP, MAX_TRANSFERS, CUTOFF,
     )
     wkt = iso.isochrone_wkt(cells).toPandas()
@@ -85,13 +85,13 @@ def test_isochrone_wkt_shape(spark, timetable, spark_model, spark_origins, spark
     assert all(w.startswith("MULTIPOLYGON(") for w in wkt["wkt"])
 
 
-def test_percent_access_exact(spark, timetable, spark_model, spark_origins,
+def test_percent_access_exact(spark, timetable, spark_origins,
                               spark_grid, oracle_model, oracle_index):
     rng = (7 * 3600, 7 * 3600 + 3600)
     interval = 1200
     got = (
         iso.percent_access_cells(
-            spark, timetable, spark_model, spark_origins, spark_grid,
+            spark, timetable, spark_origins, spark_grid,
             rng, interval, MAX_TRANSFERS, CUTOFF,
         )
         .toPandas()

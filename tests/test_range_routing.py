@@ -41,11 +41,10 @@ def spark_points(spark, spark_model):
 
 
 @pytest.fixture(scope="module")
-def journeys(spark, timetable, spark_model, spark_points):
+def journeys(spark, timetable, spark_points):
     od = spark.createDataFrame(OD, "pair_id LONG, origin_id LONG, dest_id LONG")
     return range_routing(
-        spark, timetable, spark_model.csr, od, spark_points, spark_points,
-        DEP_RANGE, MAX_TRANSFERS,
+        spark, timetable, od, spark_points, spark_points, DEP_RANGE, MAX_TRANSFERS
     ).toPandas()
 
 
@@ -107,39 +106,18 @@ def test_upper_median_matches(spark, journeys, oracle_model, oracle_points):
         assert med[pair_id] == O.upper_median_travel_time(exp_all), f"pair {pair_id}"
 
 
-def test_warm_start_identical(spark, spark_model, timetable, spark_points):
-    """rRAPTOR warm-start returns byte-identical journey rows."""
-    od = spark.createDataFrame(OD, "pair_id LONG, origin_id LONG, dest_id LONG")
-    kw = dict(
-        od_pairs=od,
-        origin_tables=spark_points,
-        dest_tables=spark_points,
-        dep_range=DEP_RANGE,
-        max_transfers=MAX_TRANSFERS,
-    )
-    cold = range_routing(spark, timetable, spark_model.csr, **kw).toPandas()
-    warm = range_routing(
-        spark, timetable, spark_model.csr, warm_start=True, **kw
-    ).toPandas()
-    key = ["pair_id", "departure_time"]
-    cold = cold.sort_values(key).reset_index(drop=True)
-    warm = warm.sort_values(key).reset_index(drop=True)
-    assert cold.equals(warm)
-
-
-def test_warm_start_tie_semantics():
-    """Pin the documented rRAPTOR tie caveat (range.py docstring): when
-    an EARLIER departure exactly ties a later departure's arrival, the
-    warm start reports the persisted transfers count (reference parity —
-    best/best_k persist across departures) while the cold per-departure
-    path recomputes it. Arrivals must be identical either way.
+def test_per_departure_tie_semantics():
+    """Pin the documented tie deviation (range.py docstring): every
+    departure reports its own transfer count, where the reference's
+    rRAPTOR would persist the count of a later departure that ties its
+    arrival.
 
     Hand-built timetable: slow direct route 0→2 (dep 100, arr 400) vs a
     two-leg path 0→1→2 (deps 250/320, arr 400) — the later departure's
     2-round journey ties the earlier departure's 1-round journey."""
     import numpy as np
 
-    from ferrobus_spark.routing.raptor import raptor, rraptor
+    from ferrobus_spark.routing.raptor import raptor
     from ferrobus_spark.routing.timetable import Timetable
 
     tt = Timetable(
@@ -157,19 +135,9 @@ def test_warm_start_tie_semantics():
         tr_target=np.array([], np.int64),
         tr_secs=np.array([], np.int64),
     )
-    warm = dict(
-        (dep, (arr, k))
-        for dep, arr, k in rraptor(tt, 0, 2, 0, 300, 3)
-    )
-    cold = {}
+    assert source_departures(tt, 0, 0, 300) == [100, 250]
+    got = {}
     for dep in (100, 250):
         best, best_k = raptor(tt, 0, dep, 3, target=2)
-        cold[dep] = (int(best[2]), int(best_k[2]))
-    # arrivals identical in both regimes
-    assert {d: a for d, (a, _k) in warm.items()} == {100: 400, 250: 400}
-    assert {d: a for d, (a, _k) in cold.items()} == {100: 400, 250: 400}
-    # the tie: warm persists the later departure's 2-transfer count for
-    # dep 100 (reference semantics); cold recomputes 1 for it
-    assert warm[250][1] == 2 and cold[250][1] == 2
-    assert warm[100][1] == 2  # persisted best_k — reference parity
-    assert cold[100][1] == 1  # per-departure recompute
+        got[dep] = (int(best[2]), int(best_k[2]))
+    assert got == {100: (400, 1), 250: (400, 2)}

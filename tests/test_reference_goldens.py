@@ -81,11 +81,11 @@ def test_street_graph_shape(zhelez_model):
     assert zhelez_model["street_edges"].count() == 20130  # symmetric rows
 
 
-def test_travel_time_matrix_golden(spark, zhelez_model, zhelez_tt, zhelez_points):
+def test_travel_time_matrix_golden(spark, zhelez_tt, zhelez_points):
     from ferrobus_spark.routing import products
 
     rows = products.travel_time_matrix(
-        spark, zhelez_tt, zhelez_model.csr, zhelez_points, 8 * 3600, 2
+        spark, zhelez_tt, zhelez_points, 8 * 3600, 2
     ).collect()
     m = {(r.origin_id, r.dest_id): r.travel_time for r in rows}
     assert m[(0, 1)] == 1044  # test.py:52
@@ -93,22 +93,22 @@ def test_travel_time_matrix_golden(spark, zhelez_model, zhelez_tt, zhelez_points
     assert m[(0, 0)] == 0 and m[(1, 1)] == 0
 
 
-def test_find_route_golden(spark, zhelez_model, zhelez_tt, zhelez_points):
+def test_find_route_golden(spark, zhelez_tt, zhelez_points):
     from ferrobus_spark.routing import products
 
+    od = spark.createDataFrame([(0, 2, 1)], "pair_id long, origin_id long, dest_id long")
     rows = products.route_pairs(
-        spark, zhelez_tt, zhelez_model.csr, zhelez_points, zhelez_points,
-        [(2, 1)], 43200, 2,
+        spark, zhelez_tt, od, zhelez_points, zhelez_points, 43200, 2
     ).collect()
     assert len(rows) == 1
     assert rows[0].travel_time == 1566  # test.py:66
 
 
-def test_one_to_many_golden(spark, zhelez_model, zhelez_tt, zhelez_points):
+def test_one_to_many_golden(spark, zhelez_tt, zhelez_points):
     from ferrobus_spark.routing import products
 
     rows = products.one_to_many(
-        spark, zhelez_tt, zhelez_model.csr, zhelez_points, zhelez_points, 43200, 2
+        spark, zhelez_tt, zhelez_points, zhelez_points, 43200, 2
     ).collect()
     o = {(r.origin_id, r.dest_id): r.travel_time for r in rows}
     assert o[(2, 1)] == 1524  # test.py:87
@@ -150,7 +150,7 @@ def test_isochrone_wkt_prefix_golden(spark, zhelez_model, zhelez_tt, zhelez_poin
         max_stops=10,
     )
     cells = isochrone_cells(
-        spark, zhelez_tt, zhelez_model, origin, grid, 43200, 3, cutoff=1200
+        spark, zhelez_tt, origin, grid, 43200, 3, cutoff=1200
     )
     wkt_rows = isochrone_wkt(cells).collect()
     assert len(wkt_rows) == 1
@@ -228,12 +228,12 @@ def test_multi_feed_zhelez_plus_disjoint(spark, tmp_path_factory):
         model["street_nodes"], model["node_to_stop"], model.csr,
         max_walking_time=1200, max_stops=10,
     )
-    rows = products.travel_time_matrix(spark, tt, model.csr, pts, 8 * 3600, 2).collect()
+    rows = products.travel_time_matrix(spark, tt, pts, 8 * 3600, 2).collect()
     m = {(r.origin_id, r.dest_id): r.travel_time for r in rows}
     assert m[(0, 1)] == 1044 and m[(1, 0)] == 1253  # goldens unchanged
 
 
-def test_range_routing_golden(spark, zhelez_model, zhelez_tt, zhelez_points):
+def test_range_routing_golden(spark, zhelez_tt, zhelez_points):
     """range_multimodal_routing golden (reference test.py:103-137): the
     (56.256657,93.533561)→(56.242574,93.499159) pair over departures
     43200–44000 at mt=2 yields exactly three 1-transfer journeys, all
@@ -242,8 +242,7 @@ def test_range_routing_golden(spark, zhelez_model, zhelez_tt, zhelez_points):
 
     od = spark.createDataFrame([(0, 2, 1)], "pair_id long, origin_id long, dest_id long")
     rows = range_routing(
-        spark, zhelez_tt, zhelez_model.csr, od, zhelez_points, zhelez_points,
-        (43200, 44000), 2,
+        spark, zhelez_tt, od, zhelez_points, zhelez_points, (43200, 44000), 2
     ).collect()
     got = sorted(
         (r.travel_time, r.transfers, r.walking_time, r.departure_time, r.arrival_time)
@@ -256,43 +255,20 @@ def test_range_routing_golden(spark, zhelez_model, zhelez_tt, zhelez_points):
     ]
 
 
-def test_pareto_range_routing_golden(spark, zhelez_model, zhelez_tt, zhelez_points):
+def test_pareto_range_routing_golden(spark, zhelez_tt, zhelez_points):
     """pareto_range_multimodal_routing golden (test.py:139-161): the
     Pareto front of the same window keeps ONLY the 809 s journey."""
     from ferrobus_spark.routing.range import range_routing
 
     od = spark.createDataFrame([(0, 2, 1)], "pair_id long, origin_id long, dest_id long")
     rows = range_routing(
-        spark, zhelez_tt, zhelez_model.csr, od, zhelez_points, zhelez_points,
-        (43200, 44000), 2,
+        spark, zhelez_tt, od, zhelez_points, zhelez_points, (43200, 44000), 2
     ).collect()
     front = [r for r in rows if r.is_pareto]
     assert len(front) == 1
     r = front[0]
     assert (r.travel_time, r.transfers, r.walking_time, r.departure_time,
             r.arrival_time) == (809, 1, 52, 43957, 44766)  # test.py:153-159
-
-
-def test_range_routing_golden_warm_start(spark, zhelez_model, zhelez_tt, zhelez_points):
-    """The rRAPTOR label-reuse regime reproduces the same golden — both
-    range regimes now carry reference parity on the real-city fixture."""
-    from ferrobus_spark.routing.range import range_routing
-
-    od = spark.createDataFrame([(0, 2, 1)], "pair_id long, origin_id long, dest_id long")
-    rows = range_routing(
-        spark, zhelez_tt, zhelez_model.csr, od, zhelez_points, zhelez_points,
-        (43200, 44000), 2, warm_start=True,
-    ).collect()
-    got = sorted(
-        (r.travel_time, r.transfers, r.walking_time, r.departure_time,
-         r.arrival_time, r.is_pareto)
-        for r in rows
-    )
-    assert got == [
-        (809, 1, 52, 43957, 44766, True),
-        (1109, 1, 52, 43657, 44766, False),
-        (1469, 1, 52, 43297, 44766, False),
-    ]
 
 
 def test_detailed_journey_geojson_properties_golden(
@@ -324,8 +300,7 @@ def test_detailed_journey_geojson_properties_golden(
 
     od = spark.createDataFrame([(0, 2, 3)], "pair_id long, origin_id long, dest_id long")
     legs = detailed_journeys(
-        spark, zhelez_tt, zhelez_model.csr, od, zhelez_points, zhelez_points,
-        43200, 3,
+        spark, zhelez_tt, od, zhelez_points, zhelez_points, 43200, 3
     )
     rows = legs_to_geojson_model(legs, zhelez_model).collect()
     assert len(rows) == 1

@@ -81,11 +81,10 @@ def test_transit_points_match(spark_points, oracle_points):
 
 
 def test_one_to_many_matches_oracle(
-    spark, timetable, spark_model, spark_points, oracle_model, oracle_points
+    spark, timetable, spark_points, oracle_model, oracle_points
 ):
     got = products.one_to_many(
-        spark, timetable, spark_model.csr, spark_points, spark_points,
-        DEPARTURE, MAX_TRANSFERS,
+        spark, timetable, spark_points, spark_points, DEPARTURE, MAX_TRANSFERS
     ).toPandas()
     got = got.set_index(["origin_id", "dest_id"]).sort_index()
 
@@ -109,35 +108,80 @@ def test_one_to_many_matches_oracle(
                 assert int(row["transit_time"]) == e["transit_time"], key
 
 
-def test_matrix_diagonal_zero(spark, timetable, spark_model, spark_points):
+def test_od_legs_walking_matches_dijkstra(spark, spark_model, spark_points):
+    """Every origin × destination of the fixture: od_legs reads the same
+    walk as a bounded Dijkstra from the origin's snap node, and a pair
+    with a gated point (100 is off-network) has no row."""
+    from ferrobus_spark.routing.csr import bounded_dijkstra
+    from ferrobus_spark.routing.points import od_legs
+
+    csr = spark_model.csr
+    nodes = {
+        int(r.point_id): (int(r.node_id), int(r.snap_secs), int(r.max_walking_time))
+        for r in spark_points["point_nodes"].collect()
+    }
+    ids = sorted(int(p) for p in query_points()["point_id"])
+    assert 100 in ids and 100 not in nodes
+    od = spark.createDataFrame(
+        [(i * 1000 + j, o, d) for i, o in enumerate(ids) for j, d in enumerate(ids)],
+        "pair_id long, origin_id long, dest_id long",
+    )
+    got = {
+        (int(r.origin_id), int(r.dest_id)): r.walking
+        for r in od_legs(od, spark_points, spark_points).collect()
+    }
+    exp = {}
+    for o, (node, snap, mwt) in nodes.items():
+        dist = bounded_dijkstra(csr, int(csr.dense_of([node])[0]), max_cost=mwt - snap)
+        for d, (d_node, _s, _m) in nodes.items():
+            exp[(o, d)] = dist.get(int(csr.dense_of([d_node])[0]))
+    assert len(exp) == len(nodes) ** 2 and all(exp[(p, p)] == 0 for p in nodes)
+    assert got == exp
+
+
+def test_route_pairs_drops_gated_points(spark, timetable, spark_points):
+    """A pair whose destination (or origin) fails the snap gate has no
+    row, as in range_routing and detailed_journeys."""
+    od = spark.createDataFrame(
+        [(0, 0, 100), (1, 100, 0), (2, 0, 0)],
+        "pair_id long, origin_id long, dest_id long",
+    )
+    rows = products.route_pairs(
+        spark, timetable, od, spark_points, spark_points, DEPARTURE, MAX_TRANSFERS
+    ).collect()
+    assert [(r.origin_id, r.dest_id, r.travel_time) for r in rows] == [(0, 0, 0)]
+
+
+def test_matrix_diagonal_zero(spark, timetable, spark_points):
     mat = products.travel_time_matrix(
-        spark, timetable, spark_model.csr, spark_points, DEPARTURE, MAX_TRANSFERS
+        spark, timetable, spark_points, DEPARTURE, MAX_TRANSFERS
     ).toPandas()
     diag = mat[mat["origin_id"] == mat["dest_id"]]
     assert (diag["travel_time"] == 0).all()
 
 
 def test_statistics_match_oracle(
-    spark, timetable, spark_model, spark_points, oracle_model, oracle_points
+    spark, timetable, spark_points, oracle_model, oracle_points
 ):
     pids = sorted(oracle_points)
     pts = [oracle_points[p] for p in pids]
-    for stat, cutoff in [("mean", None), ("median", None), ("mean", 3000)]:
+    for cutoff in [None, 3000]:
         got = products.travel_time_statistics(
-            spark, timetable, spark_model.csr, spark_points,
-            DEPARTURE, MAX_TRANSFERS, threshold=0.5, stat=stat, filter_cutoff=cutoff,
-        ).toPandas().set_index("origin_id")["stat_value"].to_dict()
-        exp = O.travel_time_statistics(
-            oracle_model, pts, DEPARTURE, MAX_TRANSFERS,
-            threshold=0.5, stat=stat, filter_cutoff=cutoff,
-        )
-        for i, pid in enumerate(pids):
-            g = got.get(pid)
-            e = exp[i]
-            if e is None:
-                assert g is None or pd.isna(g), (stat, pid)
-            else:
-                assert g == pytest.approx(e, abs=1e-9), (stat, pid)
+            spark, timetable, spark_points,
+            DEPARTURE, MAX_TRANSFERS, threshold=0.5, filter_cutoff=cutoff,
+        ).toPandas().set_index("origin_id")
+        for stat, col in [("mean", "mean_tt"), ("median", "median_tt")]:
+            exp = O.travel_time_statistics(
+                oracle_model, pts, DEPARTURE, MAX_TRANSFERS,
+                threshold=0.5, stat=stat, filter_cutoff=cutoff,
+            )
+            for i, pid in enumerate(pids):
+                g = got[col].get(pid)
+                e = exp[i]
+                if e is None:
+                    assert g is None or pd.isna(g), (stat, cutoff, pid)
+                else:
+                    assert g == pytest.approx(e, abs=1e-9), (stat, cutoff, pid)
 
 
 def _chain_model(spark):

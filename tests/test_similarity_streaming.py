@@ -35,14 +35,6 @@ def test_bruteforce_gate_falls_back_to_ivf(spark, embeddings):
     assert out.select("query_id").distinct().count() == embeddings.count()
 
 
-def test_route_pairs_bound():
-    from ferrobus_spark.routing.products import MAX_ROUTE_PAIRS, route_pairs
-
-    too_many = [(0, i) for i in range(MAX_ROUTE_PAIRS + 1)]
-    with pytest.raises(ValueError, match="MAX_ROUTE_PAIRS"):
-        route_pairs(None, None, None, None, None, too_many, 0, 3)
-
-
 def test_lsh_topk_recall(spark, embeddings):
     exact = brute_force_topk(spark, embeddings, embeddings, k=1).toPandas()
     approx = lsh_topk(spark, embeddings, embeddings, k=1,

@@ -20,11 +20,10 @@ def spark_points(spark, spark_model):
 
 
 @pytest.fixture(scope="module")
-def legs(spark, timetable, spark_model, spark_points):
+def legs(spark, timetable, spark_points):
     od = spark.createDataFrame(OD, "pair_id LONG, origin_id LONG, dest_id LONG")
     return detailed_journeys(
-        spark, timetable, spark_model.csr, od, spark_points, spark_points,
-        DEP, MAX_TRANSFERS,
+        spark, timetable, od, spark_points, spark_points, DEP, MAX_TRANSFERS
     ).toPandas()
 
 

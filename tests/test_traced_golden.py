@@ -179,16 +179,55 @@ def _micro_csr(edge_weight=None):
     )
 
 
-def _micro_points(spark):
-    nodes = spark.createDataFrame(
-        [(0, 1, 0, 1200), (1, 2, 0, 1200)],
-        "point_id long, node_id long, snap_secs long, max_walking_time long",
+def _walk_rows(csr, nodes):
+    """point_walk rows (point_id, node_id, walk_secs) of each
+    (point_id, node_id, snap_secs, max_walking_time) row: the bounded
+    Dijkstra that build_point_tables runs."""
+    from ferrobus_spark.routing.csr import bounded_dijkstra
+
+    rows = []
+    for pid, node, snap, mwt in nodes:
+        dense = int(csr.dense_of([node])[0])
+        for nd, secs in bounded_dijkstra(csr, dense, max_cost=mwt - snap).items():
+            rows.append((pid, int(csr.node_ids[nd]), secs))
+    return rows
+
+
+def _point_tables(spark, csr, nodes, stops):
+    return {
+        "point_nodes": spark.createDataFrame(
+            nodes, "point_id long, node_id long, snap_secs long, max_walking_time long"
+        ),
+        "point_stops": spark.createDataFrame(
+            stops, "point_id long, stop_idx long, access_secs long, rank long"
+        ),
+        "point_walk": spark.createDataFrame(
+            _walk_rows(csr, nodes), "point_id long, node_id long, walk_secs long"
+        ),
+    }
+
+
+def _micro_points(spark, csr):
+    return _point_tables(
+        spark, csr, [(0, 1, 0, 1200), (1, 2, 0, 1200)], [(0, 0, 0, 1), (1, 1, 0, 1)]
     )
-    stops = spark.createDataFrame(
-        [(0, 0, 0, 1), (1, 1, 0, 1)],
-        "point_id long, stop_idx long, access_secs long, rank long",
-    )
-    return {"point_nodes": nodes, "point_stops": stops}
+
+
+def test_od_legs_walk_matches_dijkstra_micro(spark):
+    """On the connected micro graph the pair's walk is the 20 s edge, and
+    od_legs reads it from point_walk; unconnected, the pair has no walk."""
+    from ferrobus_spark.routing.csr import bounded_dijkstra
+    from ferrobus_spark.routing.points import od_legs
+
+    od = spark.createDataFrame([(0, 0, 1)], "pair_id long, origin_id long, dest_id long")
+    for weight, walk in [(20, 20), (None, None)]:
+        csr = _micro_csr(edge_weight=weight)
+        pts = _micro_points(spark, csr)
+        rows = od_legs(od, pts, pts).collect()
+        assert len(rows) == 1
+        assert bounded_dijkstra(csr, 0, max_cost=1200).get(1) == walk
+        assert rows[0].walking == walk
+        assert (rows[0].a_stop, rows[0].e_stop) == (0, 1)
 
 
 def test_multimodal_prefers_direct_walking_when_faster(spark):
@@ -198,11 +237,10 @@ def test_multimodal_prefers_direct_walking_when_faster(spark):
     from ferrobus_spark.routing.traced import detailed_journeys
 
     tt = make_timetable(2, [([0, 1], [[(100, 100), (200, 200)]])], {})
-    csr = _micro_csr(edge_weight=20)
-    pts = _micro_points(spark)
+    pts = _micro_points(spark, _micro_csr(edge_weight=20))
     od = spark.createDataFrame([(0, 0, 1)], "pair_id long, origin_id long, dest_id long")
     legs = [tuple(r) for r in detailed_journeys(
-        spark, tt, csr, od, pts, pts, 100, 1
+        spark, tt, od, pts, pts, 100, 1
     ).orderBy("leg_idx").collect()]
     assert legs == [(0, 0, "walk", -1, -1, 100, 120, -1, -1)]  # arrival 120
 
@@ -215,11 +253,11 @@ def test_multimodal_pruning_keeps_best_sorted_candidate(spark):
     from ferrobus_spark.routing.traced import detailed_journeys
 
     tt = make_timetable(2, [([0, 1], [[(100, 100), (120, 120)]])], {})
-    csr = _micro_csr(edge_weight=None)  # walking_paths empty in the ref test
-    pts = _micro_points(spark)
+    # walking_paths empty in the ref test: the nodes are unconnected
+    pts = _micro_points(spark, _micro_csr(edge_weight=None))
     od = spark.createDataFrame([(0, 0, 1)], "pair_id long, origin_id long, dest_id long")
     legs = [tuple(r) for r in detailed_journeys(
-        spark, tt, csr, od, pts, pts, 100, 1
+        spark, tt, od, pts, pts, 100, 1
     ).orderBy("leg_idx").collect()]
     assert legs == [
         (0, 0, "walk", -1, 0, 100, 100, -1, -1),      # access → S0
@@ -228,19 +266,11 @@ def test_multimodal_pruning_keeps_best_sorted_candidate(spark):
     ]
 
 
-def _reach_points(spark):
-    nodes = spark.createDataFrame(
-        [(0, 1, 0, 600), (1, 2, 0, 600)],
-        "point_id long, node_id long, snap_secs long, max_walking_time long",
+def _reach_points(spark, csr):
+    # start → hidden-route stop S0; end → S2
+    return _point_tables(
+        spark, csr, [(0, 1, 0, 600), (1, 2, 0, 600)], [(0, 0, 0, 1), (1, 2, 0, 1)]
     )
-    stops = spark.createDataFrame(
-        [(0, 0, 0, 1), (1, 2, 0, 1)],  # start → hidden-route stop S0; end → S2
-        "point_id long, stop_idx long, access_secs long, rank long",
-    )
-    walk = spark.createDataFrame(  # unconnected graph: no walk targets
-        [], "point_id long, node_id long, walk_secs long"
-    )
-    return {"point_nodes": nodes, "point_stops": stops, "point_walk": walk}
 
 
 @pytest.mark.parametrize("product", ["route_pairs", "one_to_many"])
@@ -251,19 +281,19 @@ def test_colocated_transfer_restores_reachability(spark, product):
     with it travel_time is exactly 150 (dep 50 → arr 200)."""
     from ferrobus_spark.routing import products
 
-    csr = _micro_csr(edge_weight=None)  # nodes unconnected: no direct walk
-    pts = _reach_points(spark)
-    od = [(0, 1)]
+    # nodes unconnected: no direct walk
+    pts = _reach_points(spark, _micro_csr(edge_weight=None))
+    od = spark.createDataFrame([(0, 0, 1)], "pair_id long, origin_id long, dest_id long")
 
     def run(transfers):
         tt = make_timetable(
             3, [([1, 2], [[(100, 100), (200, 200)]])], transfers
         )
         if product == "route_pairs":
-            rows = products.route_pairs(spark, tt, csr, pts, pts, od, 50, 1).collect()
+            rows = products.route_pairs(spark, tt, od, pts, pts, 50, 1).collect()
         else:
             rows = [
-                r for r in products.one_to_many(spark, tt, csr, pts, pts, 50, 1).collect()
+                r for r in products.one_to_many(spark, tt, pts, pts, 50, 1).collect()
                 if r.origin_id == 0 and r.dest_id == 1
             ]
         return rows
