@@ -82,31 +82,29 @@ def nearest_node_join(
     )
     proven = best.filter(F.col("__d2") <= guarantee_deg2).drop("__d2")
 
-    # fallback: points with no candidate or an unproven best → brute force
+    # fallback: points with no candidate or an unproven best → brute force,
+    # in the same lazy plan (an empty remainder costs one empty cross join)
     unresolved = points.join(proven.select(point_key), point_key, "left_anti")
-    if unresolved.limit(1).count() > 0:
-        bf = (
-            unresolved.select(
-                point_key,
-                F.col("lon").alias("__plon"),
-                F.col("lat").alias("__plat"),
-            )
-            .crossJoin(
-                nodes.select(
-                    "node_id",
-                    F.col("lon").alias("__nlon"),
-                    F.col("lat").alias("__nlat"),
-                )
-            )
-            .withColumn("__d2", _deg2_col("__plon", "__plat", "__nlon", "__nlat"))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
-                point_key,
+    bf = (
+        unresolved.select(
+            point_key,
+            F.col("lon").alias("__plon"),
+            F.col("lat").alias("__plat"),
+        )
+        .crossJoin(
+            nodes.select(
                 "node_id",
-                haversine_col("__plon", "__plat", "__nlon", "__nlat").alias("dist_m"),
+                F.col("lon").alias("__nlon"),
+                F.col("lat").alias("__nlat"),
             )
         )
-        proven = proven.unionByName(bf)
-
-    return proven.withColumn("snap_secs", snap_cost_col(F.col("dist_m")))
+        .withColumn("__d2", _deg2_col("__plon", "__plat", "__nlon", "__nlat"))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select(
+            point_key,
+            "node_id",
+            haversine_col("__plon", "__plat", "__nlon", "__nlat").alias("dist_m"),
+        )
+    )
+    return proven.unionByName(bf).withColumn("snap_secs", snap_cost_col(F.col("dist_m")))

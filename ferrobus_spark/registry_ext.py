@@ -11,6 +11,8 @@ partial-aggregation order can't produce ulp drift.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -1775,36 +1777,52 @@ def _oracle_iso() -> str:
     return isochrone_oracle_sql()
 
 
-_MODEL_CACHE: dict[int, object] = {}
-
-
+@functools.cache
 def _transit_ctx(spark):
-    key = id(spark)
-    if key not in _MODEL_CACHE:
-        # parquet-cached across processes (round 7): sweep children and
-        # fresh sessions reload the built model instead of paying the
-        # ~35 s many-small-jobs build per process
-        from ferrobus_spark.model.cache import load_or_build_model
-        from ferrobus_spark.routing.timetable import build_timetable_csr
+    # parquet-cached across processes (round 7): sweep children and
+    # fresh sessions reload the built model instead of paying the
+    # ~35 s many-small-jobs build per process
+    from ferrobus_spark.model.cache import load_or_build_model
+    from ferrobus_spark.routing.timetable import build_timetable_csr
 
-        model = load_or_build_model(spark)
-        tt = build_timetable_csr(model.tables)
-        _MODEL_CACHE[key] = (model, tt)
-    return _MODEL_CACHE[key]
+    model = load_or_build_model(spark)
+    return model, build_timetable_csr(model.tables)
 
 
-_POINTS_CACHE: dict[int, object] = {}
-
-
+@functools.cache
 def _transit_points(spark):
     """Shared TransitPoint tables (checkpointed) across transit queries."""
-    key = id(spark)
-    if key not in _POINTS_CACHE:
-        from ferrobus_spark.model.cache import load_or_build_points
+    from ferrobus_spark.model.cache import load_or_build_points
 
-        model, _tt = _transit_ctx(spark)
-        _POINTS_CACHE[key] = load_or_build_points(spark, model)
-    return _POINTS_CACHE[key]
+    model, _tt = _transit_ctx(spark)
+    return load_or_build_points(spark, model)
+
+
+@functools.cache
+def _iso_tables(spark):
+    """(grid, origins) point tables of both isochrone queries, built once
+    per session: the res-7 grid over a fixed SF polygon and the one-origin
+    table at street node (10, 3)."""
+    import numpy as np
+    import pandas as pd
+
+    from ferrobus_spark.operators import isochrone as iso
+    from ferrobus_spark.routing.points import build_point_tables
+    from ferrobus_spark.sources.transit import node_lonlat
+
+    model, _tt = _transit_ctx(spark)
+    area = np.array(
+        [[-122.495, 37.705], [-122.43, 37.705], [-122.43, 37.77], [-122.495, 37.77]]
+    )
+    grid = iso.build_iso_grid(spark, model, area, res=7)
+    origins = build_point_tables(
+        spark,
+        spark.createDataFrame(
+            pd.DataFrame([(0, *node_lonlat(10, 3))], columns=["point_id", "lon", "lat"])
+        ),
+        model["street_nodes"], model["node_to_stop"], model.csr,
+    )
+    return grid, origins
 
 
 @register("transit_travel_time_matrix", _oracle_matrix)
@@ -1890,25 +1908,10 @@ def q_transit_journey_geojson(spark, sf_dir):
 @register("transit_percent_access", _oracle_percent)
 def q_transit_percent_access(spark, sf_dir):
     """Percent-access heat map (A7): departure samples × reachable tiles."""
-    import numpy as np
-    import pandas as pd
-
     from ferrobus_spark.operators import isochrone as iso
-    from ferrobus_spark.routing.points import build_point_tables
-    from ferrobus_spark.sources.transit import node_lonlat
 
-    model, tt = _transit_ctx(spark)
-    area = np.array(
-        [[-122.495, 37.705], [-122.43, 37.705], [-122.43, 37.77], [-122.495, 37.77]]
-    )
-    grid = iso.build_iso_grid(spark, model, area, res=7)
-    origins = build_point_tables(
-        spark,
-        spark.createDataFrame(
-            pd.DataFrame([(0, *node_lonlat(10, 3))], columns=["point_id", "lon", "lat"])
-        ),
-        model["street_nodes"], model["node_to_stop"], model.csr,
-    )
+    _, tt = _transit_ctx(spark)
+    grid, origins = _iso_tables(spark)
     return iso.percent_access_cells(
         spark, tt, origins, grid, (7 * 3600, 7 * 3600 + 3600), 1200, 3, 1800
     )
@@ -1916,23 +1919,8 @@ def q_transit_percent_access(spark, sf_dir):
 
 @register("transit_isochrone_tiles", _oracle_iso)
 def q_transit_isochrone(spark, sf_dir):
-    import numpy as np
-    import pandas as pd
-
     from ferrobus_spark.operators import isochrone as iso
-    from ferrobus_spark.routing.points import build_point_tables
-    from ferrobus_spark.sources.transit import node_lonlat
 
-    model, tt = _transit_ctx(spark)
-    area = np.array(
-        [[-122.495, 37.705], [-122.43, 37.705], [-122.43, 37.77], [-122.495, 37.77]]
-    )
-    grid = iso.build_iso_grid(spark, model, area, res=7)
-    origins = build_point_tables(
-        spark,
-        spark.createDataFrame(
-            pd.DataFrame([(0, *node_lonlat(10, 3))], columns=["point_id", "lon", "lat"])
-        ),
-        model["street_nodes"], model["node_to_stop"], model.csr,
-    )
+    _, tt = _transit_ctx(spark)
+    grid, origins = _iso_tables(spark)
     return iso.isochrone_cells(spark, tt, origins, grid, 8 * 3600, 3, 1800)

@@ -74,8 +74,7 @@ def build_point_tables(
                     rows_s.append(secs)
             yield pd.DataFrame({"point_id": rows_p, "node_id": rows_n, "walk_secs": rows_s})
 
-    parts = max(1, min(point_nodes.count(), spark.sparkContext.defaultParallelism * 2))
-    src = point_nodes.repartition(parts).localCheckpoint()
+    src = point_nodes.repartition(spark.sparkContext.defaultParallelism).localCheckpoint()
     point_walk = src.mapInPandas(walk_kernel, walk_schema).localCheckpoint()
 
     # point_stops derives from point_walk with a join — ONE Dijkstra per

@@ -98,7 +98,7 @@ def raptor_labels(
                 {f.name: pd.Series(dtype="int64") for f in LABEL_SCHEMA.fields}
             )
 
-    parts = max(1, min(origins.count(), spark.sparkContext.defaultParallelism * 2))
+    parts = spark.sparkContext.defaultParallelism
     return origins.repartition(parts).mapInPandas(kernel, LABEL_SCHEMA)
 
 
@@ -247,7 +247,7 @@ def route_pairs(
                 ],
             )
 
-    parts = max(1, min(rows.count(), spark.sparkContext.defaultParallelism * 2))
+    parts = spark.sparkContext.defaultParallelism
     return rows.repartition(parts).mapInPandas(kernel, RESULT_SCHEMA)
 
 
@@ -271,10 +271,11 @@ def travel_time_statistics(
     src/matrix.rs:102-186). Median = midpoint(lo, hi) for even counts —
     Spark's exact ``percentile(col, 0.5)`` matches that rule."""
     res = one_to_many(spark, tt, point_tables, point_tables, departure, max_transfers)
-    total = point_tables["point_nodes"].count()
     if filter_cutoff is not None:
         res = res.filter(F.col("travel_time") <= filter_cutoff)
-    gated = F.col("n_reached") / F.lit(float(total)) < threshold
+    # the point count rides in as a 1-row broadcast: building starts no job
+    total = point_tables["point_nodes"].agg(F.count("*").alias("total"))
+    gated = F.col("n_reached") / F.col("total").cast("double") < threshold
     return (
         res.groupBy("origin_id")
         .agg(
@@ -282,6 +283,7 @@ def travel_time_statistics(
             F.avg("travel_time").alias("mean_tt"),
             F.percentile("travel_time", F.lit(0.5)).alias("median_tt"),
         )
+        .crossJoin(F.broadcast(total))
         .select(
             "origin_id",
             *(F.when(gated, F.lit(None)).otherwise(F.col(c)).alias(c)

@@ -162,7 +162,7 @@ def range_routing(
                 ],
             )
 
-    parts = max(1, min(rows.count(), spark.sparkContext.defaultParallelism * 2))
+    parts = spark.sparkContext.defaultParallelism
     return rows.repartition(parts).mapInPandas(kernel, JOURNEY_SCHEMA)
 
 

@@ -321,7 +321,7 @@ def detailed_journeys(
                                 j.arrival_time + e_secs, -1, -1))
             yield pd.DataFrame(out, columns=[f.name for f in LEG_SCHEMA.fields])
 
-    parts = max(1, min(rows.count(), spark.sparkContext.defaultParallelism * 2))
+    parts = spark.sparkContext.defaultParallelism
     return rows.repartition(parts).mapInPandas(kernel, LEG_SCHEMA)
 
 

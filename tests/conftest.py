@@ -19,6 +19,28 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def jobs_in_group(spark):
+    """``count(fn)``: the Spark jobs ``fn()`` starts, counted under a
+    fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

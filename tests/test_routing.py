@@ -80,6 +80,30 @@ def test_transit_points_match(spark_points, oracle_points):
         assert got == tp.walking_paths, f"point {pid} walking paths"
 
 
+def test_nearest_node_join_is_one_lazy_plan(spark, spark_model, oracle_model, jobs_in_group):
+    """The brute-force fallback is part of the snap plan, not a probe: the
+    call starts no job, and every point, off-network point 100 (beyond
+    the candidate ring's guarantee) included, gets the brute-force 1-NN."""
+    from ferrobus_spark import hexgrid
+    from ferrobus_spark.model.snap import nearest_node_join
+
+    qp = query_points()
+    pts = spark.createDataFrame(qp[["point_id", "lon", "lat"]])
+    nodes = spark_model["street_nodes"]
+    out = []
+    assert jobs_in_group(lambda: out.append(nearest_node_join(pts, nodes, "point_id"))) == 0
+    got = {int(r.point_id): (int(r.node_id), int(r.snap_secs)) for r in out[0].collect()}
+    exp = {
+        int(r.point_id): O.nearest_node(oracle_model.node_pos, r.lon, r.lat)
+        for r in qp.itertuples(index=False)
+    }
+    assert got == exp
+    far = qp.set_index("point_id").loc[100]
+    nlon, nlat = oracle_model.node_pos[exp[100][0]]
+    guarantee = hexgrid.cell_size(8) * (hexgrid.SQRT3 * 3 - 2.0)
+    assert (far.lon - nlon) ** 2 + (far.lat - nlat) ** 2 > guarantee**2
+
+
 def test_one_to_many_matches_oracle(
     spark, timetable, spark_points, oracle_model, oracle_points
 ):

@@ -141,28 +141,13 @@ def test_checkpoint_resume_after_midwrite_crash(spark, tmp_path):
     shutil.rmtree(crash_root)
 
 
-def _jobs_in_group(spark, fn) -> int:
-    """Spark jobs ``fn()`` starts, counted under a fresh job group."""
-    import uuid
-
-    sc, group = spark.sparkContext, f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_write_stage_job_budget_and_lineage(spark, tmp_path):
+def test_write_stage_job_budget_and_lineage(spark, tmp_path, jobs_in_group):
     """write_stage counts rows from the part files' footers: it starts no
     job beyond the write itself, and its lineage is per write task."""
     df = spark.range(0, 100, 1, 4)
     root = str(tmp_path / "ckpt")
-    plain = _jobs_in_group(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
-    staged = _jobs_in_group(spark, lambda: write_stage(spark, root, "s", df, []))
+    plain = jobs_in_group(lambda: df.write.parquet(str(tmp_path / "plain")))
+    staged = jobs_in_group(lambda: write_stage(spark, root, "s", df, []))
     assert staged <= plain
     with open(os.path.join(root, "s", "_LINEAGE.json")) as f:
         assert json.load(f)["partition_rows"] == {"0": 25, "1": 25, "2": 25, "3": 25}
@@ -170,22 +155,22 @@ def test_write_stage_job_budget_and_lineage(spark, tmp_path):
     assert (metrics["rows"], metrics["partitions"]) == (100, 4)
 
 
-def test_read_parquet_infers_once_per_unchanged_path(spark, tmp_path):
+def test_read_parquet_infers_once_per_unchanged_path(spark, tmp_path, jobs_in_group):
     """read_parquet infers a path's schema with a job once; later reads of
     the unchanged files bind it and start none; a rewrite re-infers."""
     path = str(tmp_path / "t")
     spark.range(0, 10, 1, 2).selectExpr("id", "CAST(id AS STRING) AS s").write.parquet(path)
     first: list = []
-    assert _jobs_in_group(spark, lambda: first.append(read_parquet(spark, path))) >= 1
+    assert jobs_in_group(lambda: first.append(read_parquet(spark, path))) >= 1
     again: list = []
-    assert _jobs_in_group(spark, lambda: again.append(read_parquet(spark, path))) == 0
+    assert jobs_in_group(lambda: again.append(read_parquet(spark, path))) == 0
     inferred = spark.read.parquet(path).schema
     assert first[0].schema == again[0].schema == inferred
     assert sorted(again[0].collect()) == sorted(first[0].collect())
 
     spark.range(0, 5, 1, 1).selectExpr("id", "id * 2 AS x").write.mode("overwrite").parquet(path)
     fresh: list = []
-    assert _jobs_in_group(spark, lambda: fresh.append(read_parquet(spark, path))) >= 1
+    assert jobs_in_group(lambda: fresh.append(read_parquet(spark, path))) >= 1
     assert fresh[0].schema == spark.read.parquet(path).schema
     assert fresh[0].columns == ["id", "x"]
 

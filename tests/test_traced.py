@@ -33,7 +33,8 @@ def test_legs_chronology_and_chaining(legs):
         sub = sub.sort_values("leg_idx")
         # chronological, non-negative durations
         assert (sub["arrive"] >= sub["depart"]).all(), pid
-        assert (sub["depart"].to_numpy()[1:] >= sub["arrive"].to_numpy()[:-1] - 0).all() or True
+        # consecutive legs do not overlap in time
+        assert (sub["depart"].to_numpy()[1:] >= sub["arrive"].to_numpy()[:-1]).all(), pid
         # chained: each leg starts where the previous ended (stop chain)
         prev_to = None
         for r in sub.itertuples(index=False):
