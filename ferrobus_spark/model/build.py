@@ -18,7 +18,7 @@ from ferrobus_spark.model.transfers import build_transfers, snap_stops
 from ferrobus_spark.routing.csr import CSRGraph, build_csr
 
 
-@dataclass
+@dataclass(eq=False)  # hashed by identity: per-model memos key on it
 class TransitModel:
     """Namespace of model DataFrames + the broadcast CSR street kernel."""
     tables: dict[str, DataFrame]

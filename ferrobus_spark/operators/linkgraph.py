@@ -8,8 +8,8 @@ Classic Common-Crawl-scale workloads over the ``extract_links`` output:
   n_links): the input to domain-authority / spam analyses. One shuffle
   on the host pair; map-side partial agg applies.
 * :func:`pagerank` — damped PageRank by iterative join/agg dataflow with
-  per-round parquet materialization (``plans/iterative.materialize`` —
-  see that module for why NOT localCheckpoint). Dangling mass is
+  per-round parquet materialization (``plans/iterative.iterate`` — see
+  that module for why NOT localCheckpoint). Dangling mass is
   redistributed uniformly each round (the standard formulation), so
   ranks sum to 1 every iteration. Fixed iteration count → deterministic
   output, verified against a NumPy power-iteration oracle in
@@ -32,8 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ferrobus_spark.operators.skew import heavy_hitters, salted_join
-from ferrobus_spark.plans.checkpoint import footer_rows
-from ferrobus_spark.plans.iterative import cleanup, materialize
+from ferrobus_spark.plans.iterative import iterate, materialize, rows
 
 # a source owning at least this share of the (sampled) edges is salted
 # into this many sub-keys in every round's edges ⋈ contribution join
@@ -103,28 +102,22 @@ def pagerank(
     ORDER (≤1 ulp per round — 9 orders below the nano fixed-point driver
     gate).
     """
-    shared: list[str] = []  # dirs needed for the whole loop (edges/nodes/outdeg)
-    rounds: list[str] = []  # superseded per-round rank dirs
     # edges are scanned EVERY round: materialize once so the upstream plan
     # (e.g. HTML parse → resolve_links) doesn't re-execute n_iter times
-    e = materialize(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")), shared
-    )
+    e = materialize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        shared,
+        .distinct()
     )
-    n = sum(footer_rows(shared[-1]).values())
-    outdeg = materialize(e.groupBy("src").agg(F.count("*").alias("outdeg")), shared)
+    n = rows(nodes)
+    outdeg = materialize(e.groupBy("src").agg(F.count("*").alias("outdeg")))
 
     # one measured pass at setup; the hot-source set is a property of
     # the (static) edge table, so it amortizes over all iterations
     hot = heavy_hitters(e, "src", threshold=HOT_THRESHOLD)
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(n_iter):
+    def step(ranks: DataFrame) -> DataFrame:
         # rank/outdeg joins at NODE scale first, so each round pays one
         # edge-scale shuffle (edges ⋈ per-src contribution), not two
         per_src = (
@@ -151,8 +144,7 @@ def pagerank(
             ranks.join(outdeg.withColumnRenamed("src", "node"), "node", "left_anti")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass"))
         )
-        prev_rounds, rounds = rounds, []
-        ranks = materialize(
+        return (
             nodes.join(contribs, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -162,13 +154,8 @@ def pagerank(
                     + (F.lit(damping) * F.col("dmass")) / F.lit(float(n))
                     + F.lit(damping) * F.coalesce(F.col("in_mass"), F.lit(0.0))
                 ).alias("rank"),
-            ),
-            rounds,
+            )
         )
-        # the write above fully consumed the previous round's parquet —
-        # delete it now so disk stays O(1) across iterations
-        cleanup(prev_rounds)
-    cleanup(shared)
-    # the final round's directory stays: it backs the returned DataFrame
-    # (and doubles as the plans/checkpoint.py resume artifact)
-    return ranks
+
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    return iterate(ranks, step, n_iter, pinned=(e, nodes, outdeg))

@@ -49,7 +49,7 @@ def footer_rows(path: str) -> dict[int, int]:
     Spark names each output file ``part-NNNNN-...`` with NNNNN the
     partition of the task that wrote it; a task that rolled over into
     several files has their counts summed. Local paths only, the same
-    assumption as ``iterative.cleanup``.
+    assumption as ``plans/iterative``'s round deletion.
     """
     rows: dict[int, int] = {}
     for f in os.listdir(path):

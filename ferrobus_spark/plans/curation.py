@@ -22,6 +22,8 @@ here collects to the driver.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,7 +36,7 @@ from ferrobus_spark.functions.urls import canonical_url_col, url_host_col
 from ferrobus_spark.operators.dedup import minhash_lsh_pairs, minhash_signatures
 from ferrobus_spark.operators.html_text import parse_html
 from ferrobus_spark.plans.checkpoint import run_pipeline
-from ferrobus_spark.plans.iterative import connected_components
+from ferrobus_spark.plans.iterative import connected_components, iterate
 
 
 def curation_stages(
@@ -270,12 +272,13 @@ def assign_doc_ids(
     )
     from pyspark.sql import Window
 
-    out = df.withColumn("doc_id", h(list(key_cols), 0))
     res = (
         None if reserved_ids is None
         else reserved_ids.select(F.col(reserved_ids.columns[0]).alias("doc_id")).distinct()
     )
-    for r in range(1, max_rounds + 1):
+    salts = itertools.count(1)
+
+    def step(out: DataFrame) -> DataFrame | None:
         bad = (
             out.groupBy("doc_id")
             .agg(F.countDistinct(*key_cols).alias("__nk"))
@@ -286,7 +289,15 @@ def assign_doc_ids(
             bad = bad.unionByName(out.select("doc_id").join(res, "doc_id", "semi")).distinct()
         probe = bad.limit(_MAX_COLLISION_IDS_DRIVER + 1).collect()
         if not probe:
-            return out
+            return None
+        r = next(salts)
+        if r > max_rounds:
+            raise RuntimeError(
+                f"assign_doc_ids: {bad.count()} doc ids still collide after "
+                f"{max_rounds} rehash rounds — refusing to fuse distinct docs. "
+                "This is statistically impossible with real xxhash64; check the "
+                "_hash test seam or raise max_rounds."
+            )
         if len(probe) <= _MAX_COLLISION_IDS_DRIVER:
             bad_keys = F.broadcast(out.sparkSession.createDataFrame(probe, bad.schema))
         else:  # adversarial: keep the collision set distributed
@@ -297,37 +308,20 @@ def assign_doc_ids(
         hot = out.join(bad_keys, "doc_id", "semi").withColumn(
             "__kmin", F.min(kstruct).over(wg)
         )
+        keep = kstruct == F.col("__kmin")
         if res is not None:
             # a reserved id has NO in-frame keeper — every holder rehashes
-            hot = hot.join(
-                res.withColumn("__resv", F.lit(True)), "doc_id", "left"
-            )
-            keep_cond = (kstruct == F.col("__kmin")) & F.col("__resv").isNull()
-            hot = hot.withColumn(
-                "doc_id",
-                F.when(keep_cond, F.col("doc_id")).otherwise(h(list(key_cols), r)),
-            ).drop("__kmin", "__resv")
-        else:
-            hot = hot.withColumn(
-                "doc_id",
-                F.when(kstruct == F.col("__kmin"), F.col("doc_id"))
-                .otherwise(h(list(key_cols), r)),
-            ).drop("__kmin")
-        # bound recompute for the next probe: the fix path is rare and the
-        # frame is re-scanned next round, so pin it
-        out = cold.unionByName(hot.select(*cold.columns)).localCheckpoint()
-    leftover = (
-        out.groupBy("doc_id").agg(F.countDistinct(*key_cols).alias("__nk"))
-        .filter(F.col("__nk") > 1).count()
-    )
-    if leftover:
-        raise RuntimeError(
-            f"assign_doc_ids: {leftover} doc ids still collide after "
-            f"{max_rounds} rehash rounds — refusing to fuse distinct docs. "
-            "This is statistically impossible with real xxhash64; check the "
-            "_hash test seam or raise max_rounds."
-        )
-    return out
+            hot = hot.join(res.withColumn("__resv", F.lit(True)), "doc_id", "left")
+            keep = keep & F.col("__resv").isNull()
+        hot = hot.withColumn(
+            "doc_id", F.when(keep, F.col("doc_id")).otherwise(h(list(key_cols), r))
+        ).drop("__kmin", "__resv")
+        # the fix path is rare and the next probe re-scans the frame, so
+        # the round is materialized
+        return cold.unionByName(hot.select(*cold.columns))
+
+    # one probe past the last rehash round: it returns or raises
+    return iterate(df.withColumn("doc_id", h(list(key_cols), 0)), step, max_rounds + 1)
 
 
 def warc_pages_fn(warc_dir: str, archive_fn=None):

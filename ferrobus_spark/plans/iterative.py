@@ -1,8 +1,14 @@
 """Driver-side iterative DataFrame loops (fixpoint algorithms).
 
-Spark has no native iteration; these helpers run driver loops with
-per-round materialization to truncate lineage (SURVEY.md §4 — the only
+Spark has no native iteration, so a loop here is a driver loop whose
+rounds are materialized to truncate lineage (SURVEY.md §4 — the only
 "custom" execution machinery the engine needs; no Catalyst rules).
+:func:`iterate` is that loop for PageRank (``operators/linkgraph.py``),
+:func:`connected_components` and ``curation.assign_doc_ids``, and this
+module is the only one that creates or deletes round directories: a
+round is deleted once the next one is written, the caller's
+loop-invariant frames when the loop ends, and the last round, which
+backs the returned DataFrame, at interpreter exit.
 
 Materialization is a parquet round-trip, NOT ``localCheckpoint``:
 ``localCheckpoint`` preserves the *estimated* statistics of the plan it
@@ -11,8 +17,8 @@ multiplicatively per round (three joins → cubed per iteration) until
 Catalyst is multiplying million-digit BigIntegers — measured here as
 exponentially growing per-iteration wall time and an eventual driver
 OOM. A parquet (production: Iceberg) round-trip resets stats to real
-file sizes, keeps broadcast decisions sane, and doubles as the
-resume-from-checkpoint contract of ``plans/checkpoint.py``.
+file sizes and keeps broadcast decisions sane; its footers give each
+round's row count without a job (:func:`rows`).
 
 Connected components is the two-phase **large-star / small-star**
 alternation (Kiveris et al., "Connected Components in MapReduce and
@@ -26,11 +32,13 @@ input.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
 import uuid
 import warnings
+from collections.abc import Callable, Iterable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
@@ -38,56 +46,82 @@ from pyspark.sql import functions as F
 
 from ferrobus_spark.plans.checkpoint import footer_rows
 
+#: frame returned by materialize → its round directory, until deleted
+_ROUNDS: dict[DataFrame, str] = {}
 
-def materialize(df: DataFrame, registry: list[str] | None = None) -> DataFrame:
+
+def materialize(df: DataFrame) -> DataFrame:
     """Parquet round-trip: truncate lineage AND reset stats to real sizes.
 
     Directory: ``spark.ferrobus.ckpt.dir`` conf if set (shared storage on
-    a cluster), else the local temp dir (fine for local[*]).
-
-    ``registry``: optional list the new directory path is appended to, so
-    iterative callers can delete superseded rounds with :func:`cleanup`
-    instead of accumulating one directory per iteration on disk; count
-    the new one with ``checkpoint.footer_rows(registry[-1])``. The
-    re-read takes the written schema: no inference job.
+    a cluster), else the local temp dir (fine for local[*]). The re-read
+    takes the written schema: no inference job.
     """
     spark = df.sparkSession
-    try:
-        root = spark.conf.get("spark.ferrobus.ckpt.dir")
-    except Exception:
-        root = None
-    root = root or os.path.join(tempfile.gettempdir(), "ferrobus_ckpt")
+    root = spark.conf.get("spark.ferrobus.ckpt.dir", None) or os.path.join(
+        tempfile.gettempdir(), "ferrobus_ckpt"
+    )
     path = os.path.join(root, f"iter_{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(path)
-    if registry is not None:
-        registry.append(path)
-    return spark.read.schema(df.schema).parquet(path)
+    out = spark.read.schema(df.schema).parquet(path)
+    _ROUNDS[out] = path
+    return out
 
 
-def cleanup(paths: list[str]) -> None:
-    """Delete materialized round directories (safe on missing paths).
+def rows(df: DataFrame) -> int:
+    """Row count of a frame :func:`materialize` returned, from its parquet
+    footers: no job."""
+    return sum(footer_rows(_ROUNDS[df]).values())
 
-    Only delete a round once a LATER materialize() fully consumed it —
-    a DataFrame returned by materialize() lazily re-reads its directory.
 
-    Warns instead of silently no-opping when a path can't be removed —
-    e.g. ``spark.ferrobus.ckpt.dir`` pointing at non-driver-visible
-    storage (hdfs://, s3://) — so the O(1)-disk guarantee failing is
-    visible; cluster deployments should route such dirs through the
-    Hadoop FileSystem API instead.
-    """
-    for p in paths:
-        if os.path.exists(p):
-            try:
-                shutil.rmtree(p)
-            except OSError as exc:  # pragma: no cover - depends on FS
-                warnings.warn(f"cleanup: could not remove round dir {p}: {exc}")
-        elif "://" in p:
-            warnings.warn(
-                f"cleanup: {p} is not a local path; round dirs on shared "
-                "storage accumulate — delete via the Hadoop FileSystem API"
-            )
-    paths.clear()
+def _drop(df: DataFrame) -> None:
+    """Delete ``df``'s round directory (no-op for any other frame). Warns
+    when it can't: round dirs on non-driver-visible storage (hdfs://,
+    s3://) need the Hadoop FileSystem API."""
+    path = _ROUNDS.pop(df, None)
+    if path is not None and (os.path.exists(path) or "://" in path):
+        try:
+            shutil.rmtree(path)
+        except OSError as exc:
+            warnings.warn(f"could not remove round dir {path}: {exc}")
+
+
+@atexit.register
+def _drop_all() -> None:
+    """Exit hook: delete the rounds still backing returned frames."""
+    for df in list(_ROUNDS):
+        _drop(df)
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame | None],
+    max_rounds: int,
+    changed: Callable[[DataFrame, DataFrame], bool] | None = None,
+    pinned: Iterable[DataFrame] = (),
+) -> DataFrame:
+    """``state = materialize(step(state))`` for at most ``max_rounds``
+    rounds → the last state. Stops early when ``step`` returns ``None``
+    (the state is returned as is) or ``changed(new, old)`` is false.
+    ``pinned``: the caller's materialized loop-invariant frames."""
+    try:
+        for _ in range(max_rounds):
+            nxt = step(state)
+            if nxt is None:
+                break
+            nxt = materialize(nxt)
+            more = changed is None or changed(nxt, state)
+            _drop(state)  # the write and the check were its last reads
+            state = nxt
+            if not more:
+                break
+    except BaseException:
+        _drop(state)
+        raise
+    finally:
+        for df in pinned:
+            _drop(df)
+    return state
 
 
 #: driver union-find gate: edge sets at or below this size are labeled
@@ -140,36 +174,25 @@ def connected_components(
     pyarrow and labeled by union-find — identical output, none of the
     per-round job overhead. Edge counts come from the parquet footers.
     """
-    e_dirs: list[str] = []
-    E = (
+    E = materialize(
         edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    E = materialize(E, e_dirs)
-    n_edges = sum(footer_rows(e_dirs[-1]).values())
+    n_edges = rows(E)
     if n_edges == 0:  # only self-loops: no node is in any edge
-        cleanup(e_dirs)
+        _drop(E)
         return edges.sparkSession.createDataFrame([], "node BIGINT, component BIGINT")
     if n_edges <= _MAX_DRIVER_CC_EDGES:
         import pandas as pd
 
-        ep = pq.read_table(e_dirs[-1], columns=["u", "v"])
+        ep = pq.read_table(_ROUNDS[E], columns=["u", "v"])
+        _drop(E)
         labels = _driver_union_find(ep["u"].to_pylist(), ep["v"].to_pylist())
-        out = pd.DataFrame(
-            {"node": list(labels.keys()), "component": list(labels.values())}
-        )
-        cleanup(e_dirs)
-        return edges.sparkSession.createDataFrame(
-            out, schema="node BIGINT, component BIGINT"
-        )
-    all_nodes = materialize(
-        E.select(F.col("u").alias("node"))
-        .union(E.select(F.col("v").alias("node")))
-        .distinct()
-    )
+        out = pd.DataFrame(list(labels.items()), columns=["node", "component"])
+        return edges.sparkSession.createDataFrame(out, "node BIGINT, component BIGINT")
 
-    for _ in range(max_iter):
+    def step(E: DataFrame) -> DataFrame:
         # ---- large-star: connect every strictly-larger neighbor of u to
         # the minimum of u's closed neighborhood --------------------------
         nbr = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -187,7 +210,7 @@ def connected_components(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         mins2 = dir_e.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        return (
             dir_e.join(mins2, "u")
             .select(F.col("v").alias("n"), "m")
             .union(mins2.select(F.col("u").alias("n"), "m"))
@@ -195,29 +218,22 @@ def connected_components(
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
             .distinct()
         )
-        prev_dirs, e_dirs = e_dirs, []
-        new_E = materialize(small, e_dirs)
+
+    def changed(new: DataFrame, old: DataFrame) -> bool:
         # both edge sets are .distinct() outputs, so set equality is
         # |new| == |old| AND new ⊆ old — a parquet-footer count plus one
         # anti-join probe, replacing two exceptAll passes (each a full
         # window-dedup shuffle) per round
-        n_new = sum(footer_rows(e_dirs[-1]).values())
-        changed = n_new != n_edges or (
-            new_E.join(E, ["u", "v"], "left_anti").limit(1).count() > 0
+        return rows(new) != rows(old) or (
+            new.join(old, ["u", "v"], "left_anti").limit(1).count() > 0
         )
-        n_edges = n_new
-        E = new_E
-        cleanup(prev_dirs)  # the comparison above was the last read of old E
-        if not changed:
-            break
 
-    # fixpoint E is a star forest: (child, root) with root = component min
-    labels = all_nodes.join(
-        E.select(F.col("u").alias("node"), F.col("v").alias("component")),
-        "node",
-        "left",
-    ).select("node", F.coalesce("component", F.col("node")).alias("component"))
-    return labels
+    E = iterate(E, step, max_iter, changed)
+    # fixpoint E is a star forest holding every node: (child, root) with
+    # root = component min, so the roots are its distinct v
+    return E.select(F.col("u").alias("node"), F.col("v").alias("component")).union(
+        E.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
+    )
 
 
 def largest_component(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

@@ -26,6 +26,8 @@ Golden parity: the reference's own traced unit scenarios
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -325,6 +327,36 @@ def detailed_journeys(
     return rows.repartition(parts).mapInPandas(kernel, LEG_SCHEMA)
 
 
+@functools.cache
+def _model_lookups(model) -> tuple:
+    """The model dictionaries :func:`legs_to_geojson_model` broadcasts,
+    collected once per model (four Spark jobs): the model is fixed, so a
+    later GeoJSON build starts none."""
+    patterns = {}
+    route_ids = {}
+    for r in model["routes_with_pattern"].select(
+        "route_idx", "route_id", "pattern"
+    ).collect():
+        patterns[int(r.route_idx)] = [int(s) for s in r.pattern]
+        route_ids[int(r.route_idx)] = str(r.route_id)
+    stops = {}
+    stop_names = {}
+    for r in model["stops_dim"].select("stop_idx", "stop_id", "lon", "lat").collect():
+        stops[int(r.stop_idx)] = (float(r.lon), float(r.lat))
+        # the reference's transit_stop_name returns the GTFS stop_id
+        # string (model/transit/data.rs:59-66), not stops.txt stop_name
+        stop_names[int(r.stop_idx)] = str(r.stop_id)
+    trip_ids = {
+        (int(r.route_idx), int(r.trip_pos)): str(r.trip_id)
+        for r in model["trips_dim"].select("route_idx", "trip_pos", "trip_id").collect()
+    }
+    s2n = {
+        int(r.stop_idx): int(r.node_id)
+        for r in model["stop_nodes"].select("stop_idx", "node_id").collect()
+    }
+    return patterns, route_ids, stops, stop_names, trip_ids, s2n
+
+
 def legs_to_geojson_model(
     legs: DataFrame,
     model,
@@ -350,28 +382,7 @@ def legs_to_geojson_model(
     import json as _json
 
     spark = legs.sparkSession
-    patterns = {}
-    route_ids = {}
-    for r in model["routes_with_pattern"].select(
-        "route_idx", "route_id", "pattern"
-    ).collect():
-        patterns[int(r.route_idx)] = [int(s) for s in r.pattern]
-        route_ids[int(r.route_idx)] = str(r.route_id)
-    stops = {}
-    stop_names = {}
-    for r in model["stops_dim"].select("stop_idx", "stop_id", "lon", "lat").collect():
-        stops[int(r.stop_idx)] = (float(r.lon), float(r.lat))
-        # the reference's transit_stop_name returns the GTFS stop_id
-        # string (model/transit/data.rs:59-66), not stops.txt stop_name
-        stop_names[int(r.stop_idx)] = str(r.stop_id)
-    trip_ids = {
-        (int(r.route_idx), int(r.trip_pos)): str(r.trip_id)
-        for r in model["trips_dim"].select("route_idx", "trip_pos", "trip_id").collect()
-    }
-    s2n = {
-        int(r.stop_idx): int(r.node_id)
-        for r in model["stop_nodes"].select("stop_idx", "node_id").collect()
-    }
+    patterns, route_ids, stops, stop_names, trip_ids, s2n = _model_lookups(model)
     bc = spark.sparkContext.broadcast(
         (patterns, stops, s2n, model.csr, model.max_transfer_time,
          stop_names, route_ids, trip_ids)

@@ -14,7 +14,6 @@ from ferrobus_spark import registry
 BUDGET = {
     "host_pagerank": (83, "PageRank rounds materialize eagerly (ROADMAP item 4)"),
     "curation_curated": (18, "dedup-input pin plus connected components' edge materialize"),
-    "transit_journey_geojson": (4, "legs_to_geojson_model collects four model dictionaries"),
     "knn_embeddings_ivf": (1, "IVF quantizer training"),
     "knn_ivf_planted": (1, "IVF quantizer training"),
     "knn_embeddings_bruteforce": (1, "the corpus-size gate's corpus.count()"),

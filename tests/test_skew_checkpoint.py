@@ -13,7 +13,8 @@ from ferrobus_spark.plans.checkpoint import (
     run_pipeline,
     write_stage,
 )
-from ferrobus_spark.plans.iterative import cleanup, connected_components, materialize
+import ferrobus_spark.plans.iterative as it
+from ferrobus_spark.plans.iterative import connected_components, materialize
 from ferrobus_spark.registry import CELL_REF_SQL
 from ferrobus_spark.sources.pages import pages_table
 
@@ -188,61 +189,116 @@ def test_reread_schema_equals_inferred(spark, tmp_path):
         F.array("id", F.lit(7).cast("long")).alias("arr"),
         F.struct("id", F.col("id").cast("string").alias("t")).alias("st"),
     )
-    dirs: list[str] = []
-    got = materialize(df, dirs)
-    assert got.schema == spark.read.parquet(dirs[-1]).schema
-    cleanup(dirs)
+    got = materialize(df)
+    assert got.schema == spark.read.parquet(it._ROUNDS[got]).schema
+    it._drop(got)
     root = str(tmp_path / "ckpt")
     got = write_stage(spark, root, "s", df, [])
     assert got.schema == spark.read.parquet(os.path.join(root, "s", "data")).schema
     assert sorted(got.collect()) == sorted(df.collect())
 
 
-def test_connected_components_self_loops_only(spark, tmp_path):
+@pytest.fixture
+def ckpt(spark, tmp_path):
+    """``spark.ferrobus.ckpt.dir`` pointed at a fresh directory."""
+    path = str(tmp_path / "ckpt")
+    prev = spark.conf.get("spark.ferrobus.ckpt.dir", None)
+    spark.conf.set("spark.ferrobus.ckpt.dir", path)
+    yield path
+    if prev is None:
+        spark.conf.unset("spark.ferrobus.ckpt.dir")
+    else:
+        spark.conf.set("spark.ferrobus.ckpt.dir", prev)
+
+
+def test_connected_components_self_loops_only(spark, ckpt):
     """A graph of only self-loops has no component and leaves no round
     directory behind."""
-    ckpt = str(tmp_path / "ckpt")
-    prev = spark.conf.get("spark.ferrobus.ckpt.dir", None)
-    spark.conf.set("spark.ferrobus.ckpt.dir", ckpt)
-    try:
-        cc = connected_components(
-            spark.createDataFrame([(1, 1), (2, 2)], "src BIGINT, dst BIGINT")
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.ferrobus.ckpt.dir")
-        else:
-            spark.conf.set("spark.ferrobus.ckpt.dir", prev)
+    cc = connected_components(
+        spark.createDataFrame([(1, 1), (2, 2)], "src BIGINT, dst BIGINT")
+    )
     assert cc.count() == 0
     assert cc.schema.simpleString() == "struct<node:bigint,component:bigint>"
     assert os.listdir(ckpt) == []
+
+
+def _random_graphs(n_graphs: int = 200, seed: int = 7) -> list[tuple[int, int]]:
+    """Edges of ``n_graphs`` seeded random graphs on disjoint id ranges:
+    sparse and dense, with self-loops, duplicates and both directions."""
+    import random
+
+    rng = random.Random(seed)
+    edges = []
+    for g in range(n_graphs):
+        base, n = 1000 * g, rng.randint(1, 40)
+        for _ in range(rng.randint(1, 2 * n)):
+            edges.append((base + rng.randrange(n), base + rng.randrange(n)))
+    return edges
 
 
 def test_connected_components_driver_equals_distributed(spark, monkeypatch):
     """The round-8 driver union-find gate must label identically to the
     distributed large-star/small-star loop (component = min node id),
     on a graph with chains, a cycle, isolated pairs, and singletons-in-
-    edges."""
-    import ferrobus_spark.plans.iterative as it
-
-    edges = [
+    edges, and on 200 random graphs in one edge frame. Equal labels also
+    show the distributed loop's fixpoint edges hold every node."""
+    handmade = [
         (1, 2), (2, 3), (3, 4),          # chain -> comp 1
         (10, 11), (11, 10), (11, 12),    # dup + cycle -> comp 10
         (20, 21),                        # pair -> comp 20
         (30, 31), (31, 32), (32, 30),    # triangle -> comp 30
         (40, 5), (5, 1),                 # bridges into comp 1
     ]
-    df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
+    frames = [
+        spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
+        for edges in (handmade, _random_graphs())
+    ]
 
     def run():
-        return sorted(
-            map(tuple, it.connected_components(df).collect())
-        )
+        return [
+            sorted(map(tuple, it.connected_components(df).collect()))
+            for df in frames
+        ]
 
     fast = run()
     monkeypatch.setattr(it, "_MAX_DRIVER_CC_EDGES", 0)
     slow = run()
     assert fast == slow
-    comp = dict(fast)
+    comp = dict(fast[0])
     assert comp[4] == 1 and comp[40] == 1 and comp[12] == 10
     assert comp[21] == 20 and comp[32] == 30
+
+
+def test_loop_rounds_cleaned_up(spark, ckpt, monkeypatch):
+    """Each loop leaves exactly the one round directory that backs its
+    returned frame, and the exit hook deletes those."""
+    from ferrobus_spark.operators.linkgraph import pagerank
+    from ferrobus_spark.plans.curation import assign_doc_ids
+
+    monkeypatch.setattr(it, "_ROUNDS", {})  # the hook sees this test's rounds only
+    monkeypatch.setattr(it, "_MAX_DRIVER_CC_EDGES", 0)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (7, 1)], "src BIGINT, dst BIGINT"
+    )
+    pages = spark.createDataFrame(
+        [(f"https://h{i}.example/", f"2024-01-0{i}") for i in range(1, 9)],
+        "url string, warc_ts string",
+    )
+    out = []
+    for build in (
+        lambda: pagerank(edges, n_iter=3),
+        lambda: connected_components(edges),
+        # every key hashes to one of 2 primary ids: a rehash round runs
+        lambda: assign_doc_ids(
+            pages,
+            _hash=lambda cols, salt: (
+                F.pmod(F.xxhash64(*cols), F.lit(2)) if salt == 0
+                else F.xxhash64(*cols, F.lit(salt))
+            ),
+        ),
+    ):
+        out.append(build())
+        assert len(os.listdir(ckpt)) == len(out)
+    assert [df.count() for df in out] == [7, 7, 8]
+    it._drop_all()
+    assert os.listdir(ckpt) == []
